@@ -108,6 +108,22 @@ def salted_postings(post: DataFrame, hot: DataFrame, conf: IndexConf) -> DataFra
     ).drop("n_salts")
 
 
+def _int32_offsets(off: np.ndarray) -> bytes:
+    """The int32 offsets buffer of an Arrow binary column over one varint
+    stream. A partition batch is bounded (one Arrow batch + one
+    <= salt_df_threshold group), normally far under 2 GiB of stream — but
+    past 2**31 bytes the int32 cast would wrap and silently corrupt every
+    block after the wrap, so refuse instead."""
+    if off.size and int(off[-1]) >= 2**31:
+        raise ValueError(
+            f"varint stream of {int(off[-1])} bytes overflows the int32 "
+            "offsets of an Arrow binary column (limit 2**31 - 1); lower "
+            "IndexConf.salt_df_threshold (it caps one (term, salt) list) or "
+            "spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
+    return off.astype(np.int32).tobytes()
+
+
 def _pack_blocks(
     complete,
     gstarts: np.ndarray,
@@ -161,14 +177,11 @@ def _pack_blocks(
     def _bin(stream: bytes, off: np.ndarray) -> pa.Array:
         # binary column = (offsets at block boundaries, the shared stream):
         # blocks' byte ranges are adjacent, so the whole column is two
-        # buffers and zero copies. Offsets are int32 — a partition batch
-        # is bounded (one Arrow batch + one <= salt_df_threshold group),
-        # far under 2 GiB of varint stream.
+        # buffers and zero copies
         return pa.Array.from_buffers(
             pa.binary(),
             bstarts.size,
-            [None, pa.py_buffer(off[bnd].astype(np.int32).tobytes()),
-             pa.py_buffer(stream)],
+            [None, pa.py_buffer(_int32_offsets(off[bnd])), pa.py_buffer(stream)],
         )
 
     arrs = [

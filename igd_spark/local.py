@@ -237,30 +237,16 @@ class LocalSearcher:
         blocks = self._read_blocks(missing, shards)
         grouped: dict[int, tuple] = {}
         if len(blocks):
-            # ONE varint pass per column over the whole read, not one
-            # python decode call per block row (same segmented decode as
-            # the cluster kernel, search.py _decode_rows_segmented): every
-            # block's first doc varint is absolute, so blocks decode
-            # independently via a segmented cumsum — measured ~15x on a
-            # 9M-posting cold read (7.6 s -> 0.5 s). Segment offsets come
-            # from the zero-padded cumsum at each block START — exact even
-            # for zero-posting rows (the writer never emits one, but a
-            # LEADING zero-n row would make an ends[:-1]-1 index wrap to
-            # c[-1] and silently corrupt every doc id)
+            # ONE segmented varint pass per column over the whole read, not
+            # one python decode call per block row (codec.decode_blocks,
+            # shared with the cluster kernel) — measured ~15x on a
+            # 9M-posting cold read (7.6 s -> 0.5 s)
             n_arr = blocks["n"].to_numpy(dtype=np.int64)
-            dbuf = b"".join(bytes(x) for x in blocks["doc_ids"])
-            vals = codec.varint_decode(dbuf).astype(np.int64)
+            d_all, tf_all, dl_all = codec.decode_blocks(
+                n_arr, blocks["doc_ids"], blocks["tfs"], blocks["dls"]
+            )
             ends = np.cumsum(n_arr)
-            c = np.cumsum(vals)
-            cpad = np.concatenate(([0], c))
-            d_all = c - np.repeat(cpad[ends - n_arr], n_arr)
-            tf_all = codec.varint_decode(
-                b"".join(bytes(x) for x in blocks["tfs"])
-            ).astype(np.float64)
-            dl_all = codec.varint_decode(
-                b"".join(bytes(x) for x in blocks["dls"])
-            ).astype(np.float64)
-            starts = np.concatenate(([0], ends[:-1]))
+            starts = ends - n_arr
             tids_arr = blocks["term_id"].to_numpy(dtype=np.int64)
             if self._deleted is not None and self._deleted.size:
                 from igd_spark.build import _live_mask

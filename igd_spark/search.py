@@ -20,6 +20,7 @@ Two scorers, required to be rank-identical:
 from __future__ import annotations
 
 import time
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -133,6 +134,86 @@ def exact_bm25_topk(
 # --------------------------------------------------------------------------
 
 
+class _Bucket(NamedTuple):
+    """One cogrouped bucket's block rows as flat numpy columns, lexsorted by
+    (term_id, salt, block_id). List ``li`` — one (term, salt) posting list —
+    is the row range ``lo[li]:hi[li]``; the per-list fields are python
+    lists so the per-query loop indexes them without numpy scalars."""
+
+    n: np.ndarray  # per row: postings in the block
+    first: np.ndarray  # per row: first_doc
+    last: np.ndarray  # per row: last_doc
+    doc_ids: np.ndarray  # per row: varint buffers (object arrays)
+    tfs: np.ndarray
+    dls: np.ndarray
+    lo: list  # per list: first row
+    hi: list  # per list: one past the last row
+    tid: list
+    salt: list
+    npost: list  # postings in the list (bootstrap cost)
+    ub: list  # max block score bound (list σ before idf)
+    key: list  # task-cache key
+
+
+def _bucket(pdf: pd.DataFrame, k1: float, b: float, avgdl: float) -> _Bucket:
+    """Lexsort the bucket's rows once, cut them into lists with one
+    change-point pass over (term_id, salt), and compute every list's
+    bound, posting count and cache key with vectorized reduceat.
+
+    np.lexsort is stable, so rows tied on block_id (append batches restart
+    block ids) keep their arrival order within a list.
+
+    Block bounds: blocks whose stored ub was computed under the CURRENT
+    avgdl use it (tight); blocks built before an append (different avgdl)
+    get a safe bound from (max_tf, min_dl) — f(tf, dl) is increasing in tf
+    and decreasing in dl."""
+    tid = pdf["term_id"].to_numpy(dtype=np.int64)
+    salt = pdf["salt"].to_numpy(dtype=np.int64)
+    order = np.lexsort((pdf["block_id"].to_numpy(dtype=np.int64), salt, tid))
+    tid, salt = tid[order], salt[order]
+    cut = np.ones(tid.size, dtype=bool)
+    cut[1:] = (tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])
+    lo = np.flatnonzero(cut)
+    hi = np.append(lo[1:], tid.size)
+
+    def col(name, dtype=None):
+        return pdf[name].to_numpy(dtype=dtype)[order]
+
+    n = col("n", np.int64)
+    first = col("first_doc", np.int64)
+    ub = col("ub_tf_dl", np.float64)
+    stored_ok = np.isclose(col("b_avgdl", np.float64), avgdl, rtol=1e-12)
+    if not stored_ok.all():
+        mt = col("max_tf", np.float64)
+        md = col("min_dl", np.float64)
+        loose = mt * (k1 + 1.0) / (mt + k1 * (1.0 - b + b * md / avgdl))
+        ub = np.where(stored_ok, ub, loose)
+    npost = np.add.reduceat(n, lo).tolist()
+    lo_l, hi_l = lo.tolist(), hi.tolist()
+    tid_l, salt_l = tid[lo].tolist(), salt[lo].tolist()
+    head_first, tail_first = first[lo].tolist(), first[hi - 1].tolist()
+    return _Bucket(
+        n=n,
+        first=first,
+        last=col("last_doc", np.int64),
+        doc_ids=col("doc_ids"),
+        tfs=col("tfs"),
+        dls=col("dls"),
+        lo=lo_l,
+        hi=hi_l,
+        tid=tid_l,
+        salt=salt_l,
+        npost=npost,
+        ub=np.maximum.reduceat(ub, lo).tolist(),
+        key=[
+            (t, s, p, f0, f1, h - l)
+            for t, s, p, f0, f1, l, h in zip(
+                tid_l, salt_l, npost, head_first, tail_first, lo_l, hi_l
+            )
+        ],
+    )
+
+
 def _maxscore_kernel(
     k: int,
     min_tf: int,
@@ -153,20 +234,28 @@ def _maxscore_kernel(
     decode work is shared through a task-local list cache (the reference's
     block cache, src/igd_search.c:469-475, generalized).
 
+    Columnar layout (the reference's flat tile records,
+    src/igd_search.c:454-534): the bucket's columns become numpy arrays
+    once and are lexsorted by (term_id, salt, block_id); each (term, salt)
+    list is then a ROW RANGE of those arrays (_Bucket), with its score
+    bound, posting count and cache key computed for the whole bucket by
+    reduceat. The per-query loop touches no DataFrame, and the bucket's
+    top-k leaves as ONE frame built from concatenated arrays.
+
     Safe (rank-identical) pruning: a doc is eliminated only when its score
     upper bound is provably below the k-th best final score, so exact ties
     (broken by doc_id asc) survive.
 
     Decode strategy: varint framing is self-delimiting, so an entire
     (term, salt) list decodes in ONE numpy pass over the concatenation of
-    its block buffers — per-block delta baselines are restored with a
-    segmented cumsum. Block-level IO pruning happens a level up (shard
-    partitions + term_id row-group min/max at the scan); once block rows
-    reach the kernel, full-list decode + one searchsorted beats per-block
-    lazy decode by ~10x in CPU.
+    its block buffers (codec.decode_blocks, segmented cumsum). Block-level
+    IO pruning happens a level up (shard partitions + term_id row-group
+    min/max at the scan); once block rows reach the kernel, full-list
+    decode + one searchsorted beats per-block lazy decode by ~10x in CPU.
     """
 
-    _cache: dict = {}
+    _cache: dict = {}  # list key → (d, w) of the FULL list
+    _bcache: dict = {}  # list key → {block idx in list → (d, w)} — per-BLOCK cache
     _cache_postings = [0]
     _CACHE_MAX_POSTINGS = 4_000_000  # ~64 MB of decoded arrays per task
     _stats = stats if stats is not None else {}
@@ -174,32 +263,18 @@ def _maxscore_kernel(
     _stats.setdefault("blocks_skipped", 0)
     _stats.setdefault("blocks_skipped_essential", 0)
 
-    def _decode_rows_segmented(
-        g: pd.DataFrame,
+    def _decode_rows(
+        bk: _Bucket, rows
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Uncached decode of a set of block rows (any subset of a list —
-        every block's first varint is an absolute doc id, so blocks decode
-        independently via the segmented cumsum). Returns (d, w, lens) where
-        lens[i] = surviving postings of the i-th input row (post-min_tf),
+        """Uncached decode of block rows ``rows`` (a slice or index array;
+        any subset of a list — every block's first varint is an absolute
+        doc id, so blocks decode independently). Returns (d, w, lens)
+        where lens[i] = surviving postings of the i-th row (post-min_tf),
         so callers can split the concatenation back into per-block arrays."""
-        n_arr = g["n"].to_numpy(dtype=np.int64)
-        dbuf = b"".join(bytes(x) for x in g["doc_ids"])
-        tbuf = b"".join(bytes(x) for x in g["tfs"])
-        lbuf = b"".join(bytes(x) for x in g["dls"])
-        vals = codec.varint_decode(dbuf).astype(np.int64)
-        ends = np.cumsum(n_arr)
-        starts = ends - n_arr
-        # segmented cumsum: vals[start] is the absolute first doc of each
-        # block, the rest are gaps → cumsum minus the offset at each block
-        # start restores absolute ids per block. The offset of segment i is
-        # cpad[starts[i]] (cumsum zero-padded on the left) — exact even for
-        # zero-n rows, including a LEADING one, where an ends[:-1]-1 index
-        # would wrap to c[-1] and corrupt every doc id after it
-        c = np.cumsum(vals)
-        cpad = np.concatenate(([0], c))
-        d = c - np.repeat(cpad[starts], n_arr)
-        tf = codec.varint_decode(tbuf).astype(np.float64)
-        dl = codec.varint_decode(lbuf).astype(np.float64)
+        n_arr = bk.n[rows]
+        d, tf, dl = codec.decode_blocks(
+            n_arr, bk.doc_ids[rows], bk.tfs[rows], bk.dls[rows]
+        )
         m = tf >= min_tf if min_tf > 0 else None
         if deleted_bc is not None:
             # live-docs filter (Lucene tombstone semantics): deleted docs
@@ -215,42 +290,49 @@ def _maxscore_kernel(
             # per-row surviving counts via padded cumsum, not reduceat:
             # reduceat mis-sizes zero-n rows (duplicate start indices)
             mc = np.concatenate(([0], np.cumsum(m.astype(np.int64))))
-            lens = mc[ends] - mc[starts]
+            ends = np.cumsum(n_arr)
+            lens = mc[ends] - mc[ends - n_arr]
             d, tf, dl = d[m], tf[m], dl[m]
         else:
             lens = n_arr
         w = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        _stats["blocks_decoded"] += len(g)
+        _stats["blocks_decoded"] += n_arr.size
         return d, w, lens
 
-    def _decode_rows(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-        d, w, _ = _decode_rows_segmented(g)
-        return d, w
+    def _evict() -> None:
+        # evict BOTH caches: _cache_postings tracks their union, so
+        # clearing only _cache would leave _bcache entries untracked and
+        # let the 64 MB per-task bound be exceeded when the full-list and
+        # block-skip paths interleave
+        _cache.clear()
+        _bcache.clear()
+        _cache_postings[0] = 0
 
-    _bcache: dict = {}  # list key → {block row idx → (d, w)} — per-BLOCK cache
-
-    def decode_list(key, g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    def decode_list(bk: _Bucket, li: int) -> tuple[np.ndarray, np.ndarray]:
         """(doc_ids, w) for one FULL (term, salt) list, task-cached. d is
         NOT globally sorted when base+delta appends interleave — consumers
         must not assume sortedness."""
+        key = bk.key[li]
         hit = _cache.get(key)
         if hit is not None:
             return hit
-        d, w = _decode_rows(g)
+        d, w, _ = _decode_rows(bk, slice(bk.lo[li], bk.hi[li]))
         if _cache_postings[0] + d.size > _CACHE_MAX_POSTINGS:
-            # evict BOTH caches: _cache_postings tracks their union, so
-            # clearing only _cache would leave _bcache entries untracked
-            # and let the 64 MB per-task bound be exceeded when the
-            # full-list and block-skip paths interleave
-            _cache.clear()
-            _bcache.clear()
-            _cache_postings[0] = 0
+            _evict()
         _cache[key] = (d, w)
         _cache_postings[0] += d.size
         return d, w
 
+    def blocks_hit(bk: _Bucket, li: int, uids: np.ndarray) -> np.ndarray:
+        """Mask of list li's blocks whose [first_doc, last_doc] range
+        contains ≥1 of the sorted ``uids``."""
+        lo, hi = bk.lo[li], bk.hi[li]
+        return np.searchsorted(uids, bk.first[lo:hi], side="left") < np.searchsorted(
+            uids, bk.last[lo:hi], side="right"
+        )
+
     def decode_for_survivors(
-        key, g: pd.DataFrame, uids: np.ndarray
+        bk: _Bucket, li: int, uids: np.ndarray
     ) -> tuple[np.ndarray, np.ndarray]:
         """Block-max skipping for the deferred fold (the true block-max use
         of first_doc/last_doc, src/igd_search.c:790-812 descendant): only
@@ -266,24 +348,20 @@ def _maxscore_kernel(
         hot list's work per query and forfeit the 10× shared-decode win.
         Falls back to the full-list decode when the list is already cached
         or most blocks intersect anyway."""
-        hit = _cache.get(key)
+        hit = _cache.get(bk.key[li])
         if hit is not None:
             return hit
-        firsts = g["first_doc"].to_numpy(dtype=np.int64)
-        lasts = g["last_doc"].to_numpy(dtype=np.int64)
-        lo = np.searchsorted(uids, firsts, side="left")
-        hi = np.searchsorted(uids, lasts, side="right")
-        mask = lo < hi  # block range contains ≥1 survivor
+        mask = blocks_hit(bk, li, uids)
         n_hit = int(mask.sum())
-        if n_hit >= 0.5 * len(g):
-            return decode_list(key, g)
-        _stats["blocks_skipped"] += len(g) - n_hit
-        return _assemble_blocks(key, g, np.flatnonzero(mask))
+        if n_hit >= 0.5 * mask.size:
+            return decode_list(bk, li)
+        _stats["blocks_skipped"] += mask.size - n_hit
+        return _assemble_blocks(bk, li, np.flatnonzero(mask))
 
     def _assemble_blocks(
-        key, g: pd.DataFrame, need: np.ndarray
+        bk: _Bucket, li: int, need: np.ndarray
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Concatenated (d, w) of the `need` block rows, through the
+        """Concatenated (d, w) of list li's `need` blocks, through the
         per-BLOCK cache: across a bucket's queries each block of a shared
         hot list decodes AT MOST once, whichever skip path asks for it."""
         if need.size == 0:
@@ -292,20 +370,20 @@ def _maxscore_kernel(
         # evict blocks this very call still needs (the cache may overshoot
         # by at most one list's worth, bounded by the largest posting list)
         if _cache_postings[0] > _CACHE_MAX_POSTINGS:
-            _cache.clear()
-            _bcache.clear()
-            _cache_postings[0] = 0
-        blocks = _bcache.setdefault(key, {})
-        missing = [int(i) for i in need if int(i) not in blocks]
+            _evict()
+        blocks = _bcache.setdefault(bk.key[li], {})
+        need = need.tolist()
+        missing = [i for i in need if i not in blocks]
         if missing:
-            d_all, w_all, lens = _decode_rows_segmented(g.iloc[missing])
-            offs = np.concatenate(([0], np.cumsum(lens)))
+            d_all, w_all, lens = _decode_rows(
+                bk, bk.lo[li] + np.asarray(missing, dtype=np.int64)
+            )
+            offs = np.concatenate(([0], np.cumsum(lens))).tolist()
             for j, bi in enumerate(missing):
                 db = d_all[offs[j]:offs[j + 1]]
-                wb = w_all[offs[j]:offs[j + 1]]
-                blocks[bi] = (db, wb)
+                blocks[bi] = (db, w_all[offs[j]:offs[j + 1]])
                 _cache_postings[0] += db.size
-        parts = [blocks[int(i)] for i in need]
+        parts = [blocks[i] for i in need]
         if len(parts) == 1:
             return parts[0]
         return (
@@ -313,36 +391,28 @@ def _maxscore_kernel(
             np.concatenate([p[1] for p in parts]),
         )
 
-    def block_ubs(g: pd.DataFrame) -> np.ndarray:
-        """Per-block score upper bounds. Blocks whose stored ub was computed
-        under the CURRENT avgdl use it (tight); blocks built before an
-        append (different avgdl) get a safe bound from (max_tf, min_dl) —
-        f(tf, dl) is increasing in tf and decreasing in dl."""
-        stored_ok = np.isclose(g["b_avgdl"].to_numpy(dtype=np.float64), avgdl, rtol=1e-12)
-        ub = g["ub_tf_dl"].to_numpy(dtype=np.float64)
-        if not stored_ok.all():
-            mt = g["max_tf"].to_numpy(dtype=np.float64)
-            md = g["min_dl"].to_numpy(dtype=np.float64)
-            loose = mt * (k1 + 1.0) / (mt + k1 * (1.0 - b + b * md / avgdl))
-            ub = np.where(stored_ok, ub, loose)
-        return ub
+    def fold(scores, uids, d, contrib) -> None:
+        """scores[uids == d] += contrib, for the d that are candidates."""
+        pos = np.searchsorted(uids, d)
+        valid = pos < uids.size
+        pos_v = pos[valid]
+        hitm = uids[pos_v] == d[valid]
+        np.add.at(scores, pos_v[hitm], contrib[valid][hitm])
 
-    def list_ub(g: pd.DataFrame) -> float:
-        return float(block_ubs(g).max())
-
-
-    def score_one(qid: int, lists: list) -> pd.DataFrame | None:
-        """lists: [(sigma, term_id, salt, idf, key, g)] for this query."""
+    def score_one(
+        bk: _Bucket, lists: list
+    ) -> tuple[np.ndarray, np.ndarray] | None:
+        """lists: [(sigma, term_id, salt, idf, li)] for this query.
+        Returns the query's ranked (doc_ids, scores)."""
         if not lists:
             return None
         # order: sigma desc, then ids for determinism
         lists.sort(key=lambda x: (-x[0], x[1], x[2]))
 
         # --- bootstrap θ0: fully score the cheapest list (fewest postings)
-        costs = [int(g["n"].sum()) for (_, _, _, _, _, g) in lists]
-        bi = int(np.argmin(costs))
-        _, _, _, idf_b, key_b, g_b = lists[bi]
-        _, w_b = decode_list(key_b, g_b)
+        bi = int(np.argmin([bk.npost[l[4]] for l in lists]))
+        _, _, _, idf_b, li_b = lists[bi]
+        _, w_b = decode_list(bk, li_b)
         bs_all = idf_b * w_b
         theta = float(np.partition(bs_all, -k)[-k]) if bs_all.size >= k else 0.0
 
@@ -390,11 +460,11 @@ def _maxscore_kernel(
         n_mint = len(essential)
         def_sum = float(sum(l[0] for l in deferred))
         all_ids, all_w = [], []
-        for i, (_, tid, salt, idf, key, g) in enumerate(essential):
+        for i, (_, _, _, idf, li) in enumerate(essential):
             if i >= 1 and suffix[i] + def_sum < theta:
                 n_mint = i
                 break
-            d, w = decode_list(key, g)
+            d, w = decode_list(bk, li)
             contrib = idf * w
             all_ids.append(d)
             all_w.append(contrib)
@@ -414,63 +484,45 @@ def _maxscore_kernel(
         tail = essential[n_mint:]
         if tail:
             uids_head = np.unique(np.concatenate(all_ids))
-            for _, tid, salt, idf, key, g in tail:
-                hit = _cache.get(key)
+            for _, _, _, idf, li in tail:
+                hit = _cache.get(bk.key[li])
                 if hit is not None:
                     all_ids.append(hit[0])
                     all_w.append(idf * hit[1])
                     continue
-                firsts = g["first_doc"].to_numpy(dtype=np.int64)
-                lasts = g["last_doc"].to_numpy(dtype=np.int64)
-                lo = np.searchsorted(uids_head, firsts, side="left")
-                hi = np.searchsorted(uids_head, lasts, side="right")
-                if int((lo < hi).sum()) >= 0.5 * len(g):
-                    d, w = decode_list(key, g)
+                mask = blocks_hit(bk, li, uids_head)
+                if int(mask.sum()) >= 0.5 * mask.size:
+                    d, w = decode_list(bk, li)
                     all_ids.append(d)
                     all_w.append(idf * w)
                 else:
-                    refine.append((idf, key, g))
+                    refine.append((idf, li))
         ids = np.concatenate(all_ids)
         ws = np.concatenate(all_w)
         uids, inv = np.unique(ids, return_inverse=True)
         scores = np.bincount(inv, weights=ws, minlength=uids.size)
-        for idf, key, g in refine:
+        for idf, li in refine:
             n_skip_before = _stats["blocks_skipped"]
-            d, w = decode_for_survivors(key, g, uids)
+            d, w = decode_for_survivors(bk, li, uids)
             _stats["blocks_skipped_essential"] += _stats["blocks_skipped"] - n_skip_before
-            pos = np.searchsorted(uids, d)
-            valid = pos < uids.size
-            pos_v = pos[valid]
-            hitm = uids[pos_v] == d[valid]
-            np.add.at(scores, pos_v[hitm], (idf * w)[valid][hitm])
+            fold(scores, uids, d, idf * w)
 
         # --- phase 2: fold in deferred (hot) lists for surviving candidates
         # process in descending sigma so θ tightens fastest
         deferred.sort(key=lambda x: (-x[0], x[1], x[2]))
         remaining = float(sum(l[0] for l in deferred))
-        for sigma, tid, salt, idf, key, g in deferred:
+        for sigma, _, _, idf, li in deferred:
             if uids.size > k:
                 kth = float(np.partition(scores, -k)[-k])
                 theta = max(theta, kth)
                 keep = scores + remaining >= theta
                 uids, scores = uids[keep], scores[keep]
-            d, w = decode_for_survivors(key, g, uids)
-            pos = np.searchsorted(uids, d)
-            valid = pos < uids.size
-            pos_v = pos[valid]
-            hitm = uids[pos_v] == d[valid]
-            np.add.at(scores, pos_v[hitm], (idf * w)[valid][hitm])
+            d, w = decode_for_survivors(bk, li, uids)
+            fold(scores, uids, d, idf * w)
             remaining -= sigma
 
         order = np.lexsort((uids, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "query_id": np.full(order.size, qid, dtype=np.int64),
-                "rank": np.arange(1, order.size + 1, dtype=np.int32),
-                "doc_id": uids[order],
-                "score": scores[order],
-            }
-        )
+        return uids[order], scores[order]
 
     def kernel(pdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
         from igd_spark.session import tune_allocator
@@ -479,31 +531,44 @@ def _maxscore_kernel(
         empty = pd.DataFrame(columns=["query_id", "rank", "doc_id", "score"])
         if not len(pdf) or not len(qpdf):
             return empty
-        # index this bucket's lists once: term_id → [(salt, key, g, ub)]
+        bk = _bucket(pdf, k1, b, avgdl)
         by_term: dict[int, list] = {}
-        for (tid, salt), g in pdf.groupby(["term_id", "salt"], sort=True):
-            g = g.sort_values("block_id", kind="stable")
-            n_arr = g["n"].to_numpy(dtype=np.int64)
-            firsts = g["first_doc"].to_numpy(dtype=np.int64)
-            key = (int(tid), int(salt), int(n_arr.sum()), int(firsts[0]),
-                   int(firsts[-1]), len(n_arr))
-            by_term.setdefault(int(tid), []).append((int(salt), key, g, list_ub(g)))
+        for li, tid in enumerate(bk.tid):
+            by_term.setdefault(tid, []).append(li)
         # merge lists of multi-term queries (qpdf rows are per (query, term))
         per_query: dict[int, list] = {}
         for qid, tid, idf in zip(
-            qpdf["query_id"].astype(int), qpdf["term_id"].astype(int), qpdf["idf"]
+            qpdf["query_id"].to_numpy(dtype=np.int64).tolist(),
+            qpdf["term_id"].to_numpy(dtype=np.int64).tolist(),
+            qpdf["idf"].to_numpy(dtype=np.float64).tolist(),
         ):
-            idf = float(idf)
-            per_query.setdefault(int(qid), []).extend(
-                (idf * ubv, int(tid), salt, idf, key, g)
-                for (salt, key, g, ubv) in by_term.get(int(tid), [])
+            per_query.setdefault(qid, []).extend(
+                (idf * bk.ub[li], tid, bk.salt[li], idf, li)
+                for li in by_term.get(tid, ())
             )
-        frames = []
+        qids, docs, scores = [], [], []
         for qid in sorted(per_query):
-            f = score_one(qid, per_query[qid])
-            if f is not None:
-                frames.append(f)
-        return pd.concat(frames) if frames else empty
+            r = score_one(bk, per_query[qid])
+            if r is not None:
+                qids.append(qid)
+                docs.append(r[0])
+                scores.append(r[1])
+        if not qids:
+            return empty
+        sizes = np.array([d.size for d in docs], dtype=np.int64)
+        starts = np.cumsum(sizes) - sizes
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat(np.array(qids, dtype=np.int64), sizes),
+                "rank": (
+                    np.arange(sizes.sum(), dtype=np.int64)
+                    - np.repeat(starts, sizes)
+                    + 1
+                ).astype(np.int32),
+                "doc_id": np.concatenate(docs),
+                "score": np.concatenate(scores),
+            }
+        )
 
     return kernel
 
@@ -1219,7 +1284,7 @@ def search(
             )
     else:
         # unbounded path: no per-query driver state, pruning via the join
-        qt = query_terms(queries)
+        qt = query_terms(queries, split_re=conf.token_split_re)
         qdict = (
             idx.dictionary.join(F.broadcast(qt), "term")
             .withColumn("idf", idf_col(idx.n_docs, "df"))

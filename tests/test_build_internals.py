@@ -145,3 +145,17 @@ def test_bounds_guard_drops_absurd_docs_and_counts(spark, tmp_path):
     conf_off = IndexConf(block_size=8, n_shards=4, max_text_chars=0)
     idx2 = build_index(spark, docs, str(tmp_path / "bidx0"), conf=conf_off)
     assert idx2.n_docs == 3 and idx2.meta["corpus"]["docs_dropped"] == 0
+
+
+def test_int32_offsets_refuse_streams_past_2gib():
+    """The Arrow binary columns of a block batch use int32 offsets: a
+    stream whose last offset reaches 2**31 must raise, not wrap negative
+    and corrupt every later block."""
+    import pytest
+
+    from igd_spark.build import _int32_offsets
+
+    ok = np.array([0, 5, 2**31 - 1], dtype=np.int64)
+    assert np.frombuffer(_int32_offsets(ok), dtype=np.int32).tolist() == ok.tolist()
+    with pytest.raises(ValueError, match="int32"):
+        _int32_offsets(np.array([0, 5, 2**31], dtype=np.int64))

@@ -67,3 +67,48 @@ def test_docids_giant_gap_exact():
     d = np.array([-(2**63), 2**63 - 1], dtype=np.int64)
     out = codec.decode_doc_ids(codec.encode_doc_ids(d))
     assert (out == d).all()
+
+
+@pytest.mark.parametrize(
+    "n", [1, 7, codec._GATHER_MAX_VALUES, codec._GATHER_MAX_VALUES + 1, 20_000]
+)
+def test_varint_decode_both_paths_full_width(n):
+    """Streams up to _GATHER_MAX_VALUES values decode through the gathered
+    matrix, longer ones through the per-length buckets: both must
+    round-trip every width from 1 to 10 bytes, 2**64 - 1 included."""
+    rng = np.random.default_rng(n)
+    bits = rng.integers(1, 65, size=n).astype(np.uint64)
+    v = rng.integers(0, 2**64 - 1, size=n, dtype=np.uint64, endpoint=True)
+    v >>= np.uint64(64) - bits  # a random bit length per value
+    v[0] = np.uint64(2**64 - 1)
+    v[-1] = 0
+    assert np.array_equal(codec.varint_decode(codec.varint_encode(v)), v)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.lists(
+            st.integers(min_value=-(2**63), max_value=2**63 - 1),
+            min_size=0, max_size=40, unique=True,
+        ),
+        min_size=1, max_size=8,
+    )
+)
+def test_decode_blocks_matches_per_block_decode(blocks):
+    """codec.decode_blocks (one segmented pass over all rows, zero-posting
+    rows included — a leading one too) equals decoding block by block."""
+    blocks = [np.array(sorted(b), dtype=np.int64) for b in blocks]
+    n = np.array([b.size for b in blocks], dtype=np.int64)
+    tfs = [np.arange(1, b.size + 1, dtype=np.uint64) for b in blocks]
+    dls = [np.full(b.size, 300 + i, dtype=np.uint64) for i, b in enumerate(blocks)]
+    d, tf, dl = codec.decode_blocks(
+        n,
+        [codec.encode_doc_ids(b) for b in blocks],
+        [codec.varint_encode(t) for t in tfs],
+        [codec.varint_encode(x) for x in dls],
+    )
+    assert d.dtype == np.int64 and tf.dtype == dl.dtype == np.float64
+    assert d.tolist() == np.concatenate(blocks).tolist()
+    assert tf.tolist() == np.concatenate(tfs).astype(np.float64).tolist()
+    assert dl.tolist() == np.concatenate(dls).astype(np.float64).tolist()

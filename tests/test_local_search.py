@@ -351,3 +351,36 @@ def test_local_input_null_semantics(spark, built):
     with pytest.raises(ValueError, match="query_id"):
         search(spark, idx, pd.DataFrame(
             {"query_id": [np.nan], "query_text": ["x"]}), k=10)
+
+
+def test_unbounded_path_tokenizes_with_the_index_regex(spark, tmp_path, monkeypatch):
+    """An index built with a custom token_split_re must tokenize queries
+    the same way on every route: the unbounded distributed plan
+    (IGD_SEARCH_SMALL_MAX_ROWS=0) must match the driver route on queries
+    whose tokens only the custom regex keeps whole."""
+    conf = IndexConf(block_size=8, n_shards=2, token_split_re=r"[^a-z0-9_]+")
+    texts = [
+        "alpha_beta gamma", "alpha beta", "alpha beta gamma", "beta_gamma alpha",
+        "alpha_beta alpha_beta delta", "gamma delta", "beta", "alpha_beta beta_gamma",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    idx = build_index(spark, docs, str(tmp_path / "re_idx"), conf=conf)
+    rows = [(0, "alpha_beta"), (1, "alpha_beta gamma"), (2, "beta_gamma delta")]
+
+    def key(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in df.collect()
+        )
+
+    driver = key(search(spark, idx, rows, k=5, engine="driver"))
+    monkeypatch.setenv("IGD_SEARCH_SMALL_MAX_ROWS", "0")
+    tel: dict = {}
+    # a file-backed batch: driver-local frames always take the small prologue
+    qpath = str(tmp_path / "re_queries.parquet")
+    spark.createDataFrame(rows, "query_id long, query_text string").write.parquet(qpath)
+    q = spark.read.parquet(qpath)
+    unbounded = key(search(spark, idx, q, k=5, engine="spark", telemetry=tel))
+    assert tel["engine"] == "spark-huge", tel
+    assert {r[0] for r in driver} == {0, 1, 2}
+    assert unbounded == driver

@@ -229,3 +229,114 @@ def test_kernel_matches_bruteforce_on_random_lists(min_tf):
         want = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:K]
         assert list(got["doc_id"]) == [d for d, _ in want], f"trial {trial}"
         assert np.allclose(got["score"], [s for _, s in want]), f"trial {trial}"
+
+
+class _Bc:
+    """Spark-broadcast stand-in: the kernel reads only ``.value``."""
+
+    def __init__(self, value):
+        self.value = value
+
+
+def _random_bucket(rng, k1, b, avgdl):
+    """Block rows of random multi-salt lists plus the exact postings.
+
+    Every term's docs are split over pmod(doc, n_salts) salts like the
+    builder's; some lists arrive as two batches whose block ids both
+    start at 0 (an append before compaction), and some blocks carry a
+    stale b_avgdl with a bound computed under it, so the kernel must take
+    the loose (max_tf, min_dl) bound for them. Rows come back shuffled."""
+    from igd_spark import codec
+
+    rows, postings = [], {}
+    for tid in range(1, int(rng.integers(4, 9)) + 1):
+        hot = rng.random() < 0.4
+        n_docs = int(rng.integers(60, 160)) if hot else int(rng.integers(1, 25))
+        docs = np.sort(rng.choice(np.arange(1, 400), size=n_docs, replace=False))
+        tfs = rng.integers(1, 6, size=n_docs)
+        dls = rng.integers(4, 30, size=n_docs)
+        postings[tid] = (docs, tfs, dls)
+        n_salts = int(rng.choice([1, 2, 3]))
+        for salt in range(n_salts):
+            m = docs % n_salts == salt
+            d, t, l = docs[m], tfs[m], dls[m]
+            batches = [np.arange(d.size)]
+            if d.size > 4 and rng.random() < 0.3:
+                cut = rng.random(d.size) < 0.5
+                batches = [np.flatnonzero(cut), np.flatnonzero(~cut)]
+            for sel in batches:
+                for bi, st in enumerate(range(0, sel.size, 8)):
+                    j = sel[st:st + 8]
+                    bd, bt, bl = d[j], t[j].astype(np.int64), l[j].astype(np.int64)
+                    b_avgdl = avgdl if rng.random() < 0.7 else avgdl * 0.75
+                    w = bt * (k1 + 1.0) / (bt + k1 * (1.0 - b + b * bl / b_avgdl))
+                    rows.append({
+                        "term_id": tid, "salt": salt, "block_id": bi,
+                        "n": int(bd.size), "first_doc": int(bd[0]),
+                        "last_doc": int(bd[-1]),
+                        "doc_ids": codec.encode_doc_ids(bd.astype(np.int64)),
+                        "tfs": codec.varint_encode(bt), "dls": codec.varint_encode(bl),
+                        "max_tf": int(bt.max()), "min_dl": int(bl.min()),
+                        "ub_tf_dl": float(w.max()), "b_avgdl": b_avgdl,
+                    })
+    blocks = pd.DataFrame(rows).sample(frac=1.0, random_state=int(rng.integers(1 << 30)))
+    return blocks.reset_index(drop=True), postings
+
+
+def _random_queries(rng, term_ids, first_qid):
+    """qmap rows of queries over a small term pool, so lists are shared."""
+    idf = {t: float(np.round(rng.uniform(0.05, 8.0), 3)) for t in term_ids}
+    qp = {"query_id": [], "term_id": [], "idf": []}
+    for qid in range(first_qid, first_qid + int(rng.integers(3, 8))):
+        for t in rng.choice(term_ids, size=int(rng.integers(1, 5)), replace=False):
+            qp["query_id"].append(qid)
+            qp["term_id"].append(int(t))
+            qp["idf"].append(idf[int(t)])
+    return pd.DataFrame(qp).sample(frac=1.0, random_state=int(rng.integers(1 << 30)))
+
+
+def _bruteforce(postings, qpdf, k, min_tf, k1, b, avgdl, deleted):
+    want = {}
+    for qid, g in qpdf.groupby("query_id"):
+        acc: dict[int, float] = {}
+        for tid, idf in zip(g["term_id"], g["idf"]):
+            docs, tfs, dls = postings[int(tid)]
+            w = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+            for doc, tf, wv in zip(docs, tfs, w):
+                if tf >= min_tf and int(doc) not in deleted:
+                    acc[int(doc)] = acc.get(int(doc), 0.0) + float(idf) * float(wv)
+        want[int(qid)] = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+    return want
+
+
+@pytest.mark.parametrize("min_tf", [0, 2])
+def test_kernel_matches_bruteforce_on_random_multi_query_buckets(min_tf):
+    """Whole-bucket guard: several queries sharing multi-salt lists, rows in
+    shuffled order, stale-avgdl blocks, tombstones and min_tf — two buckets
+    through ONE kernel instance, so the second call runs on warm list and
+    block caches. Doc ids must match a brute-force scorer exactly and
+    scores within 1e-9."""
+    rng = np.random.default_rng(20261017 + min_tf)
+    k1, b, avgdl, K = 1.2, 0.75, 12.0, 3
+    skipped = 0
+    for trial in range(12):
+        blocks, postings = _random_bucket(rng, k1, b, avgdl)
+        term_ids = np.array(sorted(postings))
+        deleted = np.unique(rng.integers(1, 400, size=int(rng.integers(0, 40))))
+        stats: dict = {}
+        kernel = _maxscore_kernel(
+            K, min_tf, k1, b, avgdl, stats=stats, deleted_bc=_Bc(deleted)
+        )
+        for call in range(2):
+            qpdf = _random_queries(rng, term_ids, 100 * call)
+            shuffled = blocks.sample(frac=1.0, random_state=trial * 2 + call)
+            got = kernel(shuffled, qpdf)
+            want = _bruteforce(postings, qpdf, K, min_tf, k1, b, avgdl, set(deleted.tolist()))
+            for qid, top in want.items():
+                g = got[got["query_id"] == qid].sort_values("rank")
+                assert list(g["rank"]) == list(range(1, len(top) + 1)), (trial, call, qid)
+                assert list(g["doc_id"]) == [d for d, _ in top], (trial, call, qid)
+                assert np.allclose(g["score"], [s for _, s in top], rtol=0, atol=1e-9)
+            assert set(got["query_id"]) <= set(want)
+        skipped += stats["blocks_skipped"]
+    assert skipped > 0, "block-max skipping never engaged on the random buckets"
