@@ -16,11 +16,6 @@ from __future__ import annotations
 import numpy as np
 
 _MAX_VARINT_BYTES = 10
-# streams of at most this many values decode through one gathered
-# (values x bytes) matrix; longer ones bucket values by byte count
-_GATHER_MAX_VALUES = 2048
-_BYTE_POS = np.arange(_MAX_VARINT_BYTES)
-_BYTE_SHIFT = _BYTE_POS.astype(np.uint64) * np.uint64(7)
 
 
 def varint_encode_offsets(values: np.ndarray) -> tuple[bytes, np.ndarray]:
@@ -63,8 +58,7 @@ def varint_decode(buf: bytes) -> np.ndarray:
     reduceat over one element per stream byte) built several 8×-stream-size
     intermediates, which on multi-byte-heavy streams (e.g. hash doc-id
     gaps averaging ~7.4 B/value) was memory-bandwidth-bound — measured
-    38 s → ~1 s on a 91 MB stream of 12 M values. Short multi-byte
-    streams take _varint_decode_gather instead."""
+    38 s → ~1 s on a 91 MB stream of 12 M values."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
@@ -76,9 +70,6 @@ def varint_decode(buf: bytes) -> np.ndarray:
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
     cont = ends - starts  # continuation bytes per value (0..9)
-    width = int(cont.max()) + 1
-    if n <= _GATHER_MAX_VALUES and 1 < width <= _MAX_VARINT_BYTES:
-        return _varint_decode_gather(b, starts, ends, width)
     # terminal byte first — its shift varies per value, one vectorized pass
     out = (b[ends] & np.uint8(0x7F)).astype(np.uint64) << (
         np.uint64(7) * cont.astype(np.uint64)
@@ -105,26 +96,6 @@ def varint_decode(buf: bytes) -> np.ndarray:
                 acc |= g8
             out[idx] |= acc
     return out
-
-
-def _varint_decode_gather(
-    b: np.ndarray, starts: np.ndarray, ends: np.ndarray, width: int
-) -> np.ndarray:
-    """Short multi-byte streams: gather every value's bytes into one
-    (values x width) matrix, mask the bytes past each value's end, shift
-    and sum (the 7-bit groups never overlap, so the sum is their OR). The
-    bucketed loop in varint_decode spends ~4 numpy calls per byte position
-    per distinct value length, which dominates short streams of wide
-    values — hash doc-id gaps average ~8 B, and a query kernel decodes
-    thousands of one- or few-block lists — measured ~5x faster on a
-    128-value hash-gap list (4-vCPU x86 VM). The matrix is width x the
-    value count, so long streams keep the bucketed loop."""
-    pos = starts[:, None] + _BYTE_POS[:width]
-    m = np.where(
-        pos <= ends[:, None], b.take(pos, mode="clip") & np.uint8(0x7F), 0
-    ).astype(np.uint64)
-    m <<= _BYTE_SHIFT[:width]
-    return m.sum(axis=1, dtype=np.uint64)
 
 
 def decode_blocks(

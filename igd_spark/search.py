@@ -136,9 +136,10 @@ def exact_bm25_topk(
 
 class _Bucket(NamedTuple):
     """One cogrouped bucket's block rows as flat numpy columns, lexsorted by
-    (term_id, salt, block_id). List ``li`` — one (term, salt) posting list —
-    is the row range ``lo[li]:hi[li]``; the per-list fields are python
-    lists so the per-query loop indexes them without numpy scalars."""
+    (term_id, salt, block_id, first_doc). List ``li`` — one (term, salt)
+    posting list — is the row range ``lo[li]:hi[li]``; the per-list fields
+    are python lists so the per-query loop indexes them without numpy
+    scalars."""
 
     n: np.ndarray  # per row: postings in the block
     first: np.ndarray  # per row: first_doc
@@ -160,8 +161,11 @@ def _bucket(pdf: pd.DataFrame, k1: float, b: float, avgdl: float) -> _Bucket:
     change-point pass over (term_id, salt), and compute every list's
     bound, posting count and cache key with vectorized reduceat.
 
-    np.lexsort is stable, so rows tied on block_id (append batches restart
-    block ids) keep their arrival order within a list.
+    Append batches restart block ids, so one list's rows can tie on
+    block_id; first_doc breaks the tie (batches hold disjoint doc ranges).
+    Arrival order must not decide it: the per-block cache addresses a
+    list's blocks by position under a key that the shuffle order of tied
+    middle blocks does not change.
 
     Block bounds: blocks whose stored ub was computed under the CURRENT
     avgdl use it (tight); blocks built before an append (different avgdl)
@@ -169,7 +173,12 @@ def _bucket(pdf: pd.DataFrame, k1: float, b: float, avgdl: float) -> _Bucket:
     and decreasing in dl."""
     tid = pdf["term_id"].to_numpy(dtype=np.int64)
     salt = pdf["salt"].to_numpy(dtype=np.int64)
-    order = np.lexsort((pdf["block_id"].to_numpy(dtype=np.int64), salt, tid))
+    order = np.lexsort((
+        pdf["first_doc"].to_numpy(dtype=np.int64),
+        pdf["block_id"].to_numpy(dtype=np.int64),
+        salt,
+        tid,
+    ))
     tid, salt = tid[order], salt[order]
     cut = np.ones(tid.size, dtype=bool)
     cut[1:] = (tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])
@@ -236,10 +245,10 @@ def _maxscore_kernel(
 
     Columnar layout (the reference's flat tile records,
     src/igd_search.c:454-534): the bucket's columns become numpy arrays
-    once and are lexsorted by (term_id, salt, block_id); each (term, salt)
-    list is then a ROW RANGE of those arrays (_Bucket), with its score
-    bound, posting count and cache key computed for the whole bucket by
-    reduceat. The per-query loop touches no DataFrame, and the bucket's
+    once and are lexsorted by (term_id, salt, block_id, first_doc); each
+    (term, salt) list is then a ROW RANGE of those arrays (_Bucket), with
+    its score bound, posting count and cache key computed for the whole
+    bucket by reduceat. The per-query loop touches no DataFrame, and the bucket's
     top-k leaves as ONE frame built from concatenated arrays.
 
     Safe (rank-identical) pruning: a doc is eliminated only when its score

@@ -9,21 +9,20 @@ replayed (query_id, rank, doc_id, score) rows and counters against the
 captured ones.
 
     python scripts/profile_kernel.py --corpus CORPUS.parquet \\
-        --queries QUERIES.parquet [--batch 1000] [--offset 0] [--reps 5] \\
-        [--capture DIR] [--reference-root CHECKOUT]
+        --queries QUERIES.parquet [--reference-root CHECKOUT]
 
 The corpus parquet has the transcript columns (conv_id, turn_idx, role,
 text, ...); the query parquet has (query_id, query_text). The benchmark's
 input cache (.perfbench/cache/<key>/base.parquet and
-queries_batch-*.parquet) fits both. Buckets are replayed task by task in
-their captured order, one kernel instance per Spark task, so the kernel's
-task-local caches see exactly what they saw in the workers.
+queries_batch-*.parquet) fits both; the batch is the query parquet's
+first 1000 rows. Buckets are replayed task by task in their captured
+order, one kernel instance per Spark task, so the kernel's task-local
+caches see exactly what they saw in the workers.
 
---capture DIR keeps the capture; --replay DIR replays an existing capture
-without starting Spark. --reference-root replays the same capture with the
-kernel of another checkout (for example the parent commit) in a
-subprocess and checks ITS rows and counters against the capture too, which
-compares the two kernels bit for bit.
+--reference-root replays the same capture with the kernel of another
+checkout (for example the parent commit) in a subprocess and checks ITS
+rows and counters against the capture too, which compares the two
+kernels bit for bit.
 """
 
 from __future__ import annotations
@@ -44,6 +43,13 @@ import numpy as np
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 COUNTERS = ("blocks_decoded", "blocks_skipped", "blocks_skipped_essential")
+BATCH = 1000  # queries in the captured batch
+K = 10
+CORES = 4  # local[N] Spark master
+# IndexConf.salt_df_threshold of the built index; must match the benchmark's
+# index (perfbench/run.py) for the capture to profile the benchmarked plan
+SALT_DF_THRESHOLD = 4096
+REPS = 5  # timed replays
 
 
 class _Value:
@@ -92,7 +98,7 @@ def _capturing_factory(real_factory, capture_dir: str, batch: int):
     return factory
 
 
-def capture(args, capture_dir: str) -> None:
+def capture(corpus: str, queries_path: str, capture_dir: str) -> None:
     """Build the index and run one batch with the capturing kernel."""
     sys.path.insert(0, ROOT)
     import importlib
@@ -110,22 +116,22 @@ def capture(args, capture_dir: str) -> None:
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
     spark = get_spark(
-        cores=args.cores,
+        cores=CORES,
         app="profile_kernel",
         extra={"spark.driver.memory": "1g", "spark.ui.showConsoleProgress": "false"},
     )
     work = tempfile.mkdtemp(prefix="profile_kernel-")
     try:
-        conf = IndexConf(salt_df_threshold=args.salt_df_threshold)
-        docs = spark.read.parquet(os.path.abspath(args.corpus))
+        conf = IndexConf(salt_df_threshold=SALT_DF_THRESHOLD)
+        docs = spark.read.parquet(os.path.abspath(corpus))
         idx = build_index(spark, docs, os.path.join(work, "idx"), conf=conf, id_col=None)
-        rows = pd.read_parquet(args.queries, columns=["query_id", "query_text"])
-        rows = rows.iloc[args.offset:args.offset + args.batch]
+        rows = pd.read_parquet(queries_path, columns=["query_id", "query_text"])
+        rows = rows.iloc[:BATCH]
         queries = spark.createDataFrame(rows, "query_id long, query_text string")
         real = search_mod._maxscore_kernel
         search_mod._maxscore_kernel = _capturing_factory(real, capture_dir, len(rows))
         try:
-            search(spark, idx, queries, k=args.k, engine="spark").collect()
+            search(spark, idx, queries, k=K, engine="spark").collect()
         finally:
             search_mod._maxscore_kernel = real
     finally:
@@ -146,15 +152,15 @@ def load(capture_dir: str) -> tuple[dict, list[list[dict]]]:
     return params, [sorted(t, key=lambda r: r["seq"]) for _, t in sorted(tasks.items())]
 
 
-def replay(params: dict, tasks: list[list[dict]], reps: int) -> dict:
-    """Replay every captured bucket `reps` times (fresh kernels per rep):
+def replay(params: dict, tasks: list[list[dict]]) -> dict:
+    """Replay every captured bucket REPS times (fresh kernels per rep):
     {"cpu_ms": [per rep, per 1000 queries], "outs": {bucket: rows},
     "stats": {bucket: counter deltas}} — outs/stats from the last rep."""
     from igd_spark.search import _maxscore_kernel
 
     deleted = None if params["deleted"] is None else _Value(params["deleted"])
     cpu_ms, outs, stats_out = [], {}, {}
-    for _ in range(reps):
+    for _ in range(REPS):
         spent = 0.0
         for task in tasks:
             stats: dict = {}
@@ -219,43 +225,34 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--corpus", help="transcript corpus parquet")
     ap.add_argument("--queries", help="(query_id, query_text) parquet")
-    ap.add_argument("--batch", type=int, default=1000, help="queries in the batch")
-    ap.add_argument("--offset", type=int, default=0, help="first query row")
-    ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--salt-df-threshold", type=int, default=4096,
-                    help="IndexConf.salt_df_threshold of the built index")
-    ap.add_argument("--cores", type=int, default=4, help="local[N] Spark master")
-    ap.add_argument("--reps", type=int, default=5, help="timed replays")
-    ap.add_argument("--capture", help="keep the capture in this directory")
-    ap.add_argument("--replay", help="replay this capture; start no Spark")
     ap.add_argument("--reference-root",
                     help="also replay with the kernel of this checkout")
+    # subprocess form: replay the capture in --replay with the kernel under
+    # --root and pickle the result to --out
+    ap.add_argument("--replay", help=argparse.SUPPRESS)
     ap.add_argument("--root", default=ROOT, help=argparse.SUPPRESS)
     ap.add_argument("--out", help=argparse.SUPPRESS)
     args = ap.parse_args()
 
-    if args.out:  # subprocess form: replay with the kernel under --root
+    if args.out:
         sys.path.insert(0, args.root)
         with open(args.out, "wb") as f:
-            pickle.dump(replay(*load(args.replay), args.reps), f)
+            pickle.dump(replay(*load(args.replay)), f)
         return 0
 
-    capture_dir = args.replay or args.capture or tempfile.mkdtemp(prefix="kernel-capture-")
+    if not (args.corpus and args.queries):
+        ap.error("--corpus and --queries are required")
+    capture_dir = tempfile.mkdtemp(prefix="kernel-capture-")
     try:
-        if not args.replay:
-            if not (args.corpus and args.queries):
-                ap.error("--corpus and --queries are required without --replay")
-            os.makedirs(capture_dir, exist_ok=True)
-            capture(args, capture_dir)
+        capture(args.corpus, args.queries, capture_dir)
         sys.path.insert(0, ROOT)
         params, tasks = load(capture_dir)
-        ok = summary(params, tasks, replay(params, tasks, args.reps), "this tree")
+        ok = summary(params, tasks, replay(params, tasks), "this tree")
         if args.reference_root:
             with tempfile.NamedTemporaryFile(suffix=".pkl") as tmp:
                 subprocess.run(
                     [sys.executable, os.path.abspath(__file__), "--replay", capture_dir,
-                     "--root", os.path.abspath(args.reference_root),
-                     "--reps", str(args.reps), "--out", tmp.name],
+                     "--root", os.path.abspath(args.reference_root), "--out", tmp.name],
                     check=True,
                 )
                 with open(tmp.name, "rb") as f:
@@ -263,8 +260,7 @@ def main() -> int:
             ok = summary(params, tasks, ref, "reference") and ok
         return 0 if ok else 1
     finally:
-        if not (args.replay or args.capture):
-            shutil.rmtree(capture_dir, ignore_errors=True)
+        shutil.rmtree(capture_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -69,22 +69,6 @@ def test_docids_giant_gap_exact():
     assert (out == d).all()
 
 
-@pytest.mark.parametrize(
-    "n", [1, 7, codec._GATHER_MAX_VALUES, codec._GATHER_MAX_VALUES + 1, 20_000]
-)
-def test_varint_decode_both_paths_full_width(n):
-    """Streams up to _GATHER_MAX_VALUES values decode through the gathered
-    matrix, longer ones through the per-length buckets: both must
-    round-trip every width from 1 to 10 bytes, 2**64 - 1 included."""
-    rng = np.random.default_rng(n)
-    bits = rng.integers(1, 65, size=n).astype(np.uint64)
-    v = rng.integers(0, 2**64 - 1, size=n, dtype=np.uint64, endpoint=True)
-    v >>= np.uint64(64) - bits  # a random bit length per value
-    v[0] = np.uint64(2**64 - 1)
-    v[-1] = 0
-    assert np.array_equal(codec.varint_decode(codec.varint_encode(v)), v)
-
-
 @settings(max_examples=100, deadline=None)
 @given(
     st.lists(

@@ -340,3 +340,37 @@ def test_kernel_matches_bruteforce_on_random_multi_query_buckets(min_tf):
             assert set(got["query_id"]) <= set(want)
         skipped += stats["blocks_skipped"]
     assert skipped > 0, "block-max skipping never engaged on the random buckets"
+
+
+def test_block_cache_positions_survive_tied_block_ids_in_any_order():
+    """Append batches restart block ids, so a list's middle blocks can tie
+    on block_id. The per-block cache addresses blocks by their position in
+    the list, so two buckets that receive the tied blocks in opposite
+    orders must still agree on every position. List t3 holds base blocks
+    0-2 and one appended block 1; the rare lists t1/t2 (one doc each)
+    defer t3, whose survivor-only decode then goes through the per-block
+    cache. The first bucket caches the base block holding doc 150; the
+    second needs the appended block holding doc 1050 and must not be
+    handed the cached base block instead (doc 1050 would lose t3's 1.0)."""
+    avgdl = 10.0
+    base = [
+        _block_row(3, range(10, 18), avgdl=avgdl, block_id=0),
+        _block_row(3, [*range(100, 107), 150], avgdl=avgdl, block_id=1),
+        _block_row(3, range(200, 208), avgdl=avgdl, block_id=2),
+    ]
+    appended = [_block_row(3, range(1050, 1058), avgdl=avgdl, block_id=1)]
+    stats: dict = {}
+    kernel = _maxscore_kernel(1, 0, 1.2, 0.75, avgdl, stats=stats)
+    for rare, doc, t3_rows in (
+        (1, 150, base + appended),
+        (2, 1050, appended + base),
+    ):
+        skipped = stats.get("blocks_skipped", 0)
+        blocks = pd.DataFrame([_block_row(rare, [doc], avgdl=avgdl), *t3_rows])
+        qpdf = pd.DataFrame(
+            {"query_id": [0, 0], "term_id": [rare, 3], "idf": [10.0, 1.0]}
+        )
+        out = kernel(blocks, qpdf)
+        assert stats["blocks_skipped"] - skipped == 3, stats
+        assert list(out["doc_id"]) == [doc]
+        assert list(np.round(out["score"], 9)) == [11.0]
