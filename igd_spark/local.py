@@ -126,6 +126,8 @@ class LocalSearcher:
         # pre-filtered and stay valid for this snapshot
         self._deleted = idx.tombstones_array()
         self._dict_cache: dict[str, tuple[int, int, int] | None] = {}
+        # (like, pattern) → matching dictionary terms (expand_patterns)
+        self._expand_cache: dict[tuple[bool, str], list[str]] = {}
         # term_id → (doc_ids, tf, dl) concatenated over all salts/blocks/
         # batches — raw (pre-BM25) so one cache serves every (k, min_tf)
         self._list_cache: "OrderedDict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]" = (
@@ -434,6 +436,14 @@ class LocalSearcher:
             self._vocab_rows = total
         return self._vocab_rows
 
+    def probe_rows(self, pats, like: bool) -> int:
+        """Dictionary rows an expand_patterns(pats, like) call may read —
+        the driver route's probe bound: 0 when every pattern's expansion is
+        cached, else vocab_rows() (footers only, no data IO)."""
+        if all((like, p) in self._expand_cache for p in pats):
+            return 0
+        return self.vocab_rows()
+
     def expand_patterns(
         self, pats: list[str], like: bool
     ) -> dict[str, list[str]]:
@@ -450,10 +460,7 @@ class LocalSearcher:
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        cache: dict[tuple[bool, str], list[str]] = getattr(
-            self, "_expand_cache", None
-        ) or {}
-        self._expand_cache = cache
+        cache = self._expand_cache
         missing = [p for p in pats if (like, p) not in cache]
         if missing:
             exprs = [
@@ -999,10 +1006,9 @@ class LocalSearcher:
                 break
             self._pos_cache_occ -= entry[0].size
 
-    def pos_batch_cost(
-        self, texts: list[str], max_occ: int
-    ) -> tuple[bool, int]:
-        """(admit, bound) — can this batch's positional work run in-process?
+    def pos_batch_cost(self, texts: list[str]) -> int:
+        """Occurrence bound of this batch's positional work — the driver
+        route admits the batch when it fits driver_search_max_postings.
 
         Tier 0 (free): cached lists cost nothing; dictionary df bounds
         nothing for positions (occurrences ≥ df), so every uncached term
@@ -1018,22 +1024,20 @@ class LocalSearcher:
                 for t in _tokenize_ordered(text, self.conf.token_split_re)
             }
         )
-        return self.pos_terms_cost(terms, max_occ)
+        return self.pos_terms_cost(terms)
 
-    def pos_terms_cost(
-        self, terms: list[str], max_occ: int
-    ) -> tuple[bool, int]:
+    def pos_terms_cost(self, terms) -> int:
         """pos_batch_cost over an EXPLICIT term set — the admission bound
         for routes whose term set is not the tokenized text (phrase-prefix
-        expansions)."""
+        expansions, span clauses)."""
         if not terms:
-            return True, 0
+            return 0
         tmap = self._lookup_terms_literal(sorted(set(terms)))
         uncached = {
             t: v for t, v in tmap.items() if v[0] not in self._pos_cache
         }
         if not uncached:
-            return True, 0
+            return 0
         term_ids = sorted({tid for (tid, _, _) in uncached.values()})
         shards = sorted(
             {
@@ -1042,8 +1046,7 @@ class LocalSearcher:
                 for s in shards_for(tid, ns, self.conf.n_shards)
             }
         )
-        bound = self.pos_footer_rows(term_ids, shards) * self.conf.block_size
-        return bound <= max_occ, bound
+        return self.pos_footer_rows(term_ids, shards) * self.conf.block_size
 
     def _pos_lists_for(
         self, texts: list[str]

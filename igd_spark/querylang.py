@@ -57,7 +57,20 @@ from pyspark.sql import functions as F
 
 from igd_spark.config import DEFAULT_CONF, IndexConf
 from igd_spark.scoring import bm25_weight_col, idf_col
-from igd_spark.search import bm25_scores, exact_bm25_topk, query_terms, rank_topk
+from igd_spark.search import (
+    _PROBE_BOUND,
+    TOPK_SCHEMA,
+    _df_bounded,
+    _driver_route,
+    _expand_run,
+    _fit,
+    _materialize_local_queries,
+    _pos_bounded,
+    bm25_scores,
+    exact_bm25_topk,
+    query_terms,
+    rank_topk,
+)
 from igd_spark.stats import corpus_stats, doc_stats, term_stats
 from igd_spark.textstats import bigram_counts
 from igd_spark.tokenizer import postings, tokens_col
@@ -879,11 +892,9 @@ def wildcard_bm25_topk_indexed(
     tries the in-process driver route (pyarrow match_like probe — exact
     Spark `LIKE` parity — + LocalSearcher.score_terms_n) under the same
     budgets; "driver" demands it; "spark" forces the distributed plan."""
-    from igd_spark.search import _materialize_local_queries, _try_expand_route
-
-    routed = _try_expand_route(
-        spark, idx, queries, k, round_dp, engine, like=True,
-        max_expanded_terms=max_expanded_terms, telemetry=telemetry,
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _expand_run(True, k, round_dp, max_expanded_terms), telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -1251,10 +1262,19 @@ def bool_bm25_topk_indexed(
     driver route (LocalSearcher.bool_n — zero Spark jobs, ms-scale warm)
     under the BM25 postings budgets; "driver" demands it; "spark" forces
     the distributed plan."""
-    from igd_spark.search import _materialize_local_queries, _try_bool_route
+    def run(ls, rows, max_post):
+        # the Σdf bound covers the conjunctive AND the exclude terms' lists,
+        # both of which the kernel reads
+        if not exclude_col:
+            rows = [(q, t, None) for q, t in rows]
+        cost = _fit(
+            ls.batch_cost([(q, f"{t or ''} {e or ''}") for q, t, e in rows]),
+            max_post, "batch postings",
+        )
+        return ls.bool_n(rows, k=k, round_dp=round_dp), {"batch_cost_postings": cost}
 
-    routed = _try_bool_route(
-        spark, idx, queries, exclude_col, k, round_dp, engine,
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA, run, extra=exclude_col,
         telemetry=telemetry,
     )
     if routed is not None:
@@ -1359,13 +1379,11 @@ def prefix_bm25_topk_indexed(
 
     engine="auto" first tries the in-process driver route (pyarrow
     starts_with probe of the dictionary + LocalSearcher.score_terms_n)
-    under search._try_expand_route's vocab/expansion/postings budgets;
+    under search._expand_run's probe/expansion/postings bounds;
     "driver" demands it; "spark" forces the distributed plan."""
-    from igd_spark.search import _materialize_local_queries, _try_expand_route
-
-    routed = _try_expand_route(
-        spark, idx, queries, k, round_dp, engine, like=False,
-        max_expanded_terms=max_expanded_terms, telemetry=telemetry,
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _expand_run(False, k, round_dp, max_expanded_terms), telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -1510,20 +1528,16 @@ def near_match_indexed(
     come from `positional_enumerate`'s shard/term-pruned block scan —
     only the query terms' position blocks are read, never the corpus.
     engine="auto" tries the in-process driver route (LocalSearcher.near_n
-    — zero Spark jobs) under the search._try_positional_route occurrence
-    budgets; "driver" demands it; "spark" forces the distributed plan."""
-    from igd_spark.search import (
-        _materialize_local_queries,
-        _try_positional_route,
-        positional_enumerate,
-        query_terms as _qt,
-    )
+    — zero Spark jobs) under the positional footer bound
+    (search._pos_bounded); "driver" demands it; "spark" forces the
+    distributed plan."""
+    from igd_spark.search import positional_enumerate, query_terms as _qt
 
-    routed = _try_positional_route(
+    routed = _driver_route(
         spark, idx, queries, engine,
-        lambda ls, rows: ls.near_n(rows, window),
         "query_id long, doc_id long, min_span int, n_anchors long",
-        telemetry=telemetry,
+        _pos_bounded(lambda ls, rows: ls.near_n(rows, window)),
+        positional=True, telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -2329,7 +2343,7 @@ def open_field_indexes(
     }
 
 
-def _try_field_route(
+def _field_route(
     spark,
     field_indexes: dict[str, tuple[object, float]],
     queries,
@@ -2339,105 +2353,56 @@ def _try_field_route(
     combine,
     telemetry: dict | None = None,
 ) -> DataFrame | None:
-    """Driver-route admission for the PER-FIELD scorers (multi_field /
-    dis_max over build_field_indexes layouts): one LocalSearcher per field
-    index, each producing its FULL unrounded match map (scored_map_n — a
-    field's non-top-k doc can still win the combined rank), combined in
-    pandas, rounded-then-ranked with the shared tie-break.  Admission =
-    Σ_fields per-field postings bound (each field's batch_cost is the same
-    IO-free dictionary-df budget search_n uses) against
-    driver_search_max_postings; ≤ driver_search_max_queries queries.
+    """Driver route of the PER-FIELD scorers (multi_field / dis_max over
+    build_field_indexes layouts): one LocalSearcher per field index, each
+    producing its FULL unrounded match map (scored_map_n — a field's
+    non-top-k doc can still win the combined rank), combined in pandas,
+    rounded-then-ranked with the shared tie-break.  Cost bound = Σ_fields
+    per-field Σdf (each field's batch_cost is the same IO-free dictionary
+    bound search_n uses); the gate runs on the first field's conf.
     ``combine(pdf) -> pdf`` reduces the boosted per-field rows to one
     (query_id, doc_id, score) per pair."""
-    if engine == "spark":
-        return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
     import numpy as np
     import pandas as pd
 
-    from igd_spark.local import (
-        _round_half_up_spark,
-        _tokenize_one,
-        local_searcher,
-    )
-    from igd_spark.search import (
-        TOPK_SCHEMA,
-        _as_local_rows,
-        _driver_budgets,
-        _stats_small_plan,
-    )
+    from igd_spark.local import _round_half_up_spark, _tokenize_one, local_searcher
 
     first_idx = next(iter(field_indexes.values()))[0]
-    conf = first_idx.conf
-    max_q, max_post = _driver_budgets(conf)
+    split = first_idx.conf.token_split_re
 
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        rows = _as_local_rows(queries)
-    else:
-        if not _stats_small_plan(queries, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"])
-            for r in queries.select("query_id", "query_text").collect()
-        ]
-    import time as _time
-
-    t0 = _time.perf_counter()
-    if len({qid for qid, _ in rows}) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    per_q = {
-        int(qid): sorted(set(_tokenize_one(text, conf.token_split_re)))
-        for qid, text in rows
-    }
-    searchers = {f: local_searcher(idx) for f, (idx, _) in field_indexes.items()}
-    total = 0
-    for f, ls in searchers.items():
-        total += ls.batch_cost(rows)
-    if total > max_post:
-        bail(
-            f"Σ per-field postings bound {total} > "
-            f"driver_search_max_postings={max_post}"
+    def run(_ls, rows, max_post):
+        searchers = {f: local_searcher(idx) for f, (idx, _) in field_indexes.items()}
+        total = _fit(
+            sum(ls.batch_cost(rows) for ls in searchers.values()),
+            max_post, "Σ per-field postings",
         )
-        return None
-    frames = []
-    for f, (idx, boost) in field_indexes.items():
-        pdf = searchers[f].scored_map_n(per_q)
-        if len(pdf):
-            pdf = pdf.assign(score=pdf["score"] * float(boost))
-            frames.append(pdf)
-    if not frames:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    comb = combine(pd.concat(frames, ignore_index=True))
-    if round_dp is not None:
+        per_q = {qid: sorted(set(_tokenize_one(text, split))) for qid, text in rows}
+        frames = []
+        for f, (_, boost) in field_indexes.items():
+            pdf = searchers[f].scored_map_n(per_q)
+            if len(pdf):
+                frames.append(pdf.assign(score=pdf["score"] * float(boost)))
+        if not frames:
+            return [], {"batch_cost_postings": total}
+        comb = combine(pd.concat(frames, ignore_index=True))
+        if round_dp is not None:
+            comb = comb.assign(
+                score=_round_half_up_spark(
+                    comb["score"].to_numpy(dtype=np.float64), round_dp
+                )
+            )
+        comb = comb.sort_values(
+            ["query_id", "score", "doc_id"], ascending=[True, False, True]
+        )
         comb = comb.assign(
-            score=_round_half_up_spark(
-                comb["score"].to_numpy(dtype=np.float64), round_dp
-            )
+            rank=(comb.groupby("query_id").cumcount() + 1).astype("int32")
         )
-    comb = comb.sort_values(
-        ["query_id", "score", "doc_id"], ascending=[True, False, True]
+        comb = comb[comb["rank"] <= int(k)][["query_id", "rank", "doc_id", "score"]]
+        return comb, {"batch_cost_postings": total}
+
+    return _driver_route(
+        spark, first_idx, queries, engine, TOPK_SCHEMA, run, telemetry=telemetry
     )
-    comb = comb.assign(
-        rank=(comb.groupby("query_id").cumcount() + 1).astype("int32")
-    )
-    comb = comb[comb["rank"] <= int(k)][["query_id", "rank", "doc_id", "score"]]
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (_time.perf_counter() - t0)
-        telemetry["batch_cost_postings"] = total
-    return spark.createDataFrame(comb, TOPK_SCHEMA)
 
 
 def _mf_sum_combine(pdf):
@@ -2465,12 +2430,12 @@ def multi_field_bm25_topk_indexed(
     corpus-scan variant, hence the same oracle.
 
     engine="auto" first tries the in-process per-field driver route
-    (_try_field_route — one LocalSearcher per field, full match maps
+    (_field_route — one LocalSearcher per field, full match maps
     combined in pandas) under the summed per-field postings budgets;
     "driver" demands it; "spark" forces the distributed plan."""
     if not field_indexes:
         raise ValueError("field_indexes must contain at least one field")
-    routed = _try_field_route(
+    routed = _field_route(
         spark, field_indexes, queries, k, round_dp, engine,
         _mf_sum_combine, telemetry=telemetry,
     )
@@ -2788,7 +2753,7 @@ def dismax_bm25_topk_indexed(
         g["score"] = g["mx"] + tie * (g["sm"] - g["mx"])
         return g[["query_id", "doc_id", "score"]]
 
-    routed = _try_field_route(
+    routed = _field_route(
         spark, field_indexes, queries, k, round_dp, engine,
         _dm_combine, telemetry=telemetry,
     )
@@ -2926,8 +2891,8 @@ def complete_terms_indexed(
 
     engine="auto" serves the batch driver-side when the dictionary fits
     the probe budget (parquet-footer row count vs
-    ``IndexConf.driver_search_max_postings`` — the `_try_expand_route`
-    admission, IO-free before the decision): one pyarrow starts_with
+    ``IndexConf.driver_search_max_postings`` — the `_expand_run`
+    probe bound, IO-free before the decision): one pyarrow starts_with
     read per uncached prefix set, ms-scale, zero Spark jobs, and the
     matched dictionary slice stays cached for the *scoring* routes (a
     completion followed by searching the completed term hits a warm
@@ -2936,63 +2901,21 @@ def complete_terms_indexed(
     output by construction (same dictionary, same (df desc, term asc)
     rank).  At 10^12 turns the vocabulary outgrows the driver budget and
     "auto" demotes to the distributed plan."""
-    if engine not in ("auto", "driver", "spark"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
-    import time as _time
+    _COMPLETE_SCHEMA = "query_id long, rank int, term string, df long"
 
+    def run(ls, rows, max_post):
+        per_q = {qid: (txt or "").strip().lower() for qid, txt in rows}
+        _fit(ls.probe_rows({p for p in per_q.values() if p}, like=False),
+             max_post, _PROBE_BOUND)
+        return ls.complete(per_q, n=n), {"engine": "driver"}
+
+    routed = _driver_route(
+        spark, idx, queries, engine, _COMPLETE_SCHEMA, run, telemetry=telemetry
+    )
+    if routed is not None:
+        return routed
     import pandas as _pd
 
-    from igd_spark.local import local_searcher
-    from igd_spark.search import (
-        _as_local_rows,
-        _driver_budgets,
-        _materialize_local_queries,
-        _stats_small_plan,
-    )
-
-    _COMPLETE_SCHEMA = "query_id long, rank int, term string, df long"
-    if engine != "spark":
-        _, max_post = _driver_budgets(idx.conf)
-
-        def bail(reason: str) -> None:
-            if engine == "driver":
-                raise ValueError(
-                    f"engine='driver' requested but {reason}; use "
-                    "engine='auto' or 'spark', or raise "
-                    "IndexConf.driver_search_* budgets"
-                )
-
-        rows = None
-        if max_post <= 0:
-            bail("the driver route is disabled (budget <= 0)")
-        elif isinstance(queries, (_pd.DataFrame, list, tuple)):
-            rows = _as_local_rows(queries)
-        elif _stats_small_plan(queries, idx.conf):
-            rows = [
-                (int(r["query_id"]), r["query_text"])
-                for r in queries.select("query_id", "query_text").collect()
-            ]
-        else:
-            bail("the query batch is not provably driver-local")
-        if rows is not None:
-            ls = local_searcher(idx)
-            per_q = {qid: (txt or "").strip().lower() for qid, txt in rows}
-            uncached = [
-                p for p in set(per_q.values())
-                if p and (False, p) not in getattr(ls, "_expand_cache", {})
-            ]
-            if uncached and ls.vocab_rows() > max_post:
-                bail(
-                    f"dictionary has {ls.vocab_rows()} rows > "
-                    f"driver_search_max_postings={max_post} (probe budget)"
-                )
-            else:
-                t0 = _time.perf_counter()
-                pdf = ls.complete(per_q, n=n)
-                if telemetry is not None:
-                    telemetry["route_ms"] = 1000 * (_time.perf_counter() - t0)
-                    telemetry["engine"] = "driver"
-                return spark.createDataFrame(pdf, _COMPLETE_SCHEMA)
     if isinstance(queries, (_pd.DataFrame, list, tuple)):
         queries = _materialize_local_queries(spark, queries)
     if telemetry is not None:
@@ -3952,22 +3875,6 @@ def tfidf_topk(
     return rank_topk(_maybe_round(_tfidf_scored(hits, n_docs), round_dp), k)
 
 
-def _try_sim_route(spark, idx, queries, engine, model, k, lam, round_dp):
-    """Driver route for the alternative similarities: same admission gates
-    as search() (query count + Σdf postings budget priced from the
-    dictionary), kernel = LocalSearcher.sim_topk_n.  Returns None to fall
-    through to the distributed plan."""
-    from igd_spark.search import _stats_small_plan, _try_driver_route
-
-    return _try_driver_route(
-        spark, idx, queries, k, 0, engine, None,
-        lambda df: _stats_small_plan(df, idx.conf),
-        runner=lambda ls, rows: ls.sim_topk_n(
-            rows, model=model, k=k, lam=lam, round_dp=round_dp
-        ),
-    )
-
-
 def tfidf_topk_indexed(
     spark,
     idx,
@@ -3981,12 +3888,13 @@ def tfidf_topk_indexed(
     Zero corpus joins.  engine="auto" serves small batches from the
     in-process kernel (rank-identical, pytest-enforced); "spark" forces
     the distributed plan, "driver" demands the route."""
-    if engine != "spark":
-        routed = _try_sim_route(
-            spark, idx, queries, engine, "tfidf", k, 0.0, round_dp
-        )
-        if routed is not None:
-            return routed
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _df_bounded(lambda ls, rows: ls.sim_topk_n(
+            rows, model="tfidf", k=k, lam=0.0, round_dp=round_dp)),
+    )
+    if routed is not None:
+        return routed
     from igd_spark.search import match_enumerate
 
     n_docs = int(idx.meta["corpus"]["n_docs"])
@@ -4053,12 +3961,13 @@ def lm_jelinek_mercer_topk_indexed(
     """`lm_jelinek_mercer_topk` over a persisted index — enumerated pruned
     blocks supply tf/dl/cf, metadata the exact total token count.  Same
     engine routing as `tfidf_topk_indexed`."""
-    if engine != "spark":
-        routed = _try_sim_route(
-            spark, idx, queries, engine, "lm_jm", k, lam, round_dp
-        )
-        if routed is not None:
-            return routed
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _df_bounded(lambda ls, rows: ls.sim_topk_n(
+            rows, model="lm_jm", k=k, lam=lam, round_dp=round_dp)),
+    )
+    if routed is not None:
+        return routed
     from igd_spark.search import match_enumerate
 
     total = int(idx.meta["corpus"].get("sum_dl", 0))
@@ -4229,12 +4138,13 @@ def dfi_topk_indexed(
     """`dfi_topk` over a persisted index — enumerated pruned blocks supply
     tf/dl/cf, metadata the exact total token count.  Same engine routing
     as `tfidf_topk_indexed`."""
-    if engine != "spark":
-        routed = _try_sim_route(
-            spark, idx, queries, engine, "dfi", k, 0.0, round_dp
-        )
-        if routed is not None:
-            return routed
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _df_bounded(lambda ls, rows: ls.sim_topk_n(
+            rows, model="dfi", k=k, lam=0.0, round_dp=round_dp)),
+    )
+    if routed is not None:
+        return routed
     from igd_spark.search import match_enumerate
 
     total = int(idx.meta["corpus"].get("sum_dl", 0))
@@ -4287,12 +4197,13 @@ def dfr_pl2_topk_indexed(
     supply tf/dl/cf; N and avgdl from the frozen corpus metadata.  Same
     engine routing as `tfidf_topk_indexed`."""
     _require_h2_c(c)
-    if engine != "spark":
-        routed = _try_sim_route(
-            spark, idx, queries, engine, "pl2", k, c, round_dp
-        )
-        if routed is not None:
-            return routed
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _df_bounded(lambda ls, rows: ls.sim_topk_n(
+            rows, model="pl2", k=k, lam=c, round_dp=round_dp)),
+    )
+    if routed is not None:
+        return routed
     from igd_spark.search import match_enumerate
 
     n_docs = int(idx.meta["corpus"]["n_docs"])
@@ -4343,12 +4254,13 @@ def ib_ll_topk_indexed(
     supply tf/dl/df; N and avgdl from the frozen corpus metadata.  Same
     engine routing as `tfidf_topk_indexed`."""
     _require_h2_c(c)
-    if engine != "spark":
-        routed = _try_sim_route(
-            spark, idx, queries, engine, "ib_ll", k, c, round_dp
-        )
-        if routed is not None:
-            return routed
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _df_bounded(lambda ls, rows: ls.sim_topk_n(
+            rows, model="ib_ll", k=k, lam=c, round_dp=round_dp)),
+    )
+    if routed is not None:
+        return routed
     from igd_spark.search import match_enumerate
 
     n_docs = int(idx.meta["corpus"]["n_docs"])
@@ -4443,12 +4355,13 @@ def axiomatic_topk_indexed(
     F2EXP's k; F2LOG ignores it)."""
     if variant not in ("f2exp", "f2log"):
         raise ValueError(f"variant must be f2exp|f2log, got {variant!r}")
-    if engine != "spark":
-        routed = _try_sim_route(
-            spark, idx, queries, engine, f"ax_{variant}", k, k_exp, round_dp
-        )
-        if routed is not None:
-            return routed
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _df_bounded(lambda ls, rows: ls.sim_topk_n(
+            rows, model=f"ax_{variant}", k=k, lam=k_exp, round_dp=round_dp)),
+    )
+    if routed is not None:
+        return routed
     from igd_spark.search import match_enumerate
 
     n_docs = int(idx.meta["corpus"]["n_docs"])
@@ -4560,12 +4473,13 @@ def bm25_variant_topk_indexed(
         raise ValueError(f"variant must be plus|l, got {variant!r}")
     if delta is None:
         delta = _BM25_VARIANT_DELTA[variant]
-    if engine != "spark":
-        routed = _try_sim_route(
-            spark, idx, queries, engine, f"bm25_{variant}", k, delta, round_dp
-        )
-        if routed is not None:
-            return routed
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA,
+        _df_bounded(lambda ls, rows: ls.sim_topk_n(
+            rows, model=f"bm25_{variant}", k=k, lam=delta, round_dp=round_dp)),
+    )
+    if routed is not None:
+        return routed
     from igd_spark.search import match_enumerate
 
     n_docs = int(idx.meta["corpus"]["n_docs"])

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 from igd_spark import codec
 from igd_spark.config import DEFAULT_CONF, IndexConf
 from igd_spark.index import InvertedIndex
+from igd_spark.local import _tokenize_one, _tokenize_ordered, local_searcher
 from igd_spark.scoring import bm25_weight_col, idf_col
 from igd_spark.stats import corpus_stats, doc_stats, term_stats
 from igd_spark.tokenizer import postings, tokens_col
@@ -582,13 +583,19 @@ def _maxscore_kernel(
     return kernel
 
 
-def _as_local_rows(queries) -> list[tuple[int, str]]:
+def _null(v) -> bool:
+    return v is None or v is pd.NA or (isinstance(v, float) and np.isnan(v))
+
+
+def _as_local_rows(queries, extra: str | None = None) -> list[tuple]:
     """Normalize driver-native query input — a pandas DataFrame with
     (query_id, query_text) columns or a list/tuple of (query_id, query_text)
     pairs — to [(qid, text), ...] with the Spark path's null semantics:
     null/NaN text tokenizes to nothing (scored as an empty query), while a
     null query_id is rejected loudly (the Spark path would silently group
-    under NULL; here int() has no meaning for it).
+    under NULL; here int() has no meaning for it). ``extra`` names a third,
+    nullable column (a pandas column, or each tuple's third item) carried
+    as (qid, text, extra).
 
     The reference's query input is a FILE read in-process
     (src/igd_search.c:696-719) — driver-local by construction. A PySpark
@@ -596,16 +603,22 @@ def _as_local_rows(queries) -> list[tuple[int, str]]:
     full collect job (~0.5 s of scheduling + Python-worker roundtrip) just
     to get the rows BACK; accepting the driver-native forms erases that."""
     if isinstance(queries, pd.DataFrame):
-        pairs = zip(queries["query_id"], queries["query_text"])
+        cols = ["query_id", "query_text"] + ([extra] if extra else [])
+        it = zip(*(queries[c] for c in cols))
     else:
-        pairs = iter(queries)
+        it = iter(queries)
     rows = []
-    for q, t in pairs:
-        if q is None or (isinstance(q, float) and np.isnan(q)):
+    for r in it:
+        q, t = r[0], r[1]
+        if _null(q):
             raise ValueError("driver-native query input requires a non-null query_id")
-        if t is None or (isinstance(t, float) and np.isnan(t)):
+        if _null(t):
             t = ""
-        rows.append((int(q), t))
+        if extra is None:
+            rows.append((int(q), t))
+        else:
+            e = r[2] if len(r) > 2 else None
+            rows.append((int(q), t, None if _null(e) else e))
     return rows
 
 
@@ -642,11 +655,19 @@ def _driver_budgets(conf: IndexConf) -> tuple[int, int]:
 
 def _stats_small_plan(df: DataFrame, conf: IndexConf) -> bool:
     """Is this query batch provably small enough for a one-collect
-    prologue? Decided from FREE Catalyst statistics (no job). Three tiers
-    (see the search() docstring for the rationale):
+    prologue (≤ IGD_SEARCH_SMALL_MAX_ROWS queries)? Decided from FREE
+    Catalyst statistics (no job, and no limit(): CollectLimit probes
+    partitions in sequential mini-jobs and costs more wall time than the
+    straight collect it guards). Three tiers:
       1. rowCount defined (LocalRelation, post-agg plans) → compare rows.
-      2. every leaf is driver-local (LogicalRDD / LocalRelation /
-         OneRowRelation) → the data originated in driver memory → small.
+      2. every leaf is driver-local (LogicalRDD — every PySpark
+         createDataFrame batch — / LocalRelation / OneRowRelation) → the
+         data originated in driver memory, bounded BY CONSTRUCTION →
+         small. Without this tier LogicalRDD's unknown-stats sentinel
+         (sizeInBytes == 2^63-1, or selectivity-scaled garbage like
+         0.44*2^63 under a filter) sent every realistic caller — search_one
+         included — down the unpruned huge-batch path: no shard partition
+         pruning, no In(term_id) pushdown, a full segment scan per batch.
       3. known sizeInBytes (file scans) → compare bytes. Unknown-stats
          plans with non-local leaves (streaming sources) → huge."""
     import os as _os
@@ -702,343 +723,182 @@ def _tombstones_bc(spark: SparkSession, idx: InvertedIndex):
     return bc
 
 
-def _try_driver_route(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    queries: DataFrame,
-    k: int,
-    min_tf: int,
-    engine: str,
-    telemetry: dict | None,
-    stats_small,
-    local_rows: list[tuple[int, str]] | None = None,
-    runner=None,
-    carry: dict | None = None,
-) -> DataFrame | None:
-    """Route a small batch to the in-process kernel (LocalSearcher.search_n —
-    zero Spark jobs, erases the ~2.5-3 s per-batch scheduling floor, the
-    getOverlaps whole-query-file analog, src_py/igd_search.c:104-128).
-
-    Taken only when ALL hold (each a 100 TB guard):
-      * the batch is provably driver-local/bounded (same Catalyst-stats
-        test as the small-prologue path — no unbounded collect);
-      * ≤ conf.driver_search_max_queries distinct queries;
-      * the exact scoring work Σ_q Σ_{t∈q} df(t) — known from the
-        dictionary BEFORE any block IO — fits
-        conf.driver_search_max_postings, so a hot-term batch over a
-        trillion-turn index goes to the cluster no matter how few queries.
-    Returns None to fall through to the distributed plan ("auto"); with
-    engine="driver" a budget miss raises instead (explicit ask, loud no)."""
-    from igd_spark.local import local_searcher
-
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
-
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
+def _batch_rows(queries, conf: IndexConf, extra: str | None = None) -> list[tuple] | None:
+    """The locality decision: driver-native input → its rows
+    (_as_local_rows); a Spark frame whose plan is provably small
+    (_stats_small_plan, no job) → ONE collect; anything else → None."""
+    if isinstance(queries, (pd.DataFrame, list, tuple)):
+        return _as_local_rows(queries, extra)
+    if not _stats_small_plan(queries, conf):
         return None
-    if local_rows is None and not stats_small(queries):
-        bail("the query batch is not provably driver-local")
-        return None
-    t0 = time.perf_counter()
-    rows = (
-        local_rows
-        if local_rows is not None
-        else [
-            (int(r["query_id"]), r["query_text"])
-            for r in queries.select("query_id", "query_text").collect()
-        ]
-    )
-    # a demoted batch hands its collected rows to the spark-small prologue
-    # (carry) so the distributed path never re-collects the query frame
-    if carry is not None:
-        carry["rows"] = rows
-    n_q = len({qid for qid, _ in rows})
-    if n_q > max_q:
-        bail(f"batch has {n_q} queries > driver_search_max_queries={max_q}")
-        return None
-    ls = local_searcher(idx)
-    cost = ls.batch_cost(rows)
-    if cost > max_post:
-        bail(f"batch scores {cost} postings > driver_search_max_postings={max_post}")
-        return None
-    # runner overrides the kernel (alternative-similarity routes) while
-    # keeping the admission gates above identical — Σdf prices the full
-    # match map those kernels score
-    if runner is not None:
-        pdf = runner(ls, rows)
-    else:
-        pdf = ls.search_n(rows, k=k, min_tf=min_tf, telemetry=telemetry)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["batch_cost_postings"] = cost
-    return spark.createDataFrame(pdf, TOPK_SCHEMA)
+    cols = ["query_id", "query_text"] + ([extra] if extra else [])
+    return [(int(r[0]), *r[1:]) for r in queries.select(*cols).collect()]
 
 
-def _try_expand_route(
+def _check_engine(engine: str) -> None:
+    if engine not in ("auto", "driver", "spark"):
+        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
+
+
+class _Demote(Exception):
+    """A driver-route admission check the batch fails (the message is the
+    reason): engine="auto" falls through to the distributed plan,
+    engine="driver" raises it as a ValueError."""
+
+
+def _fit(n: int, max_post: int, what: str) -> int:
+    """``n`` when it fits driver_search_max_postings, else _Demote."""
+    if n > max_post:
+        raise _Demote(f"{what} {n} > driver_search_max_postings={max_post}")
+    return n
+
+
+_HITS_SCHEMA = "query_id long, doc_id long, n_hits long"
+_PROBE_BOUND = "expansion probe budget: dictionary rows"
+_POS_BOUND = "positional footer bound"
+
+
+def _driver_route(
     spark: SparkSession,
     idx: InvertedIndex,
     queries,
-    k: int,
-    round_dp: int | None,
     engine: str,
-    like: bool,
-    max_expanded_terms: int,
+    schema: str,
+    run,
+    *,
+    positional: bool = False,
+    refuse: str | None = None,
+    extra: str | None = None,
     telemetry: dict | None = None,
 ) -> DataFrame | None:
-    """Driver-route admission for the dictionary-expansion scorers
-    (prefix_bm25_topk_indexed / wildcard_bm25_topk_indexed).  Three-tier,
-    IO-free-first: (1) the parquet-footer VOCAB row count must fit the
-    postings budget — the pattern probe reads the dictionary's term
-    column, so a 10^12-turn vocabulary demotes before any IO; (2) the
-    expansion is capped by ``max_expanded_terms`` with the SAME loud
-    ValueError as the distributed path (_collect_expansion — a cap hit is
-    a contract violation on both engines, never a silent demotion);
-    (3) the expanded terms' Σdf must fit the postings budget."""
+    """The one admission gate of every driver-routed operator: run a small
+    batch on an in-process LocalSearcher kernel — zero Spark jobs, no
+    ~2.5-3 s per-batch scheduling floor (the getOverlaps whole-query-file
+    analog, src_py/igd_search.c:104-128) — or return None for the
+    distributed plan.
+
+    Checks, IO-free first, each a 100 TB guard:
+      1. ``refuse``: a reason the operator's arguments already rule the
+         route out (per-query frames the kernels cannot take);
+      2. ``positional`` operators need a store_positions index;
+      3. the route is not disabled (a driver_search_* budget <= 0);
+      4. locality (_batch_rows): driver-native rows, or one collect of a
+         provably small Spark plan — never an unbounded collect;
+      5. ≤ driver_search_max_queries distinct queries;
+      6. the operator's cost bound, checked by ``run(ls, rows, max_post)``
+         before its kernel: the Σdf postings bound (_df_bounded), the
+         positional footer bound (_POS_BOUND) or the dictionary probe bound
+         (_PROBE_BOUND) — all known before any block IO, so a hot batch
+         over a trillion-turn index demotes no matter how few queries.
+    ``run`` raises _Demote on a miss, else returns (result rows for
+    ``schema``, telemetry entries). A miss returns None under "auto" and
+    raises ValueError under "driver" (explicit ask, loud no); "spark"
+    returns None at once. ``extra`` carries one more query column per row
+    (see _as_local_rows)."""
+    _check_engine(engine)
     if engine == "spark":
         return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
+    max_q, max_post = _driver_budgets(idx.conf)
+    try:
+        if refuse:
+            raise _Demote(refuse)
+        if positional and not idx.conf.store_positions:
+            raise _Demote("the index stores no positions")
+        if max_q <= 0 or max_post <= 0:
+            raise _Demote("the driver route is disabled (budget <= 0)")
+        rows = _batch_rows(queries, idx.conf, extra)
+        if rows is None:
+            raise _Demote("the query batch is not provably driver-local")
+        t0 = time.perf_counter()
+        n_q = len({r[0] for r in rows})
+        if n_q > max_q:
+            raise _Demote(f"batch has {n_q} queries > driver_search_max_queries={max_q}")
+        result, stats = run(local_searcher(idx), rows, max_post)
+    except _Demote as why:
+        if engine == "driver":
+            raise ValueError(
+                f"engine='driver' requested but {why}; use engine='auto' "
+                "or 'spark', or raise IndexConf.driver_search_* budgets"
+            ) from None
+        return None
+    if telemetry is not None:
+        telemetry.update(stats, route_ms=1000 * (time.perf_counter() - t0))
+    return spark.createDataFrame(result, schema)
+
+
+def _df_bounded(kernel):
+    """``run`` for the BM25-family kernels: the Σdf bound — Σ_q Σ_{t∈q}
+    df(t), the exact postings the kernel scores, from the dictionary alone
+    — then ``kernel(ls, rows)``."""
+
+    def run(ls, rows, max_post):
+        cost = _fit(ls.batch_cost(rows), max_post, "batch postings")
+        return kernel(ls, rows), {"batch_cost_postings": cost}
+
+    return run
+
+
+def _pos_bounded(kernel):
+    """``run`` for the positional kernels over the full tokenized text:
+    positions carry every occurrence, not one posting per doc, so the
+    bound is LocalSearcher.pos_batch_cost's parquet-FOOTER bound (zero
+    data IO) — then ``kernel(ls, rows)``."""
+
+    def run(ls, rows, max_post):
+        bound = _fit(ls.pos_batch_cost([t for _, t in rows]), max_post, _POS_BOUND)
+        return kernel(ls, rows), {"pos_cost_bound": bound}
+
+    return run
+
+
+def _expand_run(like: bool, k: int, round_dp: int | None, max_expanded_terms: int):
+    """``run`` for the dictionary-expansion scorers
+    (prefix_bm25_topk_indexed / wildcard_bm25_topk_indexed): (1) the
+    dictionary probe bound; (2) the expansion is capped by
+    ``max_expanded_terms`` with the SAME loud ValueError as the distributed
+    path (_collect_expansion — a cap hit is a contract violation on both
+    engines, never a silent demotion); (3) the expanded terms' Σdf."""
     import re as _re
 
-    from igd_spark.local import _tokenize_one, local_searcher
-
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
-
-    def bail(reason: str) -> None:
-        if engine == "driver":
+    def run(ls, rows, max_post):
+        per_q_pats: dict[int, set[str]] = {}
+        for qid, text in rows:
+            if like:
+                # _wildcard_patterns parity: tokens keep the * / ? metachars
+                toks = {
+                    t for t in _re.split(r"[^a-z0-9*?]+", (text or "").lower()) if t
+                }
+                toks = {t.translate(str.maketrans("*?", "%_")) for t in toks}
+            else:
+                toks = set(_tokenize_one(text, ls.conf.token_split_re))
+            per_q_pats.setdefault(qid, set()).update(toks)
+        all_pats = sorted(set().union(*per_q_pats.values()) if per_q_pats else set())
+        if not all_pats:
+            return [], {}
+        _fit(ls.probe_rows(all_pats, like), max_post, _PROBE_BOUND)
+        exp = ls.expand_patterns(all_pats, like=like)
+        per_q = {
+            qid: sorted(set().union(*(exp[p] for p in pats)) if pats else set())
+            for qid, pats in per_q_pats.items()
+        }
+        n_pairs = sum(len(ts) for ts in per_q.values())
+        if n_pairs > max_expanded_terms:
+            what = "wildcard" if like else "prefix"
             raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
+                f"{what} expansion exceeds max_expanded_terms={max_expanded_terms};"
+                f" raise the cap or use the corpus-scan {what} path "
+                "(distributed expansion)"
             )
-
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        rows = _as_local_rows(queries)
-    else:
-        if not _stats_small_plan(queries, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"])
-            for r in queries.select("query_id", "query_text").collect()
-        ]
-    t0 = time.perf_counter()
-    per_q_pats: dict[int, set[str]] = {}
-    for qid, text in rows:
-        if like:
-            # _wildcard_patterns parity: tokens keep the * / ? metachars
-            toks = {
-                t for t in _re.split(r"[^a-z0-9*?]+", (text or "").lower()) if t
-            }
-            toks = {t.translate(str.maketrans("*?", "%_")) for t in toks}
-        else:
-            toks = set(_tokenize_one(text, conf.token_split_re))
-        per_q_pats.setdefault(int(qid), set()).update(toks)
-    if len(per_q_pats) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    ls = local_searcher(idx)
-    all_pats = sorted(set().union(*per_q_pats.values()) if per_q_pats else set())
-    if not all_pats:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    uncached = [
-        p for p in all_pats
-        if (like, p) not in getattr(ls, "_expand_cache", {})
-    ]
-    if uncached and ls.vocab_rows() > max_post:
-        bail(
-            f"dictionary has {ls.vocab_rows()} rows > "
-            f"driver_search_max_postings={max_post} (expansion probe budget)"
+        tmap = ls._lookup_terms(sorted(set().union(*per_q.values()) if per_q else set()))
+        cost = _fit(
+            sum(tmap[t][1] for ts in per_q.values() for t in ts if t in tmap),
+            max_post, "expansion postings",
         )
-        return None
-    exp = ls.expand_patterns(all_pats, like=like)
-    per_q = {
-        qid: sorted(set().union(*(exp[p] for p in pats)) if pats else set())
-        for qid, pats in per_q_pats.items()
-    }
-    n_pairs = sum(len(ts) for ts in per_q.values())
-    if n_pairs > max_expanded_terms:
-        # the SAME contract as the distributed cap — loud, engine-independent
-        what = "wildcard" if like else "prefix"
-        raise ValueError(
-            f"{what} expansion exceeds max_expanded_terms={max_expanded_terms};"
-            f" raise the cap or use the corpus-scan {what} path "
-            "(distributed expansion)"
-        )
-    tmap = ls._lookup_terms(sorted(set().union(*per_q.values()) if per_q else set()))
-    cost = sum(tmap[t][1] for ts in per_q.values() for t in ts if t in tmap)
-    if cost > max_post:
-        bail(f"expansion scores {cost} postings > driver_search_max_postings={max_post}")
-        return None
-    pdf = ls.score_terms_n(per_q, k=k, round_dp=round_dp)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["expanded_terms"] = n_pairs
-        telemetry["batch_cost_postings"] = cost
-    return spark.createDataFrame(pdf, TOPK_SCHEMA)
+        return ls.score_terms_n(per_q, k=k, round_dp=round_dp), {
+            "expanded_terms": n_pairs, "batch_cost_postings": cost,
+        }
 
-
-def _try_bool_route(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    queries,
-    exclude_col: str | None,
-    k: int,
-    round_dp: int | None,
-    engine: str,
-    telemetry: dict | None = None,
-) -> DataFrame | None:
-    """Driver-route admission for conjunctive boolean retrieval
-    (bool_bm25_topk_indexed): LocalSearcher.bool_n under the SAME
-    dictionary-df postings budget as the BM25 route — the cost covers the
-    conjunctive AND the exclude terms' lists, both of which the kernel
-    reads.  Returns None to fall through ("auto"); engine="driver" raises
-    on a budget miss."""
-    if engine == "spark":
-        return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
-    from igd_spark.local import local_searcher
-
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
-
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    cols = ["query_id", "query_text"] + ([exclude_col] if exclude_col else [])
-    if isinstance(queries, (list, tuple)):
-        rows = [
-            (int(r[0]), r[1], (r[2] if exclude_col and len(r) > 2 else None))
-            for r in queries
-        ]
-    elif isinstance(queries, pd.DataFrame):
-        rows = [
-            (int(r[0]), None if pd.isna(r[1]) else r[1],
-             None if not exclude_col or pd.isna(r[2]) else r[2])
-            for r in queries[cols].itertuples(index=False)
-        ] if exclude_col else [
-            (int(r[0]), None if pd.isna(r[1]) else r[1], None)
-            for r in queries[cols].itertuples(index=False)
-        ]
-    else:
-        if not _stats_small_plan(queries, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"],
-             r[exclude_col] if exclude_col else None)
-            for r in queries.select(*cols).collect()
-        ]
-    t0 = time.perf_counter()
-    if len({qid for qid, _, _ in rows}) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    ls = local_searcher(idx)
-    cost = ls.batch_cost(
-        [(q, f"{t or ''} {e or ''}") for q, t, e in rows]
-    )
-    if cost > max_post:
-        bail(f"batch scores {cost} postings > driver_search_max_postings={max_post}")
-        return None
-    pdf = ls.bool_n(rows, k=k, round_dp=round_dp)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["batch_cost_postings"] = cost
-    return spark.createDataFrame(pdf, TOPK_SCHEMA)
-
-
-def _try_positional_route(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    queries,
-    engine: str,
-    compute,
-    schema: str,
-    telemetry: dict | None = None,
-) -> DataFrame | None:
-    """Driver-route admission for the POSITIONAL operators (phrase / NEAR /
-    span_first `*_indexed`) — the in-process siblings that erase the
-    per-batch Spark scheduling floor for interactive proximity queries,
-    exactly like _try_driver_route does for BM25 (the getOverlaps
-    in-process analog, src_py/igd_py.pyx:31-38).
-
-    Admission mirrors _try_driver_route but budgets OCCURRENCES (positions
-    carry every occurrence, not one posting per doc): the batch must be
-    provably driver-local, ≤ driver_search_max_queries distinct queries,
-    and LocalSearcher.pos_batch_cost's parquet-FOOTER bound (zero data IO)
-    must fit driver_search_max_postings — a stopword phrase over a
-    trillion-turn index demotes to the cluster before reading a byte.
-    ``compute(ls, rows) -> pd.DataFrame`` runs the kernel; returns None to
-    fall through to the distributed plan ("auto"); engine="driver" raises
-    on a budget miss (explicit ask, loud no)."""
-    if engine == "spark":
-        return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
-    from igd_spark.local import local_searcher
-
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
-
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if not conf.store_positions:
-        bail("the index stores no positions")
-        return None
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        rows = _as_local_rows(queries)
-    else:
-        if not _stats_small_plan(queries, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"])
-            for r in queries.select("query_id", "query_text").collect()
-        ]
-    t0 = time.perf_counter()
-    if len({qid for qid, _ in rows}) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    ls = local_searcher(idx)
-    ok, bound = ls.pos_batch_cost([t for _, t in rows], max_post)
-    if not ok:
-        bail(
-            f"positional footer bound {bound} occurrences > "
-            f"driver_search_max_postings={max_post}"
-        )
-        return None
-    pdf = compute(ls, rows)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["pos_cost_bound"] = bound
-    return spark.createDataFrame(pdf, schema)
+    return run
 
 
 def search(
@@ -1064,10 +924,13 @@ def search(
     engine="auto" (default) picks between two rank-identical executions:
     small batches whose total scoring work fits the driver budgets run on
     the in-process kernel (igd_spark.local — zero Spark jobs, ms-scale;
-    see _try_driver_route for the exact admission rule), everything else
+    see _driver_route for the admission order), everything else
     runs the distributed plan below. engine="spark" forces the distributed
-    plan (plan audits, parity oracle); engine="driver" demands the
-    in-process path and raises if the batch exceeds its budgets.
+    plan (plan audits, parity oracle); on a small batch its prologue still
+    reads the dictionary slice on the driver (LocalSearcher._lookup_terms,
+    pyarrow), so idx.path must be readable from the driver.
+    engine="driver" demands the in-process path and raises if the batch
+    exceeds its budgets.
 
     Distributed physical plan: dictionary ⋈(broadcast queries) → term_id
     list → segment scan pruned by shard partition values + term_id
@@ -1094,14 +957,9 @@ def search(
     from igd_spark.build import shards_for
     from igd_spark.session import kernel_parallelism
 
-    if engine not in ("auto", "spark", "driver"):
-        raise ValueError("engine must be 'auto', 'spark', or 'driver'")
-
-    # driver-native query input (pandas DataFrame / list of pairs — the
-    # query-FILE analog): already in driver memory, so the driver route
-    # needs no collect job at all; only materialize a Spark DataFrame if
-    # the batch falls through to the distributed plan
-    is_local_input = isinstance(queries, (pd.DataFrame, list, tuple))
+    _check_engine(engine)
+    if n_buckets is not None:  # a distributed-plan knob: no driver route
+        engine = "spark"
 
     def pick_buckets(n_queries: int) -> int:
         # target ~64 queries per bucket: block-dedup within a bucket
@@ -1114,69 +972,29 @@ def search(
         nb = max(min(8, n_queries), -(-n_queries // 64))
         return max(1, kernel_parallelism(spark, nb))
 
-    # path choice from FREE Catalyst statistics (no job, and no limit():
-    # CollectLimit probes partitions in sequential mini-jobs and costs more
-    # wall time than the straight collect it guards).
-    #
-    # Contract: "small" ⇔ the query batch provably fits the one-collect
-    # prologue (≤ IGD_SEARCH_SMALL_MAX_ROWS queries). Three tiers:
-    #   1. rowCount defined (LocalRelation, post-agg plans) → compare rows.
-    #   2. every leaf is driver-local (LogicalRDD — i.e. every PySpark
-    #      createDataFrame batch — / LocalRelation / OneRowRelation): the
-    #      data originated in driver memory, so it is bounded by driver
-    #      memory BY CONSTRUCTION → small. Without this tier, LogicalRDD's
-    #      unknown-stats sentinel (sizeInBytes == 2^63-1, and selectivity-
-    #      scaled garbage like 0.44*2^63 once a filter sits on top) sent
-    #      every realistic caller — including search_one — down the
-    #      unpruned huge-batch path: no shard partition pruning, no
-    #      In(term_id) pushdown, a full segment scan per batch.
-    #   3. known sizeInBytes (file scans) → compare bytes. Unknown-stats
-    #      plans with non-local leaves (streaming sources etc.) → huge.
-    def _stats_small(df: DataFrame) -> bool:
-        return _stats_small_plan(df, conf)
-
-    # --- driver route (engine auto/driver): in-process kernel, zero jobs ---
-    carry_rows: list[tuple[int, str]] | None = None
-    if engine != "spark" and n_buckets is None:
-        local_rows = None
-        if is_local_input:
-            # pandas pre-gate: reject over-budget batches on a vectorized
-            # distinct count BEFORE building n python tuples — the demoted
-            # case is exactly the large-batch one
-            over = isinstance(queries, pd.DataFrame) and queries[
-                "query_id"
-            ].nunique(dropna=False) > _driver_budgets(conf)[0]
-            if not over:
-                local_rows = _as_local_rows(queries)
-            elif engine == "driver":
-                raise ValueError(
-                    "engine='driver' requested but the batch exceeds "
-                    "driver_search_max_queries; use engine='auto' or 'spark', "
-                    "or raise IndexConf.driver_search_* budgets"
-                )
-        if local_rows is not None or not is_local_input:
-            carry: dict = {}
-            routed = _try_driver_route(
-                spark, idx, queries, k, min_tf, engine, telemetry,
-                _stats_small, local_rows=local_rows, carry=carry,
-            )
-            if routed is not None:
-                return routed
-            carry_rows = carry.get("rows")
-    if carry_rows is None and is_local_input:
-        # local input always takes the driver-derived prologue below —
-        # its rows are already in driver memory
-        carry_rows = _as_local_rows(queries)
-    if is_local_input:
-        queries = _materialize_local_queries(spark, queries)
+    # Locality, decided once (_batch_rows): driver-native rows, ONE collect
+    # of a provably small plan, or None (the unbounded path). The same rows
+    # feed the driver route and, if it demotes the batch, the small
+    # prologue. engine="driver" leaves the collect to the gate, after its
+    # IO-free checks: a refused batch raises and never reaches the prologue.
+    rows = None if engine == "driver" else _batch_rows(queries, conf)
+    routed = _driver_route(
+        spark, idx, queries if rows is None else rows, engine, TOPK_SCHEMA,
+        _df_bounded(
+            lambda ls, r: ls.search_n(r, k=k, min_tf=min_tf, telemetry=telemetry)
+        ),
+        telemetry=telemetry,
+    )
+    if routed is not None:
+        return routed
 
     # --- distributed plan ---------------------------------------------------
     t_prologue = time.perf_counter()
     seg = idx.segments
-    if _stats_small(queries):
+    if rows is not None:
         # small-batch fast path: the prologue is fully driver-derived.
-        # Query rows come from the demoted driver-route attempt (carry) or
-        # ONE collect; the dictionary slice comes from the LocalSearcher's
+        # Query rows come from the locality decision above; the
+        # dictionary slice comes from the LocalSearcher's
         # footer/row-group-pruned parquet reads with its per-handle term
         # cache — no Spark job, where the broadcast-join + collect this
         # replaces cost a full dictionary-scan job per batch (~0.5-1 s of
@@ -1184,15 +1002,8 @@ def search(
         # expression order in doubles; ln() drift vs the JVM is absorbed
         # by the engine-wide round-before-rank discipline (same tolerance
         # the DuckDB oracles already rely on).
-        from igd_spark.local import _tokenize_one, local_searcher
-
-        if carry_rows is None:
-            carry_rows = [
-                (int(r["query_id"]), r["query_text"])
-                for r in queries.select("query_id", "query_text").collect()
-            ]
         per_q: dict[int, set] = {}
-        for qid, text in carry_rows:
+        for qid, text in rows:
             per_q.setdefault(int(qid), set()).update(
                 _tokenize_one(text, conf.token_split_re)
             )
@@ -1496,13 +1307,14 @@ def phrase_match_indexed(
 
     engine="auto" (default) first tries the in-process driver route
     (LocalSearcher.phrase_n — zero Spark jobs, ms-scale warm) under the
-    same occurrence budgets as _try_positional_route; "driver" demands it
+    positional footer bound (_pos_bounded); "driver" demands it
     (raises on budget miss); "spark" forces the distributed plan."""
     conf = idx.conf
-    out_empty = "query_id long, doc_id long, n_hits long"
-    routed = _try_positional_route(
-        spark, idx, phrases, engine,
-        lambda ls, rows: ls.phrase_n(rows), out_empty, telemetry=telemetry,
+    out_empty = _HITS_SCHEMA
+    routed = _driver_route(
+        spark, idx, phrases, engine, out_empty,
+        _pos_bounded(lambda ls, rows: ls.phrase_n(rows)),
+        positional=True, telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -1631,93 +1443,6 @@ def match_phrase_prefix(
     return _anchor_hits(j, plen)
 
 
-def _try_phrase_prefix_route(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    phrases,
-    max_expansions: int,
-    engine: str,
-    telemetry: dict | None = None,
-) -> DataFrame | None:
-    """Driver-route admission for match_phrase_prefix — the search-as-you-
-    type query is THE interactive positional shape (one keystroke per
-    call), so it gets the same in-process path as phrase/NEAR/expansion.
-    Admission composes the two existing gates, all IO-free-first: the
-    dictionary probe is budgeted by parquet-footer vocab rows (the
-    _try_expand_route tier-1 bound), then the LITERAL + CAPPED-EXPANSION
-    term set's positional footprint by footer row counts
-    (pos_terms_cost).  Returns None to fall through ("auto");
-    engine="driver" raises on any budget miss."""
-    if engine == "spark":
-        return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
-    from igd_spark.local import local_searcher
-
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
-
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if not conf.store_positions:
-        bail("the index stores no positions")
-        return None
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    if isinstance(phrases, (pd.DataFrame, list, tuple)):
-        rows = _as_local_rows(phrases)
-    else:
-        if not _stats_small_plan(phrases, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"])
-            for r in phrases.select("query_id", "query_text").collect()
-        ]
-    t0 = time.perf_counter()
-    if len({qid for qid, _ in rows}) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    ls = local_searcher(idx)
-    from igd_spark.local import _tokenize_ordered
-
-    prefixes = {
-        toks[-1]
-        for _, text in rows
-        if (toks := _tokenize_ordered(text, conf.token_split_re))
-    }
-    uncached = [
-        p for p in prefixes
-        if (False, p) not in getattr(ls, "_expand_cache", {})
-    ]
-    if uncached and ls.vocab_rows() > max_post:
-        bail(
-            f"dictionary has {ls.vocab_rows()} rows > "
-            f"driver_search_max_postings={max_post} (expansion probe budget)"
-        )
-        return None
-    per_q, all_terms = ls.phrase_prefix_terms(rows, max_expansions)
-    ok, bound = ls.pos_terms_cost(sorted(all_terms), max_post)
-    if not ok:
-        bail(
-            f"positional footer bound {bound} occurrences > "
-            f"driver_search_max_postings={max_post}"
-        )
-        return None
-    pdf = ls.phrase_prefix_n(rows, max_expansions)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["pos_cost_bound"] = bound
-        telemetry["expanded_terms"] = sum(len(g) for _, g in per_q.values())
-    return spark.createDataFrame(pdf, "query_id long, doc_id long, n_hits long")
-
-
 def match_phrase_prefix_indexed(
     spark: SparkSession,
     idx: InvertedIndex,
@@ -1744,12 +1469,29 @@ def match_phrase_prefix_indexed(
 
     engine="auto" (default) first tries the in-process driver route
     (LocalSearcher.phrase_prefix_n — zero Spark jobs, the per-keystroke
-    path) under _try_phrase_prefix_route's vocab + occurrence budgets;
+    path), admitted IO-free-first by the dictionary probe bound, then the
+    LITERAL + CAPPED-EXPANSION term set's positional footer bound;
     "driver" demands it; "spark" forces the distributed plan."""
     conf = idx.conf
-    out_empty = "query_id long, doc_id long, n_hits long"
-    routed = _try_phrase_prefix_route(
-        spark, idx, phrases, max_expansions, engine, telemetry=telemetry
+    out_empty = _HITS_SCHEMA
+
+    def run(ls, rows, max_post):
+        prefixes = {
+            toks[-1]
+            for _, text in rows
+            if (toks := _tokenize_ordered(text, conf.token_split_re))
+        }
+        _fit(ls.probe_rows(prefixes, like=False), max_post, _PROBE_BOUND)
+        per_q, all_terms = ls.phrase_prefix_terms(rows, max_expansions)
+        bound = _fit(ls.pos_terms_cost(all_terms), max_post, _POS_BOUND)
+        return ls.phrase_prefix_n(rows, max_expansions), {
+            "pos_cost_bound": bound,
+            "expanded_terms": sum(len(g) for _, g in per_q.values()),
+        }
+
+    routed = _driver_route(
+        spark, idx, phrases, engine, out_empty, run,
+        positional=True, telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -1930,11 +1672,11 @@ def intervals_match_indexed(
     (LocalSearcher.intervals_n) under the positional occurrence budgets;
     "driver" demands it; "spark" forces the distributed plan."""
     conf = idx.conf
-    routed = _try_positional_route(
+    routed = _driver_route(
         spark, idx, queries, engine,
-        lambda ls, rows: ls.intervals_n(rows, max_gaps),
         "query_id long, doc_id long, n_anchors long, min_gaps int",
-        telemetry=telemetry,
+        _pos_bounded(lambda ls, rows: ls.intervals_n(rows, max_gaps)),
+        positional=True, telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -2284,15 +2026,14 @@ def span_first_match_indexed(
     query terms' positional blocks are read (shard partitions +
     In(term_id) row-group pruning via `positional_enumerate`), tombstones
     respected.  engine="auto" tries the in-process driver route
-    (LocalSearcher.span_first_n) under the _try_positional_route budgets;
+    (LocalSearcher.span_first_n) under the positional footer bound;
     "driver" demands it; "spark" forces the distributed plan."""
     if end <= 0:
         raise ValueError(f"end must be positive, got {end}")
-    routed = _try_positional_route(
-        spark, idx, queries, engine,
-        lambda ls, rows: ls.span_first_n(rows, end),
-        "query_id long, doc_id long, n_hits long",
-        telemetry=telemetry,
+    routed = _driver_route(
+        spark, idx, queries, engine, _HITS_SCHEMA,
+        _pos_bounded(lambda ls, rows: ls.span_first_n(rows, end)),
+        positional=True, telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -2403,8 +2144,22 @@ def span_not_match_indexed(
     admitted by the exact (query tokens + exclusion terms) footer
     occurrence bound; "driver" demands it; "spark" forces the
     distributed plan."""
-    routed = _try_span_not_route(
-        spark, idx, queries, exclude, pre, post, engine, telemetry
+    if pre < 0 or post < 0:
+        raise ValueError("pre and post must be >= 0")
+
+    def run(ls, rows, max_post):
+        split = ls.conf.token_split_re
+        terms = set(_tokenize_ordered(exclude, split))
+        for _, text in rows:
+            terms.update(_tokenize_ordered(text, split))
+        bound = _fit(ls.pos_terms_cost(terms), max_post, _POS_BOUND)
+        return ls.span_not_n(rows, exclude, pre, post), {"pos_cost_bound": bound}
+
+    routed = _driver_route(
+        spark, idx, queries, engine, _HITS_SCHEMA, run, positional=True,
+        refuse=None if isinstance(exclude, str) else (
+            "per-query exclusion frames only run on the distributed plan"),
+        telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -2622,7 +2377,7 @@ def span_containing_match_indexed(
     (LocalSearcher.span_pair_n) when ``little`` is a shared string,
     admitted by the exact term set's footer occurrence bound; "driver"
     demands it; "spark" forces the distributed plan."""
-    routed = _try_span_pair_route(
+    routed = _span_pair_route(
         spark, idx, queries, little, span, engine, "containing", telemetry
     )
     if routed is not None:
@@ -2642,7 +2397,7 @@ def span_within_match_indexed(
 ) -> DataFrame:
     """`span_within_match` off the persisted positional index — same
     engine routing as `span_containing_match_indexed`."""
-    routed = _try_span_pair_route(
+    routed = _span_pair_route(
         spark, idx, queries, little, span, engine, "within", telemetry
     )
     if routed is not None:
@@ -2751,8 +2506,18 @@ def span_or_match_indexed(
     union stream computable once)."""
     if span < 1:
         raise ValueError(f"span must be >= 1, got {span}")
-    routed = _try_span_or_route(
-        spark, idx, queries, alternatives, span, engine, telemetry
+    def run(ls, rows, max_post):
+        split = ls.conf.token_split_re
+        terms = set(_tokenize_ordered(alternatives, split))
+        terms.update(t[0] for _, text in rows if (t := _tokenize_ordered(text, split)))
+        bound = _fit(ls.pos_terms_cost(terms), max_post, _POS_BOUND)
+        return ls.span_or_n(rows, alternatives, span), {"pos_cost_bound": bound}
+
+    routed = _driver_route(
+        spark, idx, queries, engine, _HITS_SCHEMA, run, positional=True,
+        refuse=None if isinstance(alternatives, str) else (
+            "per-query alternative frames only run on the distributed plan"),
+        telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -2854,9 +2619,31 @@ def span_multi_match_indexed(
     dictionary, which is post-analyzer)."""
     if span < 1:
         raise ValueError(f"span must be >= 1, got {span}")
-    routed = _try_span_multi_route(
-        spark, idx, queries, prefix, span, engine, max_expanded_terms,
-        telemetry,
+    def run(ls, rows, max_post):
+        # (1) the dictionary probe bound, (2) the expansion cap — the SAME
+        # loud error as the distributed path, never a demotion, (3) the
+        # anchor + expanded terms' positional footer bound
+        _fit(ls.probe_rows([prefix], like=False), max_post, _PROBE_BOUND)
+        expanded = ls.expand_patterns([prefix], like=False)[prefix]
+        if len(expanded) > max_expanded_terms:
+            raise ValueError(
+                f"span_multi prefix expansion exceeds max_expanded_terms="
+                f"{max_expanded_terms}; raise the cap or use the corpus-scan "
+                f"span_multi_match (distributed expansion)"
+            )
+        if not expanded:
+            return [], {}
+        split = ls.conf.token_split_re
+        terms = set(expanded)
+        terms.update(t[0] for _, text in rows if (t := _tokenize_ordered(text, split)))
+        bound = _fit(ls.pos_terms_cost(terms), max_post, _POS_BOUND)
+        return ls.span_or_n(rows, " ".join(expanded), span), {"pos_cost_bound": bound}
+
+    routed = _driver_route(
+        spark, idx, queries, engine, _HITS_SCHEMA, run, positional=True,
+        refuse=None if isinstance(prefix, str) else (
+            "per-query prefix frames only run on the distributed plan"),
+        telemetry=telemetry,
     )
     if routed is not None:
         return routed
@@ -2884,311 +2671,22 @@ def span_multi_match_indexed(
     return _span_or_epilogue(occ, b1, alts, span)
 
 
-def _try_span_or_route(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    queries,
-    alternatives,
-    span: int,
-    engine: str,
-    telemetry: dict | None = None,
-) -> DataFrame | None:
-    """Driver-route admission for span_or — `_try_positional_route`'s
-    discipline with the operator's EXACT term set (each query's first
-    token + the shared alternatives) instead of the full tokenized text,
-    so admission neither over- nor under-counts the occurrence volume the
-    kernel will actually fault in."""
-    if engine == "spark":
-        return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
-    from igd_spark.local import _tokenize_ordered, local_searcher
+def _span_pair_route(spark, idx, queries, little, span, engine, mode, telemetry):
+    """Driver route of span_containing / span_within: the positional
+    footer bound over the pair operators' exact term set (each query's
+    first TWO tokens + the shared little terms)."""
 
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
+    def run(ls, rows, max_post):
+        split = ls.conf.token_split_re
+        terms = set(_tokenize_ordered(little, split))
+        for _, text in rows:
+            terms.update(_tokenize_ordered(text, split)[:2])
+        bound = _fit(ls.pos_terms_cost(terms), max_post, _POS_BOUND)
+        return ls.span_pair_n(rows, little, span, mode), {"pos_cost_bound": bound}
 
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if not isinstance(alternatives, str):
-        bail("per-query alternative frames only run on the distributed plan")
-        return None
-    if not conf.store_positions:
-        bail("the index stores no positions")
-        return None
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        rows = _as_local_rows(queries)
-    else:
-        if not _stats_small_plan(queries, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"])
-            for r in queries.select("query_id", "query_text").collect()
-        ]
-    t0 = time.perf_counter()
-    if len({qid for qid, _ in rows}) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    anchors = [
-        toks[0]
-        for _, text in rows
-        if (toks := _tokenize_ordered(text, conf.token_split_re))
-    ]
-    alt_terms = _tokenize_ordered(alternatives, conf.token_split_re)
-    ls = local_searcher(idx)
-    ok, bound = ls.pos_terms_cost(sorted(set(anchors) | set(alt_terms)), max_post)
-    if not ok:
-        bail(
-            f"positional footer bound {bound} occurrences > "
-            f"driver_search_max_postings={max_post}"
-        )
-        return None
-    pdf = ls.span_or_n(rows, alternatives, span)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["pos_cost_bound"] = bound
-    return spark.createDataFrame(pdf, "query_id long, doc_id long, n_hits long")
-
-
-def _try_span_pair_route(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    queries,
-    little,
-    span: int,
-    engine: str,
-    mode: str,
-    telemetry: dict | None = None,
-) -> DataFrame | None:
-    """Driver-route admission for span_containing / span_within — the
-    span_or discipline with the pair operators' exact term set (each
-    query's first TWO tokens + the shared little terms)."""
-    if engine == "spark":
-        return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
-    from igd_spark.local import _tokenize_ordered, local_searcher
-
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
-
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if not isinstance(little, str):
-        bail("per-query little frames only run on the distributed plan")
-        return None
-    if not conf.store_positions:
-        bail("the index stores no positions")
-        return None
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        rows = _as_local_rows(queries)
-    else:
-        if not _stats_small_plan(queries, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"])
-            for r in queries.select("query_id", "query_text").collect()
-        ]
-    t0 = time.perf_counter()
-    if len({qid for qid, _ in rows}) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    terms: set[str] = set(_tokenize_ordered(little, conf.token_split_re))
-    for _, text in rows:
-        terms.update(_tokenize_ordered(text, conf.token_split_re)[:2])
-    ls = local_searcher(idx)
-    ok, bound = ls.pos_terms_cost(sorted(terms), max_post)
-    if not ok:
-        bail(
-            f"positional footer bound {bound} occurrences > "
-            f"driver_search_max_postings={max_post}"
-        )
-        return None
-    pdf = ls.span_pair_n(rows, little, span, mode)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["pos_cost_bound"] = bound
-    return spark.createDataFrame(pdf, "query_id long, doc_id long, n_hits long")
-
-
-def _try_span_multi_route(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    queries,
-    prefix,
-    span: int,
-    engine: str,
-    max_expanded_terms: int,
-    telemetry: dict | None = None,
-) -> DataFrame | None:
-    """Driver-route admission for span_multi — `_try_expand_route`'s
-    vocab/expansion discipline composed with the span_or kernel: (1) the
-    vocab footer count must fit the budget before the prefix probe reads
-    the dictionary, (2) the expansion is capped with the SAME loud error
-    as the distributed path, (3) the anchor + expanded terms' footer
-    occurrence bound must fit the positional budget."""
-    if engine == "spark":
-        return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
-    from igd_spark.local import _tokenize_ordered, local_searcher
-
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
-
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if not isinstance(prefix, str):
-        bail("per-query prefix frames only run on the distributed plan")
-        return None
-    if not conf.store_positions:
-        bail("the index stores no positions")
-        return None
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        rows = _as_local_rows(queries)
-    else:
-        if not _stats_small_plan(queries, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"])
-            for r in queries.select("query_id", "query_text").collect()
-        ]
-    t0 = time.perf_counter()
-    if len({qid for qid, _ in rows}) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    ls = local_searcher(idx)
-    if (False, prefix) not in getattr(ls, "_expand_cache", {}) and (
-        ls.vocab_rows() > max_post
-    ):
-        bail(
-            f"dictionary has {ls.vocab_rows()} rows > "
-            f"driver_search_max_postings={max_post} (expansion probe budget)"
-        )
-        return None
-    expanded = ls.expand_patterns([prefix], like=False)[prefix]
-    if len(expanded) > max_expanded_terms:
-        raise ValueError(
-            f"span_multi prefix expansion exceeds max_expanded_terms="
-            f"{max_expanded_terms}; raise the cap or use the corpus-scan "
-            f"span_multi_match (distributed expansion)"
-        )
-    if not expanded:
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, n_hits long"
-        )
-    anchors = [
-        toks[0]
-        for _, text in rows
-        if (toks := _tokenize_ordered(text, conf.token_split_re))
-    ]
-    ok, bound = ls.pos_terms_cost(sorted(set(anchors) | set(expanded)), max_post)
-    if not ok:
-        bail(
-            f"positional footer bound {bound} occurrences > "
-            f"driver_search_max_postings={max_post}"
-        )
-        return None
-    pdf = ls.span_or_n(rows, " ".join(expanded), span)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["pos_cost_bound"] = bound
-    return spark.createDataFrame(pdf, "query_id long, doc_id long, n_hits long")
-
-
-def _try_span_not_route(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    queries,
-    exclude,
-    pre: int,
-    post: int,
-    engine: str,
-    telemetry: dict | None = None,
-) -> DataFrame | None:
-    """Driver-route admission for span_not — the span_or discipline with
-    the operator's exact term set (every distinct query token + the
-    shared exclusion terms)."""
-    if engine == "spark":
-        return None
-    if engine not in ("auto", "driver"):
-        raise ValueError("engine must be 'auto', 'driver' or 'spark'")
-    if pre < 0 or post < 0:
-        raise ValueError("pre and post must be >= 0")
-    from igd_spark.local import _tokenize_ordered, local_searcher
-
-    conf = idx.conf
-    max_q, max_post = _driver_budgets(conf)
-
-    def bail(reason: str) -> None:
-        if engine == "driver":
-            raise ValueError(
-                f"engine='driver' requested but {reason}; use engine='auto' "
-                "or 'spark', or raise IndexConf.driver_search_* budgets"
-            )
-
-    if not isinstance(exclude, str):
-        bail("per-query exclusion frames only run on the distributed plan")
-        return None
-    if not conf.store_positions:
-        bail("the index stores no positions")
-        return None
-    if max_q <= 0 or max_post <= 0:
-        bail("the driver route is disabled (budget <= 0)")
-        return None
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        rows = _as_local_rows(queries)
-    else:
-        if not _stats_small_plan(queries, conf):
-            bail("the query batch is not provably driver-local")
-            return None
-        rows = [
-            (int(r["query_id"]), r["query_text"])
-            for r in queries.select("query_id", "query_text").collect()
-        ]
-    t0 = time.perf_counter()
-    if len({qid for qid, _ in rows}) > max_q:
-        bail(f"batch has >{max_q} queries (driver_search_max_queries)")
-        return None
-    terms: set[str] = set(_tokenize_ordered(exclude, conf.token_split_re))
-    for _, text in rows:
-        terms.update(_tokenize_ordered(text, conf.token_split_re))
-    ls = local_searcher(idx)
-    ok, bound = ls.pos_terms_cost(sorted(terms), max_post)
-    if not ok:
-        bail(
-            f"positional footer bound {bound} occurrences > "
-            f"driver_search_max_postings={max_post}"
-        )
-        return None
-    pdf = ls.span_not_n(rows, exclude, pre, post)
-    if telemetry is not None:
-        telemetry["route_ms"] = 1000 * (time.perf_counter() - t0)
-        telemetry["pos_cost_bound"] = bound
-    return spark.createDataFrame(pdf, "query_id long, doc_id long, n_hits long")
+    return _driver_route(
+        spark, idx, queries, engine, _HITS_SCHEMA, run, positional=True,
+        refuse=None if isinstance(little, str) else (
+            "per-query little frames only run on the distributed plan"),
+        telemetry=telemetry,
+    )

@@ -188,9 +188,37 @@ def test_positional_budget_demotion(spark, built, monkeypatch):
     pd.testing.assert_frame_equal(got, want)
     with pytest.raises(ValueError, match="driver_search_max_postings"):
         phrase_match_indexed(spark, idx, ph, engine="driver")
+    # every driver-routed entry point goes through one admission gate:
+    # disabled budgets refuse engine="driver" and an unknown engine is
+    # rejected, both before any Spark job
+    import igd_spark as ig
+
+    entry_points = {
+        "search": lambda e: ig.search(spark, idx, ph, engine=e),
+        "phrase": lambda e: phrase_match_indexed(spark, idx, ph, engine=e),
+        "near": lambda e: near_match_indexed(spark, idx, ph, engine=e),
+        "intervals": lambda e: ig.intervals_match_indexed(spark, idx, ph, engine=e),
+        "span_first": lambda e: span_first_match_indexed(spark, idx, ph, 3, engine=e),
+        "span_or": lambda e: ig.span_or_match_indexed(spark, idx, ph, "t00000", engine=e),
+        "span_containing": lambda e: ig.span_containing_match_indexed(
+            spark, idx, ph, "t00000", engine=e),
+        "span_within": lambda e: ig.span_within_match_indexed(
+            spark, idx, ph, "t00000", engine=e),
+        "span_multi": lambda e: ig.span_multi_match_indexed(spark, idx, ph, "t0", engine=e),
+        "span_not": lambda e: ig.span_not_match_indexed(spark, idx, ph, "t00000", engine=e),
+        "phrase_prefix": lambda e: ig.match_phrase_prefix_indexed(spark, idx, ph, engine=e),
+        "bool": lambda e: ig.bool_bm25_topk_indexed(spark, idx, ph, engine=e),
+        "prefix": lambda e: ig.prefix_bm25_topk_indexed(spark, idx, ph, engine=e),
+        "wildcard": lambda e: ig.wildcard_bm25_topk_indexed(spark, idx, ph, engine=e),
+        "complete": lambda e: ig.complete_terms_indexed(spark, idx, ph, engine=e),
+        "tfidf": lambda e: ig.tfidf_topk_indexed(spark, idx, ph, engine=e),
+    }
     monkeypatch.setenv("IGD_SEARCH_DRIVER_MAX_QUERIES", "0")
-    with pytest.raises(ValueError, match="disabled"):
-        near_match_indexed(spark, idx, ph, engine="driver")
+    for name, call in entry_points.items():
+        with pytest.raises(ValueError, match="disabled"):
+            call("driver")
+        with pytest.raises(ValueError, match="engine must be"):
+            call("bogus")
 
 
 def test_phrase_driver_warm_launches_no_jobs(spark, built):
