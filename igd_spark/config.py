@@ -83,7 +83,7 @@ class IndexConf:
     # anyway, and giant literal In lists evaluate without pruning
     # (measured ~25% slower at 1000q)
     search_prune_max_terms: int = 512
-    # auto-routing to the DRIVER kernel (LocalSearcher.search_n — zero
+    # auto-routing to the DRIVER kernel (LocalSearcher.score_n — zero
     # Spark jobs, erases the ~2.5-3 s per-batch scheduling floor): taken
     # only when the batch has ≤ max_queries queries AND the scoring work
     # Σ_q Σ_{t∈q} df(t) — known exactly from the dictionary BEFORE reading

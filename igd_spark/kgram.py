@@ -215,8 +215,6 @@ def wildcard_bm25_topk_kgram(
     Patterns with no extractable gram ('*', '?x' shorter than k) fall
     back to the dictionary scan FOR THOSE PATTERNS ONLY.
     """
-    import pandas as _pd
-
     from igd_spark.querylang import (
         _collect_expansion,
         _indexed_scored,
@@ -231,8 +229,7 @@ def wildcard_bm25_topk_kgram(
             f"no k-gram table at {idx.path}/kgrams — run build_kgram_index "
             f"first (or use wildcard_bm25_topk_indexed's dictionary scan)"
         )
-    if isinstance(queries, (_pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     qpats = _wildcard_patterns(queries)
     pat_rows = qpats.select("pattern").distinct().collect()
     pats = sorted(r["pattern"] for r in pat_rows)

@@ -9,21 +9,30 @@ through that kernel at ms scale (src_py/igd_search.c:104-128,
 src/igd_search.c:696-719). This module is both paths for the Spark-built
 index: the index LAYOUT already supports it (shard dirs + files sorted by
 term_id with parquet row-group statistics), so a small batch needs no
-cluster at all —
+cluster at all.
 
-    cached dictionary lookup (term → term_id, df, n_salts)
-      → shards_for() probe set (driver arithmetic)
-      → pyarrow row-group-pruned reads of the few matching block rows
-      → the same numpy decode + BM25 kernel math as the cluster scorer
+Every BM25-family driver route (search, bool, prefix / wildcard, the
+per-field multi_field / dis_max routes and the alternative similarities)
+runs ONE pipeline, like the reference's one search_1/search_n kernel:
 
-No SparkSession is touched. Results are exactly `search()`'s top-k
-(same formula, same (score desc, doc_id asc) tie-break; tested
-rank-identical). At 100 TB the reads stay small — a term's blocks are
-contiguous row-group runs inside its shard's files — and `search()` only
-routes here when the batch's total scoring work Σ_q Σ_t df(t) fits the
-conf.driver_search_max_postings budget (known exactly from the dictionary
-before any block is read), so a hot-term batch over a trillion-turn index
-takes the cluster path regardless of query count.
+    term_sets     per-query distinct terms, repeated query_id rows merged
+      → lookup    cached dictionary probe (term → term_id, df, n_salts)
+      → lists     shards_for() probe set, pyarrow row-group-pruned reads of
+                  the few matching block rows, decoded into the list LRU
+      → weigh     each term's (doc_ids, contribution) ONCE per batch —
+                  BM25 (_bm25, _bm25_idf) or a sim_weigher model
+      → score     per-query accumulate (thread pool past 4 queries), the
+                  optional AND/NOT keep-mask, Spark HALF_UP rounding,
+                  (score desc, doc_id asc) top-k → one frame (_frame)
+
+No SparkSession is touched. Results are exactly the cluster plans' top-k
+(same formula, same tie-break; tested rank-identical). At 100 TB the reads
+stay small — a term's blocks are contiguous row-group runs inside its
+shard's files — and the routes only admit a batch when its total scoring
+work Σ_q Σ_t df(t) (batch_cost, over the same term sets the kernel
+scores) fits the conf.driver_search_max_postings budget (known exactly
+from the dictionary before any block is read), so a hot-term batch over a
+trillion-turn index takes the cluster path regardless of query count.
 
 Decoded posting lists live in a per-handle LRU (the reference caches its
 last-read tile, src/igd_search.c:469-475; here the cache spans terms and
@@ -60,10 +69,38 @@ _EMPTY_BATCH = pd.DataFrame(
 )
 
 
-def _tokenize_one(text: str, split_re: str) -> list[str]:
-    import re
+def _bm25_idf(n_docs: int, df: int) -> float:
+    """ln(1 + (N − df + 0.5)/(df + 0.5)) — scoring.idf_col in doubles, the
+    one idf of the driver kernels and of search()'s small-batch prologue."""
+    return float(np.log1p((n_docs - df + 0.5) / (df + 0.5)))
 
-    return sorted({t for t in re.split(split_re, (text or "").lower()) if t})
+
+def _union(*maps: dict[int, set[str]]) -> list[str]:
+    """Sorted union of term_sets() outputs' per-query sets."""
+    return sorted(set().union(*(ts for m in maps for ts in m.values())))
+
+
+def _frame(results: list[tuple], ranked: bool) -> pd.DataFrame:
+    """score_n's per-query (query_id, doc_ids, scores, ...) results as one
+    (query_id, rank, doc_id, score) frame — without rank unless ``ranked``."""
+    if not results:
+        out = _EMPTY_BATCH.copy()
+        return out if ranked else out.drop(columns="rank")
+    rank = {
+        "rank": np.concatenate(
+            [np.arange(1, r[1].size + 1, dtype=np.int32) for r in results]
+        )
+    } if ranked else {}
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(
+                [np.full(r[1].size, r[0], dtype=np.int64) for r in results]
+            ),
+            **rank,
+            "doc_id": np.concatenate([r[1] for r in results]),
+            "score": np.concatenate([r[2] for r in results]),
+        }
+    )
 
 
 def _round_half_up_spark(arr: np.ndarray, dp: int) -> np.ndarray:
@@ -289,58 +326,201 @@ class LocalSearcher:
                 break
             self._cache_postings -= entry[0].size
 
-    # --- scoring ------------------------------------------------------------
-    def search_n(
+    # --- the BM25-family pipeline ------------------------------------------
+    # terms → lists → weigh → accumulate → top-k (score_n): the one kernel
+    # of every BM25-family driver route in search / querylang.
+
+    def term_sets(
+        self, rows, analyzed: bool = False, split_re: str | None = None
+    ) -> dict[int, set[str]]:
+        """query_id → distinct terms of its rows' texts — the query_terms
+        convention: a term scores once per query and repeated query_id
+        rows merge.  ``rows``: (query_id, text, ...) tuples; a null text is
+        an empty query.  ``analyzed`` also drops stopwords and terms under
+        min_token_len (the bool_bm25_topk stop-filter contract);
+        ``split_re`` replaces the index regex (wildcard patterns keep their
+        * / ? metacharacters)."""
+        import re
+
+        rx = re.compile(split_re or self.conf.token_split_re)
+        stop = set(self.conf.stopwords) if analyzed else set()
+        mlen = self.conf.min_token_len if analyzed else 0
+        per_q: dict[int, set[str]] = {}
+        for qid, text, *_ in rows:
+            per_q.setdefault(int(qid), set()).update(
+                t for t in rx.split((text or "").lower())
+                if t and len(t) >= mlen and t not in stop
+            )
+        return per_q
+
+    def term_map(self, per_q: dict[int, set[str]]) -> dict[str, tuple[int, int, int]]:
+        """term → (term_id, df, n_salts) for the dictionary terms of
+        term_sets() output."""
+        return self._lookup_terms(_union(per_q))
+
+    def batch_cost(self, per_q: dict[int, set[str]]) -> int:
+        """Σ_q Σ_{t∈q} df(t) over term_sets() output — the exact number of
+        postings score_n scores, from the dictionary alone (no block IO).
+        The routing estimator the driver routes compare against
+        conf.driver_search_max_postings."""
+        tmap = self.term_map(per_q)
+        return sum(tmap[t][1] for ts in per_q.values() for t in ts if t in tmap)
+
+    def _bm25(self, tf, dl, df):
+        """BM25 contribution of one term's postings (the ONE driver copy of
+        scoring.bm25_weight_col × idf_col)."""
+        k1, b = self.conf.k1, self.conf.b
+        return _bm25_idf(self.n_docs, df) * (
+            tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / self.avgdl))
+        )
+
+    def sim_weigher(self, model: str, lam: float):
+        """weigh(tf, dl, df) for an alternative similarity — score_n's
+        ``weigh``.  ``model``: "tfidf" (Lucene ClassicSimilarity:
+        sqrt(tf)·(1+ln(N/(df+1)))²/√dl), "lm_jm" (Jelinek-Mercer:
+        ln(1 + ((1−λ)tf/dl)/(λ·cf/total))), "dfi" (divergence from
+        independence, standardized), "pl2" (DFR Poisson/Laplace/H2 —
+        ``lam`` carries the H2 strength c), "ib_ll" (information-based,
+        log-logistic, ``lam`` = c), "ax_f2exp"/"ax_f2log" (axiomatic,
+        ``lam`` = F2EXP's k) or "bm25_plus"/"bm25_l" (``lam`` = delta).
+        df (the list length) and cf come FROM the decoded
+        (tombstone-filtered) lists — the same statistics the cluster twin
+        derives from enumerated pruned blocks, so rank identity holds
+        under deletes; N, avgdl and total tokens come from the frozen
+        corpus metadata, like the cluster path.  The numpy expressions
+        mirror querylang's Catalyst trees operation-for-operation (same
+        shared 1/ln2 and 2π literals, same grouping) so 6-dp rounding
+        never straddles engines.  These models have no block-max bound, so
+        the full match map is scored (that is exactly what the admission
+        budget priced)."""
+        n_docs, conf = self.n_docs, self.conf
+        if model in ("lm_jm", "dfi"):
+            if model == "lm_jm" and not (0.0 < lam < 1.0):
+                raise ValueError(f"lambda must be in (0, 1), got {lam}")
+            total = float(self.idx.meta["corpus"].get("sum_dl", 0))
+            if total <= 0:
+                raise ValueError("index metadata lacks exact sum_dl")
+        elif model in ("pl2", "ib_ll"):
+            if not lam > 0.0:  # the lam slot carries the H2 strength c
+                raise ValueError(f"H2 normalization c must be > 0, got {lam}")
+            avgdl = float(self.idx.meta["corpus"]["avgdl"])
+            c_avgdl = lam * avgdl  # folded exactly like querylang._h2_tfn
+        elif model in ("ax_f2exp", "ax_f2log"):
+            avgdl = float(self.idx.meta["corpus"]["avgdl"])
+        elif model in ("bm25_plus", "bm25_l"):
+            if not lam >= 0.0:  # the lam slot carries delta
+                raise ValueError(f"delta must be >= 0, got {lam}")
+            avgdl = float(self.idx.meta["corpus"]["avgdl"])
+        elif model != "tfidf":
+            raise ValueError(
+                "model must be tfidf|lm_jm|dfi|pl2|ib_ll|ax_f2exp|ax_f2log|"
+                f"bm25_plus|bm25_l, got {model!r}"
+            )
+
+        def weigh(tf, dl, _df):
+            n = tf.size  # the list-derived df
+            if model == "tfidf":
+                idf = 1.0 + np.log(n_docs / (n + 1.0))
+                return np.sqrt(tf) * (idf * idf) / np.sqrt(dl)
+            if model == "lm_jm":
+                cf = float(tf.sum())
+                return np.log1p(((1.0 - lam) * tf / dl) / (lam * cf / total))
+            if model == "dfi":
+                cf = float(tf.sum())
+                e = (cf + 1.0) * dl / float(total + 1)
+                mask = tf > e
+                w = np.zeros(n, dtype=np.float64)
+                # masked: log(1+m) is only defined where tf > e (m > 0)
+                m = (tf[mask] - e[mask]) / np.sqrt(e[mask])
+                w[mask] = _INV_LN2 * np.log(1.0 + m)
+                return w
+            if model == "pl2":
+                tfn = tf * _INV_LN2 * np.log(1.0 + c_avgdl / dl)
+                lamt = float(tf.sum()) / float(n_docs)
+                return np.maximum(
+                    0.0,
+                    _INV_LN2
+                    * (
+                        tfn * np.log(tfn / lamt)
+                        + (lamt - tfn)
+                        + 0.5 * np.log(_TWO_PI * tfn)
+                    )
+                    / (tfn + 1.0),
+                )
+            if model == "ib_ll":
+                tfn = tf * _INV_LN2 * np.log(1.0 + c_avgdl / dl)
+                lamt = (n + 1.0) / float(n_docs + 1)
+                return _INV_LN2 * np.log(1.0 + tfn / lamt)
+            if model in ("ax_f2exp", "ax_f2log"):
+                # Fang & Zhai axiomatic; s=0.5, lam slot = F2EXP's k
+                tf_part = tf / (tf + _AX_S + _AX_S * dl / avgdl)
+                ratio = float(n_docs + 1) / n
+                idf = ratio**lam if model == "ax_f2exp" else np.log(ratio)
+                return tf_part * idf
+            # bm25_plus / bm25_l (Lv & Zhai 2011; lam slot = delta)
+            k1, b = conf.k1, conf.b
+            idf = _bm25_idf(n_docs, n)
+            tfn = tf / ((1.0 - b) + b * dl / avgdl)
+            if model == "bm25_plus":
+                return idf * ((k1 + 1.0) * tfn / (k1 + tfn) + lam)
+            return idf * ((k1 + 1.0) * (tfn + lam) / (k1 + tfn + lam))
+
+        return weigh
+
+    def score_n(
         self,
-        queries: list[tuple[int, str]],
-        k: int = 10,
+        per_q: dict[int, set[str]],
+        k: int | None = None,
+        *,
         min_tf: int = 0,
+        round_dp: int | None = None,
+        weigh=None,
+        and_not: dict[int, set[str]] | None = None,
         telemetry: dict | None = None,
     ) -> pd.DataFrame:
-        """(query_id, rank, doc_id, score) — exact BM25 top-k for a BATCH of
-        (query_id, query_text) pairs, zero Spark jobs. The getOverlaps
-        analog (src_py/igd_search.c:104-128): one dictionary probe + one
-        pruned block read for the batch's UNION of terms, each list decoded
-        at most once (shared across the batch's queries via the LRU), then
-        a per-query numpy accumulation. Same math and tie-break as the
-        cluster kernel — rank-identical by construction (tested)."""
+        """(query_id, rank, doc_id, score) top-k per query over term_sets()
+        output, zero Spark jobs — the getOverlaps analog
+        (src_py/igd_search.c:104-128): one dictionary probe + one pruned
+        block read for the batch's UNION of terms, each list decoded at
+        most once (the LRU), each term's (doc_ids, contribution) computed
+        ONCE for the batch, then a per-query accumulate.  Same math,
+        rounding-before-rank (Spark HALF_UP, when ``round_dp`` is set) and
+        (score desc, doc_id asc) tie-break as the cluster plans —
+        rank-identical by construction (tested).
+
+        ``weigh(tf, dl, df)`` replaces BM25 (sim_weigher); ``min_tf``
+        drops postings below it first.  ``and_not`` (query_id → NOT terms)
+        switches on the AND/NOT rule of bool_bm25_topk: a doc qualifies iff
+        it holds EVERY query term (a corpus-absent term matches nothing)
+        and none of the NOT terms; survivors keep their disjunctive score.
+        ``k=None`` returns the full match map (query_id, doc_id, score) —
+        the per-field building block of the multi-field routes."""
         t0 = time.perf_counter()
-        conf = self.conf
-        per_q: dict[int, set[str]] = {}
-        for qid, text in queries:
-            per_q.setdefault(int(qid), set()).update(
-                _tokenize_one(text, conf.token_split_re)
-            )
-        union_terms = sorted(set().union(*per_q.values())) if per_q else []
-        if not union_terms:
-            return _EMPTY_BATCH.copy()
-        tmap = self._lookup_terms(union_terms)
+        union = _union(per_q, and_not or {})
+        tmap = self._lookup_terms(union)
         t1 = time.perf_counter()
         if not tmap:
-            return _EMPTY_BATCH.copy()
+            return _frame([], k is not None)
         self._ensure_lists(tmap, telemetry=telemetry)
         t2 = time.perf_counter()
-
-        k1, b, avgdl = conf.k1, conf.b, self.avgdl
-        idf_by_term = {
-            t: float(np.log1p((self.n_docs - df + 0.5) / (df + 0.5)))
-            for t, (_, df, _) in tmap.items()
-        }
-        # per-term (d, contribution) — computed ONCE for the batch; shared
-        # hot terms cost one BM25 vector no matter how many queries use them
+        weigh = weigh or self._bm25
         contrib: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, (tid, _, _) in tmap.items():
+        for t, (tid, df, _) in tmap.items():
             d, tf, dl = self._list_cache[tid]
             if min_tf > 0:
                 m = tf >= min_tf
                 d, tf, dl = d[m], tf[m], dl[m]
-            w = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-            contrib[t] = (d, idf_by_term[t] * w)
+            # an empty list has nothing to weigh (its empty tf is its weights)
+            contrib[t] = (d, weigh(tf, dl, df) if d.size else tf)
 
         def score_one(qid: int):
-            """(qid, top_doc_ids, top_scores, n_postings) or None."""
-            parts = [contrib[t] for t in sorted(per_q[qid]) if t in contrib]
-            parts = [p for p in parts if p[0].size]
+            """(qid, doc_ids, scores, n_postings) or None."""
+            terms = sorted(per_q[qid])
+            if and_not is not None and (
+                not terms or any(t not in contrib for t in terms)
+            ):
+                return None  # all-stopword or corpus-absent term: AND matches nothing
+            parts = [contrib[t] for t in terms if t in contrib and contrib[t][0].size]
             if not parts:
                 return None
             if len(parts) == 1:
@@ -350,8 +530,23 @@ class LocalSearcher:
                 ws = np.concatenate([p[1] for p in parts])
             uids, inv = np.unique(ids, return_inverse=True)
             scores = np.bincount(inv, weights=ws, minlength=uids.size)
-            order = np.lexsort((uids, -scores))[:k]
-            return qid, uids[order], scores[order], ids.size
+            if and_not is not None:
+                keep = np.bincount(inv, minlength=uids.size) == len(terms)
+                banned = [
+                    contrib[t][0] for t in sorted(and_not.get(qid, ()))
+                    if t in contrib and contrib[t][0].size
+                ]
+                if banned:
+                    keep &= ~np.isin(uids, np.concatenate(banned))
+                uids, scores = uids[keep], scores[keep]
+                if not uids.size:
+                    return None
+            if round_dp is not None:
+                scores = _round_half_up_spark(scores, round_dp)
+            if k is not None:
+                order = np.lexsort((uids, -scores))[:k]
+                uids, scores = uids[order], scores[order]
+            return qid, uids, scores, ids.size
 
         # per-query scoring is embarrassingly parallel and numpy's sort /
         # bincount kernels release the GIL, so a thread pool buys ~3x on
@@ -373,43 +568,25 @@ class LocalSearcher:
             telemetry.update(
                 engine="driver",
                 n_queries=len(per_q),
-                n_terms=len(union_terms),
+                n_terms=len(union),
                 postings_scored=sum(r[3] for r in results),
                 lookup_ms=1000 * (t1 - t0),
                 read_decode_ms=1000 * (t2 - t1),
                 score_ms=1000 * (t3 - t2),
             )
-        if not results:
-            return _EMPTY_BATCH.copy()
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(
-                    [np.full(r[1].size, r[0], dtype=np.int64) for r in results]
-                ),
-                "rank": np.concatenate(
-                    [np.arange(1, r[1].size + 1, dtype=np.int32) for r in results]
-                ),
-                "doc_id": np.concatenate([r[1] for r in results]),
-                "score": np.concatenate([r[2] for r in results]),
-            }
-        )
+        return _frame(results, k is not None)
 
-    def batch_cost(self, queries: list[tuple[int, str]]) -> int:
-        """Σ_q Σ_{t∈q} df(t) — the exact number of postings a search_n call
-        would score, from the dictionary alone (no block IO). The routing
-        estimator search() compares against conf.driver_search_max_postings."""
-        per_q: dict[int, set[str]] = {}
-        for qid, text in queries:
-            per_q.setdefault(int(qid), set()).update(
-                _tokenize_one(text, self.conf.token_split_re)
-            )
-        union_terms = sorted(set().union(*per_q.values())) if per_q else []
-        if not union_terms:
-            return 0
-        tmap = self._lookup_terms(union_terms)
-        return sum(
-            tmap[t][1] for terms in per_q.values() for t in terms if t in tmap
-        )
+    def search_n(
+        self,
+        queries: list[tuple[int, str]],
+        k: int = 10,
+        min_tf: int = 0,
+        telemetry: dict | None = None,
+    ) -> pd.DataFrame:
+        """(query_id, rank, doc_id, score) — exact BM25 top-k for a batch
+        of (query_id, query_text) rows: score_n over term_sets(queries)."""
+        per_q = self.term_sets(queries)
+        return self.score_n(per_q, k, min_tf=min_tf, telemetry=telemetry)
 
     def search_one(self, query_text: str, k: int = 10, min_tf: int = 0) -> pd.DataFrame:
         """(rank, doc_id, score) — exact BM25 top-k for one query, no Spark
@@ -417,6 +594,20 @@ class LocalSearcher:
         interactive queries serve warm)."""
         out = self.search_n([(0, query_text)], k=k, min_tf=min_tf)
         return out[["rank", "doc_id", "score"]].reset_index(drop=True)
+
+    def sim_topk_n(
+        self,
+        queries: list[tuple[int, str]],
+        model: str = "tfidf",
+        k: int = 10,
+        lam: float = 0.1,
+        round_dp: int | None = None,
+    ) -> pd.DataFrame:
+        """(query_id, rank, doc_id, score) — exact top-k under an
+        alternative similarity (sim_weigher) for (query_id, query_text)
+        rows: score_n over term_sets(queries)."""
+        weigh = self.sim_weigher(model, lam)
+        return self.score_n(self.term_sets(queries), k, round_dp=round_dp, weigh=weigh)
 
     # --- dictionary-expansion driver path (prefix / wildcard) --------------
 
@@ -499,245 +690,6 @@ class LocalSearcher:
                     cache[(False, p)] = [t for t in terms if t.startswith(p)]
         return {p: cache[(like, p)] for p in pats}
 
-    def _scored_arrays(self, per_q: dict[int, list[str]]):
-        """Yield (query_id, doc_ids, UNROUNDED scores) — the full
-        disjunctive match set per query over explicit term lists.  Shared
-        kernel of score_terms_n (top-k tail) and scored_map_n (the
-        multi-field combine routes, which must see EVERY matching doc per
-        field before combining)."""
-        union_terms = sorted(set().union(*per_q.values())) if per_q else []
-        if not union_terms:
-            return
-        tmap = self._lookup_terms(union_terms)
-        if not tmap:
-            return
-        self._ensure_lists(tmap)
-        conf = self.conf
-        k1, b, avgdl = conf.k1, conf.b, self.avgdl
-        contrib: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, (tid, df, _) in tmap.items():
-            d, tf, dl = self._list_cache[tid]
-            idf = float(np.log1p((self.n_docs - df + 0.5) / (df + 0.5)))
-            w = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-            contrib[t] = (d, idf * w)
-        for qid in sorted(per_q):
-            parts = [
-                contrib[t] for t in sorted(set(per_q[qid]))
-                if t in contrib and contrib[t][0].size
-            ]
-            if not parts:
-                continue
-            ids = np.concatenate([p[0] for p in parts])
-            ws = np.concatenate([p[1] for p in parts])
-            uids, inv = np.unique(ids, return_inverse=True)
-            scores = np.bincount(inv, weights=ws, minlength=uids.size)
-            yield qid, uids, scores
-
-    def scored_map_n(self, per_q: dict[int, list[str]]) -> pd.DataFrame:
-        """(query_id, doc_id, score) — the FULL unrounded match set per
-        query (no top-k): the per-field building block of the multi-field
-        driver routes."""
-        rows = list(self._scored_arrays(per_q))
-        if not rows:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int64"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(
-                    [np.full(u.size, q, dtype=np.int64) for q, u, _ in rows]
-                ),
-                "doc_id": np.concatenate([u for _, u, _ in rows]),
-                "score": np.concatenate([s for _, _, s in rows]),
-            }
-        )
-
-    def sim_topk_n(
-        self,
-        queries: list[tuple[int, str]],
-        model: str = "tfidf",
-        k: int = 10,
-        lam: float = 0.1,
-        round_dp: int | None = None,
-    ) -> pd.DataFrame:
-        """(query_id, rank, doc_id, score) — exact top-k under an
-        alternative similarity, in-process.  ``model``: "tfidf" (Lucene
-        ClassicSimilarity: sqrt(tf)·(1+ln(N/(df+1)))²/√dl), "lm_jm"
-        (Jelinek-Mercer: ln(1 + ((1−λ)tf/dl)/(λ·cf/total))), "dfi"
-        (divergence from independence, standardized), "pl2" (DFR
-        Poisson/Laplace/H2 — ``lam`` carries the H2 strength c), or
-        "ib_ll" (information-based, log-logistic, ``lam`` = c).  df and
-        cf are computed FROM the decoded (tombstone-filtered) lists — the
-        same statistics the cluster twin derives from enumerated pruned
-        blocks, so rank identity holds under deletes; N, avgdl and total
-        tokens come from the frozen corpus metadata, like the cluster
-        path.  The numpy expressions mirror querylang's Catalyst trees
-        operation-for-operation (same shared 1/ln2 and 2π literals, same
-        grouping) so 6-dp rounding never straddles engines.  These models
-        have no block-max bound, so the full match map is scored (that is
-        exactly what the admission budget priced)."""
-        conf = self.conf
-        per_q: dict[int, set[str]] = {}
-        for qid, text in queries:
-            per_q.setdefault(int(qid), set()).update(
-                _tokenize_one(text, conf.token_split_re)
-            )
-        union_terms = sorted(set().union(*per_q.values())) if per_q else []
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int64"),
-                "rank": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
-        if not union_terms:
-            return empty
-        tmap = self._lookup_terms(union_terms)
-        if not tmap:
-            return empty
-        self._ensure_lists(tmap)
-        total = 0.0
-        if model in ("lm_jm", "dfi"):
-            if model == "lm_jm" and not (0.0 < lam < 1.0):
-                raise ValueError(f"lambda must be in (0, 1), got {lam}")
-            total = float(self.idx.meta["corpus"].get("sum_dl", 0))
-            if total <= 0:
-                raise ValueError("index metadata lacks exact sum_dl")
-        elif model in ("pl2", "ib_ll"):
-            if not lam > 0.0:  # the lam slot carries the H2 strength c
-                raise ValueError(f"H2 normalization c must be > 0, got {lam}")
-            avgdl = float(self.idx.meta["corpus"]["avgdl"])
-            c_avgdl = lam * avgdl  # folded exactly like querylang._h2_tfn
-        elif model in ("ax_f2exp", "ax_f2log"):
-            avgdl = float(self.idx.meta["corpus"]["avgdl"])
-        elif model in ("bm25_plus", "bm25_l"):
-            if not lam >= 0.0:  # the lam slot carries delta
-                raise ValueError(f"delta must be >= 0, got {lam}")
-            avgdl = float(self.idx.meta["corpus"]["avgdl"])
-        elif model != "tfidf":
-            raise ValueError(
-                "model must be tfidf|lm_jm|dfi|pl2|ib_ll|ax_f2exp|ax_f2log|"
-                f"bm25_plus|bm25_l, got {model!r}"
-            )
-        contrib: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, (tid, _df_dict, _) in tmap.items():
-            d, tf, dl = self._list_cache[tid]
-            if not d.size:
-                continue
-            if model == "tfidf":
-                idf = 1.0 + np.log(self.n_docs / (d.size + 1.0))
-                w = np.sqrt(tf) * (idf * idf) / np.sqrt(dl)
-            elif model == "lm_jm":
-                cf = float(tf.sum())
-                w = np.log1p(((1.0 - lam) * tf / dl) / (lam * cf / total))
-            elif model == "dfi":
-                cf = float(tf.sum())
-                e = (cf + 1.0) * dl / float(total + 1)
-                mask = tf > e
-                w = np.zeros(d.size, dtype=np.float64)
-                # masked: log(1+m) is only defined where tf > e (m > 0)
-                m = (tf[mask] - e[mask]) / np.sqrt(e[mask])
-                w[mask] = _INV_LN2 * np.log(1.0 + m)
-            elif model == "pl2":
-                tfn = tf * _INV_LN2 * np.log(1.0 + c_avgdl / dl)
-                lamt = float(tf.sum()) / float(self.n_docs)
-                w = np.maximum(
-                    0.0,
-                    _INV_LN2
-                    * (
-                        tfn * np.log(tfn / lamt)
-                        + (lamt - tfn)
-                        + 0.5 * np.log(_TWO_PI * tfn)
-                    )
-                    / (tfn + 1.0),
-                )
-            elif model == "ib_ll":
-                tfn = tf * _INV_LN2 * np.log(1.0 + c_avgdl / dl)
-                lamt = (d.size + 1.0) / float(self.n_docs + 1)
-                w = _INV_LN2 * np.log(1.0 + tfn / lamt)
-            elif model in ("ax_f2exp", "ax_f2log"):
-                # Fang & Zhai axiomatic; s=0.5, lam slot = F2EXP's k
-                tf_part = tf / (tf + _AX_S + _AX_S * dl / avgdl)
-                ratio = float(self.n_docs + 1) / d.size
-                idf = ratio**lam if model == "ax_f2exp" else np.log(ratio)
-                w = tf_part * idf
-            else:  # bm25_plus / bm25_l (Lv & Zhai 2011; lam slot = delta)
-                k1, b = conf.k1, conf.b
-                idf = np.log1p(
-                    (self.n_docs - d.size + 0.5) / (d.size + 0.5)
-                )
-                tfn = tf / ((1.0 - b) + b * dl / avgdl)
-                if model == "bm25_plus":
-                    w = idf * ((k1 + 1.0) * tfn / (k1 + tfn) + lam)
-                else:
-                    w = idf * (
-                        (k1 + 1.0) * (tfn + lam) / (k1 + tfn + lam)
-                    )
-            contrib[t] = (d, w)
-        rows = []
-        for qid in sorted(per_q):
-            parts = [contrib[t] for t in sorted(per_q[qid]) if t in contrib]
-            if not parts:
-                continue
-            ids = np.concatenate([p[0] for p in parts])
-            ws = np.concatenate([p[1] for p in parts])
-            uids, inv = np.unique(ids, return_inverse=True)
-            scores = np.bincount(inv, weights=ws, minlength=uids.size)
-            if round_dp is not None:
-                scores = _round_half_up_spark(scores, round_dp)
-            order = np.lexsort((uids, -scores))[:k]
-            rows.append((qid, uids[order], scores[order]))
-        if not rows:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(
-                    [np.full(u.size, q, dtype=np.int64) for q, u, _ in rows]
-                ),
-                "rank": np.concatenate(
-                    [np.arange(1, u.size + 1, dtype=np.int32) for _, u, _ in rows]
-                ),
-                "doc_id": np.concatenate([u for _, u, _ in rows]),
-                "score": np.concatenate([s for _, _, s in rows]),
-            }
-        )
-
-    def score_terms_n(
-        self,
-        per_q: dict[int, list[str]],
-        k: int = 10,
-        round_dp: int | None = None,
-    ) -> pd.DataFrame:
-        """(query_id, rank, doc_id, score) — BM25 top-k where each query's
-        term set is EXPLICIT (the dictionary-expansion routes: prefix /
-        wildcard).  Same math, rounding-before-rank and tie-break as the
-        distributed `_indexed_scored` → `rank_topk` chain."""
-        out_rows = []
-        for qid, uids, scores in self._scored_arrays(per_q):
-            if round_dp is not None:
-                scores = _round_half_up_spark(scores, round_dp)
-            order = np.lexsort((uids, -scores))[:k]
-            out_rows.append((qid, uids[order], scores[order]))
-        if not out_rows:
-            return _EMPTY_BATCH.copy()
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(
-                    [np.full(u.size, q, dtype=np.int64) for q, u, _ in out_rows]
-                ),
-                "rank": np.concatenate(
-                    [np.arange(1, u.size + 1, dtype=np.int32) for _, u, _ in out_rows]
-                ),
-                "doc_id": np.concatenate([u for _, u, _ in out_rows]),
-                "score": np.concatenate([s for _, _, s in out_rows]),
-            }
-        )
-
     def complete(self, per_q: dict[int, str], n: int = 5) -> pd.DataFrame:
         """(query_id, rank, term, df) — top-n dictionary completions per
         prefix, (df desc, term asc): the `complete_terms` epilogue over an
@@ -766,99 +718,6 @@ class LocalSearcher:
                 "df": pd.array(dfs, dtype="int64"),
             }
         )
-
-    def bool_n(
-        self,
-        queries: list[tuple[int, str, str | None]],
-        k: int = 10,
-        round_dp: int | None = None,
-    ) -> pd.DataFrame:
-        """(query_id, rank, doc_id, score) — conjunctive AND + NOT
-        retrieval, zero Spark jobs: the in-process sibling of
-        bool_bm25_topk_indexed.  Semantics mirror querylang._bool_epilogue
-        exactly: a doc qualifies iff it contains EVERY analyzed distinct
-        query term (stop-filter contract — analyzed-away terms are dropped,
-        a corpus-absent term makes the query match nothing), docs holding
-        ANY indexed exclude term are removed, the surviving docs keep their
-        disjunctive BM25 score, rounded (Spark HALF_UP) BEFORE ranking when
-        ``round_dp`` is set.  ``queries``: (query_id, query_text,
-        exclude_text|None) triples; duplicate query_ids merge."""
-        conf = self.conf
-        stop = set(conf.stopwords)
-        mlen = conf.min_token_len
-
-        per_q: dict[int, set[str]] = {}
-        per_ex: dict[int, set[str]] = {}
-        for qid, text, ex in queries:
-            qid = int(qid)
-            toks = {
-                t
-                for t in _tokenize_one(text, conf.token_split_re)
-                if len(t) >= mlen and t not in stop
-            }
-            per_q.setdefault(qid, set()).update(toks)
-            per_ex.setdefault(qid, set()).update(
-                _tokenize_one(ex, conf.token_split_re) if ex else ()
-            )
-        union_terms = sorted(
-            set().union(*per_q.values(), *per_ex.values()) if per_q else set()
-        )
-        if not union_terms:
-            return _EMPTY_BATCH.copy()
-        tmap = self._lookup_terms(union_terms)
-        found = {t: v for t, v in tmap.items()}
-        self._ensure_lists(found)
-
-        k1, b, avgdl = conf.k1, conf.b, self.avgdl
-        contrib: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, (tid, df, _) in found.items():
-            d, tf, dl = self._list_cache[tid]
-            idf = float(np.log1p((self.n_docs - df + 0.5) / (df + 0.5)))
-            w = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-            contrib[t] = (d, idf * w)
-
-        out_rows = []
-        for qid in sorted(per_q):
-            terms = sorted(per_q[qid])
-            if not terms or any(t not in contrib for t in terms):
-                continue  # all-stopword or corpus-absent term: AND matches nothing
-            parts = [contrib[t] for t in terms]
-            ids = np.concatenate([p[0] for p in parts])
-            if not ids.size:
-                continue
-            ws = np.concatenate([p[1] for p in parts])
-            uids, inv = np.unique(ids, return_inverse=True)
-            scores = np.bincount(inv, weights=ws, minlength=uids.size)
-            counts = np.bincount(inv, minlength=uids.size)
-            keep = counts == len(terms)
-            ex_lists = [
-                contrib[t][0] for t in sorted(per_ex.get(qid, ()))
-                if t in contrib and contrib[t][0].size
-            ]
-            if ex_lists:
-                keep &= ~np.isin(uids, np.concatenate(ex_lists))
-            uids, scores = uids[keep], scores[keep]
-            if not uids.size:
-                continue
-            if round_dp is not None:
-                scores = _round_half_up_spark(scores, round_dp)
-            order = np.lexsort((uids, -scores))[:k]
-            out_rows.append((qid, uids[order], scores[order]))
-        if not out_rows:
-            return _EMPTY_BATCH.copy()
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(
-                    [np.full(u.size, q, dtype=np.int64) for q, u, _ in out_rows]
-                ),
-                "rank": np.concatenate(
-                    [np.arange(1, u.size + 1, dtype=np.int32) for _, u, _ in out_rows]
-                ),
-                "doc_id": np.concatenate([u for _, u, _ in out_rows]),
-                "score": np.concatenate([s for _, _, s in out_rows]),
-            }
-        )
-
 
     # --- positional driver path (phrase / NEAR / span_first) ---------------
     # The in-process siblings of phrase_match_indexed / near_match_indexed /

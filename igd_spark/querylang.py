@@ -890,7 +890,7 @@ def wildcard_bm25_topk_indexed(
     blocks are read (same pruned scan and ``max_expanded_terms``
     driver-OOM guard as `prefix_bm25_topk_indexed`).  engine="auto" first
     tries the in-process driver route (pyarrow match_like probe — exact
-    Spark `LIKE` parity — + LocalSearcher.score_terms_n) under the same
+    Spark `LIKE` parity — + LocalSearcher.score_n) under the same
     budgets; "driver" demands it; "spark" forces the distributed plan."""
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA,
@@ -898,10 +898,7 @@ def wildcard_bm25_topk_indexed(
     )
     if routed is not None:
         return routed
-    import pandas as _pd
-
-    if isinstance(queries, (_pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     pats = _wildcard_patterns(queries).withColumn(
         "pat", F.translate("pattern", "*?", "%_")
     )
@@ -1229,7 +1226,7 @@ def _indexed_contrib(
     from igd_spark.search import match_enumerate
 
     if qterms is None:
-        qterms = query_terms(queries)
+        qterms = query_terms(queries, split_re=idx.conf.token_split_re)
     me = match_enumerate(spark, idx, queries, with_dl=True, terms=qterms)
     if allowed is not None:
         me = me.join(allowed.select("doc_id"), "doc_id", "left_semi")
@@ -1259,19 +1256,22 @@ def bool_bm25_topk_indexed(
     required/excluded terms' posting blocks scanned.  The NOT clause is a
     second pruned enumeration of the exclude terms — cost bounded by their
     df, never by the corpus.  engine="auto" first tries the in-process
-    driver route (LocalSearcher.bool_n — zero Spark jobs, ms-scale warm)
+    driver route (LocalSearcher.score_n's AND/NOT rule — zero Spark jobs,
+    ms-scale warm)
     under the BM25 postings budgets; "driver" demands it; "spark" forces
     the distributed plan."""
     def run(ls, rows, max_post):
+        per_q = ls.term_sets(rows, analyzed=True)
+        per_ex = ls.term_sets([(q, e) for q, _, e in rows]) if exclude_col else {}
         # the Σdf bound covers the conjunctive AND the exclude terms' lists,
         # both of which the kernel reads
-        if not exclude_col:
-            rows = [(q, t, None) for q, t in rows]
         cost = _fit(
-            ls.batch_cost([(q, f"{t or ''} {e or ''}") for q, t, e in rows]),
+            ls.batch_cost({q: ts | per_ex.get(q, set()) for q, ts in per_q.items()}),
             max_post, "batch postings",
         )
-        return ls.bool_n(rows, k=k, round_dp=round_dp), {"batch_cost_postings": cost}
+        return ls.score_n(per_q, k, round_dp=round_dp, and_not=per_ex), {
+            "batch_cost_postings": cost,
+        }
 
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA, run, extra=exclude_col,
@@ -1279,24 +1279,10 @@ def bool_bm25_topk_indexed(
     )
     if routed is not None:
         return routed
-    import pandas as _pd
-
-    if isinstance(queries, (_pd.DataFrame, list, tuple)):
-        if exclude_col:
-            rows = (
-                list(map(tuple, queries[["query_id", "query_text",
-                                         exclude_col]].itertuples(index=False)))
-                if isinstance(queries, _pd.DataFrame) else
-                [(int(r[0]), r[1], r[2] if len(r) > 2 else None)
-                 for r in queries]
-            )
-            queries = spark.createDataFrame(
-                rows,
-                f"query_id long, query_text string, {exclude_col} string",
-            )
-        else:
-            queries = _materialize_local_queries(spark, queries)
-    qt = _analyzed_qt(query_terms(queries), idx.conf)
+    queries = _materialize_local_queries(spark, queries, exclude_col)
+    qt = _analyzed_qt(
+        query_terms(queries, split_re=idx.conf.token_split_re), idx.conf
+    )
     nq = qt.groupBy("query_id").agg(F.countDistinct("term").alias("n_required"))
     scored = _indexed_scored(
         spark, idx, queries, qterms=qt,
@@ -1378,7 +1364,7 @@ def prefix_bm25_topk_indexed(
     (fully distributed expansion) for monster prefixes.
 
     engine="auto" first tries the in-process driver route (pyarrow
-    starts_with probe of the dictionary + LocalSearcher.score_terms_n)
+    starts_with probe of the dictionary + LocalSearcher.score_n)
     under search._expand_run's probe/expansion/postings bounds;
     "driver" demands it; "spark" forces the distributed plan."""
     routed = _driver_route(
@@ -1387,11 +1373,10 @@ def prefix_bm25_topk_indexed(
     )
     if routed is not None:
         return routed
-    import pandas as _pd
-
-    if isinstance(queries, (_pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
-    prefixes = query_terms(queries).withColumnRenamed("term", "prefix")
+    queries = _materialize_local_queries(spark, queries)
+    prefixes = query_terms(
+        queries, split_re=idx.conf.token_split_re
+    ).withColumnRenamed("term", "prefix")
     expanded = (
         idx.dictionary.join(
             F.broadcast(prefixes), F.col("term").startswith(F.col("prefix"))
@@ -1541,10 +1526,7 @@ def near_match_indexed(
     )
     if routed is not None:
         return routed
-    import pandas as _pd
-
-    if isinstance(queries, (_pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     qt = _qt(queries)
     nq = qt.groupBy("query_id").agg(F.countDistinct("term").alias("n_required"))
     occ = positional_enumerate(spark, idx, queries, terms=qt).select(
@@ -1866,7 +1848,7 @@ def fuzzy_bm25_topk_indexed(
     are read (same pruned scan as `prefix_bm25_topk_indexed`, same
     ``max_expanded_terms`` driver-OOM guard on the prune-list prologue).
     Rank-identity with the DataFrame path is gate- and pytest-enforced."""
-    qt = query_terms(queries)
+    qt = query_terms(queries, split_re=idx.conf.token_split_re)
     exp = fuzzy_expand(qt, idx.dictionary, max_edits=max_edits, mode=mode)
     exp_local = _collect_expansion(spark, exp, max_expanded_terms, "fuzzy")
     qidf = exp_local.select(
@@ -2191,7 +2173,7 @@ def explain_scores_indexed(
     Rides `_indexed_contrib` (the ONE indexed scoring join), so the
     explained weights are BY CONSTRUCTION the ones every indexed scorer
     sums."""
-    qt = query_terms(queries)
+    qt = query_terms(queries, split_re=idx.conf.token_split_re)
     qidf = (
         idx.dictionary.join(F.broadcast(qt.select("query_id", "term")), "term")
         .select(
@@ -2355,31 +2337,33 @@ def _field_route(
 ) -> DataFrame | None:
     """Driver route of the PER-FIELD scorers (multi_field / dis_max over
     build_field_indexes layouts): one LocalSearcher per field index, each
-    producing its FULL unrounded match map (scored_map_n — a field's
-    non-top-k doc can still win the combined rank), combined in pandas,
-    rounded-then-ranked with the shared tie-break.  Cost bound = Σ_fields
-    per-field Σdf (each field's batch_cost is the same IO-free dictionary
-    bound search_n uses); the gate runs on the first field's conf.
+    producing its FULL unrounded match map (score_n with k=None — a
+    field's non-top-k doc can still win the combined rank) over its own
+    term sets, combined in pandas, rounded-then-ranked with the shared
+    tie-break.  Cost bound = Σ_fields per-field Σdf (each field's
+    batch_cost is the same IO-free dictionary bound the search() route
+    uses); the gate runs on the first field's conf.
     ``combine(pdf) -> pdf`` reduces the boosted per-field rows to one
     (query_id, doc_id, score) per pair."""
     import numpy as np
     import pandas as pd
 
-    from igd_spark.local import _round_half_up_spark, _tokenize_one, local_searcher
+    from igd_spark.local import _round_half_up_spark, local_searcher
 
     first_idx = next(iter(field_indexes.values()))[0]
-    split = first_idx.conf.token_split_re
 
     def run(_ls, rows, max_post):
-        searchers = {f: local_searcher(idx) for f, (idx, _) in field_indexes.items()}
+        fields = []
+        for idx, boost in field_indexes.values():
+            ls = local_searcher(idx)
+            fields.append((ls, ls.term_sets(rows), boost))
         total = _fit(
-            sum(ls.batch_cost(rows) for ls in searchers.values()),
+            sum(ls.batch_cost(per_q) for ls, per_q, _ in fields),
             max_post, "Σ per-field postings",
         )
-        per_q = {qid: sorted(set(_tokenize_one(text, split))) for qid, text in rows}
         frames = []
-        for f, (_, boost) in field_indexes.items():
-            pdf = searchers[f].scored_map_n(per_q)
+        for ls, per_q, boost in fields:
+            pdf = ls.score_n(per_q)
             if len(pdf):
                 frames.append(pdf.assign(score=pdf["score"] * float(boost)))
         if not frames:
@@ -2441,6 +2425,7 @@ def multi_field_bm25_topk_indexed(
     )
     if routed is not None:
         return routed
+    queries = _materialize_local_queries(spark, queries)
     parts = []
     for fcol, (idx, boost) in field_indexes.items():
         scored = _indexed_scored(spark, idx, queries)
@@ -2759,6 +2744,7 @@ def dismax_bm25_topk_indexed(
     )
     if routed is not None:
         return routed
+    queries = _materialize_local_queries(spark, queries)
     parts = [
         _indexed_scored(spark, idx, queries)
         .select(
@@ -2914,10 +2900,7 @@ def complete_terms_indexed(
     )
     if routed is not None:
         return routed
-    import pandas as _pd
-
-    if isinstance(queries, (_pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     if telemetry is not None:
         telemetry["engine"] = "spark"
     return complete_terms(queries, idx.dictionary, n=n)
@@ -3520,7 +3503,8 @@ def combined_fields_bm25_topk_indexed(
 
     if not field_indexes:
         raise ValueError("field_indexes must contain at least one field")
-    qt = query_terms(queries)
+    split_re = next(iter(field_indexes.values()))[0].conf.token_split_re
+    qt = query_terms(queries, split_re=split_re)
     parts, dls = [], []
     n_docs, avgdl, conf = None, 0.0, None
     for fcol, (idx, w) in field_indexes.items():
@@ -3831,6 +3815,13 @@ def has_parent_topk_indexed(
 # the BM25/LM-Dirichlet scorers; only the per-term weight changes.
 
 
+def _sim_run(model: str, k: int, lam: float, round_dp: int | None):
+    """``run`` for the alternative-similarity driver routes: the Σdf bound,
+    then LocalSearcher.score_n under sim_weigher(model, lam)."""
+    return _df_bounded(lambda ls, per_q: ls.score_n(
+        per_q, k, round_dp=round_dp, weigh=ls.sim_weigher(model, lam)))
+
+
 def _tfidf_scored(hits: DataFrame, n_docs: int) -> DataFrame:
     """Shared ClassicSimilarity epilogue — ``hits``: (query_id, term,
     doc_id, tf, dl), EVERY posting of every matched term, so the per-term
@@ -3863,15 +3854,7 @@ def tfidf_topk(
     Scale: the BM25 scorer's exact plan plus one window exchange keyed
     (query_id, term) for df — computed over the matched postings
     themselves, no vocab-sized side agg."""
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    n_docs = int(corpus_stats(ds).collect()[0]["n_docs"])
-    qt = query_terms(queries)
-    hits = (
-        post.join(F.broadcast(qt), "term")
-        .join(ds, "doc_id")
-        .select("query_id", "term", "doc_id", "tf", "dl")
-    )
+    hits, n_docs, _, _ = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
     return rank_topk(_maybe_round(_tfidf_scored(hits, n_docs), round_dp), k)
 
 
@@ -3890,8 +3873,7 @@ def tfidf_topk_indexed(
     the distributed plan, "driver" demands the route."""
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA,
-        _df_bounded(lambda ls, rows: ls.sim_topk_n(
-            rows, model="tfidf", k=k, lam=0.0, round_dp=round_dp)),
+        _sim_run("tfidf", k, 0.0, round_dp),
     )
     if routed is not None:
         return routed
@@ -3937,15 +3919,7 @@ def lm_jelinek_mercer_topk(
 
     Scale: identical plan to `lm_dirichlet_topk` — one window exchange on
     (query_id, term) for cf over the matched postings."""
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    total = int(corpus_stats(ds).collect()[0]["sum_dl"])
-    qt = query_terms(queries)
-    hits = (
-        post.join(F.broadcast(qt), "term")
-        .join(ds, "doc_id")
-        .select("query_id", "term", "doc_id", "tf", "dl")
-    )
+    hits, _, _, total = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
     return rank_topk(_maybe_round(_lmjm_scored(hits, lam, total), round_dp), k)
 
 
@@ -3963,8 +3937,7 @@ def lm_jelinek_mercer_topk_indexed(
     engine routing as `tfidf_topk_indexed`."""
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA,
-        _df_bounded(lambda ls, rows: ls.sim_topk_n(
-            rows, model="lm_jm", k=k, lam=lam, round_dp=round_dp)),
+        _sim_run("lm_jm", k, lam, round_dp),
     )
     if routed is not None:
         return routed
@@ -4140,8 +4113,7 @@ def dfi_topk_indexed(
     as `tfidf_topk_indexed`."""
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA,
-        _df_bounded(lambda ls, rows: ls.sim_topk_n(
-            rows, model="dfi", k=k, lam=0.0, round_dp=round_dp)),
+        _sim_run("dfi", k, 0.0, round_dp),
     )
     if routed is not None:
         return routed
@@ -4199,8 +4171,7 @@ def dfr_pl2_topk_indexed(
     _require_h2_c(c)
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA,
-        _df_bounded(lambda ls, rows: ls.sim_topk_n(
-            rows, model="pl2", k=k, lam=c, round_dp=round_dp)),
+        _sim_run("pl2", k, c, round_dp),
     )
     if routed is not None:
         return routed
@@ -4256,8 +4227,7 @@ def ib_ll_topk_indexed(
     _require_h2_c(c)
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA,
-        _df_bounded(lambda ls, rows: ls.sim_topk_n(
-            rows, model="ib_ll", k=k, lam=c, round_dp=round_dp)),
+        _sim_run("ib_ll", k, c, round_dp),
     )
     if routed is not None:
         return routed
@@ -4357,8 +4327,7 @@ def axiomatic_topk_indexed(
         raise ValueError(f"variant must be f2exp|f2log, got {variant!r}")
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA,
-        _df_bounded(lambda ls, rows: ls.sim_topk_n(
-            rows, model=f"ax_{variant}", k=k, lam=k_exp, round_dp=round_dp)),
+        _sim_run(f"ax_{variant}", k, k_exp, round_dp),
     )
     if routed is not None:
         return routed
@@ -4475,8 +4444,7 @@ def bm25_variant_topk_indexed(
         delta = _BM25_VARIANT_DELTA[variant]
     routed = _driver_route(
         spark, idx, queries, engine, TOPK_SCHEMA,
-        _df_bounded(lambda ls, rows: ls.sim_topk_n(
-            rows, model=f"bm25_{variant}", k=k, lam=delta, round_dp=round_dp)),
+        _sim_run(f"bm25_{variant}", k, delta, round_dp),
     )
     if routed is not None:
         return routed
@@ -5280,7 +5248,7 @@ def prf_bm25_topk_indexed(
         )
     if not 0.0 < orig_weight <= 1.0:
         raise ValueError(f"orig_weight must be in (0, 1], got {orig_weight}")
-    qt = query_terms(queries)
+    qt = query_terms(queries, split_re=idx.conf.token_split_re)
     s1 = _indexed_scored(spark, idx, queries).withColumn(
         "score", F.round("score", 6)
     )

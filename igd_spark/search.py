@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 from igd_spark import codec
 from igd_spark.config import DEFAULT_CONF, IndexConf
 from igd_spark.index import InvertedIndex
-from igd_spark.local import _tokenize_one, _tokenize_ordered, local_searcher
+from igd_spark.local import _bm25_idf, _tokenize_ordered, local_searcher
 from igd_spark.scoring import bm25_weight_col, idf_col
 from igd_spark.stats import corpus_stats, doc_stats, term_stats
 from igd_spark.tokenizer import postings, tokens_col
@@ -622,22 +622,22 @@ def _as_local_rows(queries, extra: str | None = None) -> list[tuple]:
     return rows
 
 
-def _materialize_local_queries(spark: SparkSession, queries) -> DataFrame:
-    """Ship driver-native query input to the cluster. Pandas input keeps
-    its DataFrame form so createDataFrame can take the Arrow batch path
-    instead of a per-row pickled tuple list (the demotion case is exactly
-    the LARGE-batch case, where that difference is O(n) driver memory)."""
-    schema = "query_id long, query_text string"
-    if isinstance(queries, pd.DataFrame):
-        pdf = queries[["query_id", "query_text"]]
-        # float NaN in an object/string column fails the string schema;
-        # map to None (null) — same semantics as the Spark path
-        if pdf["query_text"].isna().any():
-            pdf = pdf.assign(
-                query_text=pdf["query_text"].where(pdf["query_text"].notna(), None)
-            )
-        return spark.createDataFrame(pdf, schema)
-    return spark.createDataFrame(list(queries), schema)
+def _materialize_local_queries(
+    spark: SparkSession, queries, extra: str | None = None
+) -> DataFrame:
+    """Query input as a Spark frame: a Spark frame passes through
+    unchanged; driver-native input (_as_local_rows: same null rules, same
+    optional nullable ``extra`` column) ships as a pandas frame, so
+    createDataFrame takes the Arrow batch path instead of a per-row pickled
+    tuple list (the demotion case is exactly the LARGE-batch case, where
+    that difference is O(n) driver memory)."""
+    if not isinstance(queries, (pd.DataFrame, list, tuple)):
+        return queries
+    cols = ["query_id", "query_text"] + ([extra] if extra else [])
+    schema = "query_id long, query_text string" + (f", {extra} string" if extra else "")
+    return spark.createDataFrame(
+        pd.DataFrame(_as_local_rows(queries, extra), columns=cols), schema
+    )
 
 
 def _driver_budgets(conf: IndexConf) -> tuple[int, int]:
@@ -827,13 +827,15 @@ def _driver_route(
 
 
 def _df_bounded(kernel):
-    """``run`` for the BM25-family kernels: the Σdf bound — Σ_q Σ_{t∈q}
-    df(t), the exact postings the kernel scores, from the dictionary alone
-    — then ``kernel(ls, rows)``."""
+    """``run`` for the BM25-family kernels: the rows tokenized once
+    (LocalSearcher.term_sets), the Σdf bound over those term sets —
+    Σ_q Σ_{t∈q} df(t), the exact postings the kernel scores, from the
+    dictionary alone — then ``kernel(ls, term_sets)``."""
 
     def run(ls, rows, max_post):
-        cost = _fit(ls.batch_cost(rows), max_post, "batch postings")
-        return kernel(ls, rows), {"batch_cost_postings": cost}
+        per_q = ls.term_sets(rows)
+        cost = _fit(ls.batch_cost(per_q), max_post, "batch postings")
+        return kernel(ls, per_q), {"batch_cost_postings": cost}
 
     return run
 
@@ -858,27 +860,23 @@ def _expand_run(like: bool, k: int, round_dp: int | None, max_expanded_terms: in
     ``max_expanded_terms`` with the SAME loud ValueError as the distributed
     path (_collect_expansion — a cap hit is a contract violation on both
     engines, never a silent demotion); (3) the expanded terms' Σdf."""
-    import re as _re
 
     def run(ls, rows, max_post):
-        per_q_pats: dict[int, set[str]] = {}
-        for qid, text in rows:
-            if like:
-                # _wildcard_patterns parity: tokens keep the * / ? metachars
-                toks = {
-                    t for t in _re.split(r"[^a-z0-9*?]+", (text or "").lower()) if t
-                }
-                toks = {t.translate(str.maketrans("*?", "%_")) for t in toks}
-            else:
-                toks = set(_tokenize_one(text, ls.conf.token_split_re))
-            per_q_pats.setdefault(qid, set()).update(toks)
-        all_pats = sorted(set().union(*per_q_pats.values()) if per_q_pats else set())
+        if like:
+            # _wildcard_patterns parity: tokens keep the * / ? metachars
+            per_q_pats = {
+                qid: {t.translate(str.maketrans("*?", "%_")) for t in toks}
+                for qid, toks in ls.term_sets(rows, split_re=r"[^a-z0-9*?]+").items()
+            }
+        else:
+            per_q_pats = ls.term_sets(rows)
+        all_pats = sorted(set().union(*per_q_pats.values()))
         if not all_pats:
             return [], {}
         _fit(ls.probe_rows(all_pats, like), max_post, _PROBE_BOUND)
         exp = ls.expand_patterns(all_pats, like=like)
         per_q = {
-            qid: sorted(set().union(*(exp[p] for p in pats)) if pats else set())
+            qid: set().union(*(exp[p] for p in pats))
             for qid, pats in per_q_pats.items()
         }
         n_pairs = sum(len(ts) for ts in per_q.values())
@@ -889,12 +887,8 @@ def _expand_run(like: bool, k: int, round_dp: int | None, max_expanded_terms: in
                 f" raise the cap or use the corpus-scan {what} path "
                 "(distributed expansion)"
             )
-        tmap = ls._lookup_terms(sorted(set().union(*per_q.values()) if per_q else set()))
-        cost = _fit(
-            sum(tmap[t][1] for ts in per_q.values() for t in ts if t in tmap),
-            max_post, "expansion postings",
-        )
-        return ls.score_terms_n(per_q, k=k, round_dp=round_dp), {
+        cost = _fit(ls.batch_cost(per_q), max_post, "expansion postings")
+        return ls.score_n(per_q, k, round_dp=round_dp), {
             "expanded_terms": n_pairs, "batch_cost_postings": cost,
         }
 
@@ -927,7 +921,7 @@ def search(
     see _driver_route for the admission order), everything else
     runs the distributed plan below. engine="spark" forces the distributed
     plan (plan audits, parity oracle); on a small batch its prologue still
-    reads the dictionary slice on the driver (LocalSearcher._lookup_terms,
+    reads the dictionary slice on the driver (LocalSearcher.term_map,
     pyarrow), so idx.path must be readable from the driver.
     engine="driver" demands the in-process path and raises if the batch
     exceeds its budgets.
@@ -981,7 +975,7 @@ def search(
     routed = _driver_route(
         spark, idx, queries if rows is None else rows, engine, TOPK_SCHEMA,
         _df_bounded(
-            lambda ls, r: ls.search_n(r, k=k, min_tf=min_tf, telemetry=telemetry)
+            lambda ls, per_q: ls.score_n(per_q, k, min_tf=min_tf, telemetry=telemetry)
         ),
         telemetry=telemetry,
     )
@@ -998,26 +992,17 @@ def search(
         # footer/row-group-pruned parquet reads with its per-handle term
         # cache — no Spark job, where the broadcast-join + collect this
         # replaces cost a full dictionary-scan job per batch (~0.5-1 s of
-        # the measured 1000q batch floor). idf replicates idf_col's
-        # expression order in doubles; ln() drift vs the JVM is absorbed
-        # by the engine-wide round-before-rank discipline (same tolerance
-        # the DuckDB oracles already rely on).
-        per_q: dict[int, set] = {}
-        for qid, text in rows:
-            per_q.setdefault(int(qid), set()).update(
-                _tokenize_one(text, conf.token_split_re)
-            )
-        union_terms = sorted(set().union(*per_q.values())) if per_q else []
+        # the measured 1000q batch floor). Term sets and idf are the
+        # driver route's own (LocalSearcher.term_sets, _bm25_idf), so a
+        # batch scores alike on both routes; ln() drift vs the JVM's
+        # idf_col is absorbed by the engine-wide round-before-rank
+        # discipline (same tolerance the DuckDB oracles already rely on).
         ls = local_searcher(idx)
-        tmap = ls._lookup_terms(union_terms)
-        import math
-
-        n_corpus = idx.n_docs
+        per_q = ls.term_sets(rows)
+        tmap = ls.term_map(per_q)
         # (query_id, term_id, idf, n_salts, df) — the old qdict.collect rows
         qrows = [
-            (qid, info[0],
-             math.log((n_corpus - info[1] + 0.5) / (info[1] + 0.5) + 1.0),
-             info[2], info[1])
+            (qid, info[0], _bm25_idf(idx.n_docs, info[1]), info[2], info[1])
             for qid in sorted(per_q)
             for t in sorted(per_q[qid])
             if (info := tmap.get(t)) is not None
@@ -1318,8 +1303,7 @@ def phrase_match_indexed(
     )
     if routed is not None:
         return routed
-    if isinstance(phrases, (pd.DataFrame, list, tuple)):
-        phrases = _materialize_local_queries(spark, phrases)
+    phrases = _materialize_local_queries(spark, phrases)
     pterms = _phrase_terms(phrases, conf.token_split_re)
     plen = pterms.groupBy("query_id").agg(F.count("*").alias("phrase_len"))
     # literal resolution: a stopword inside a phrase still matches the raw
@@ -1495,8 +1479,7 @@ def match_phrase_prefix_indexed(
     )
     if routed is not None:
         return routed
-    if isinstance(phrases, (pd.DataFrame, list, tuple)):
-        phrases = _materialize_local_queries(spark, phrases)
+    phrases = _materialize_local_queries(spark, phrases)
     literals, prefixes, plen = _phrase_prefix_parts(phrases, conf.token_split_re)
     exp = _cap_expansions(
         idx.dictionary.join(
@@ -1680,8 +1663,7 @@ def intervals_match_indexed(
     )
     if routed is not None:
         return routed
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     pterms = _phrase_terms(queries, conf.token_split_re)
     plen = pterms.groupBy("query_id").agg(F.count("*").alias("phrase_len"))
     qdict = _literal_pos_qdict(idx, pterms).select(
@@ -2037,8 +2019,7 @@ def span_first_match_indexed(
     )
     if routed is not None:
         return routed
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     occ = positional_enumerate(spark, idx, queries)
     return (
         occ.filter(F.col("pos") < end)
@@ -2163,8 +2144,7 @@ def span_not_match_indexed(
     )
     if routed is not None:
         return routed
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     inc = positional_enumerate(spark, idx, queries).select(
         "query_id", "doc_id", "pos"
     )
@@ -2328,8 +2308,7 @@ def _span_pair_sets_indexed(
     enumeration over the union of big and little terms (one shard-pruned
     In(term_id) scan, one driver prologue), split back per side by a
     broadcast term join."""
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     if span < 1:
         raise ValueError(f"span must be >= 1, got {span}")
     split_re = idx.conf.token_split_re
@@ -2521,8 +2500,7 @@ def span_or_match_indexed(
     )
     if routed is not None:
         return routed
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     b1, _ = _span_pair_parts(queries, idx.conf.token_split_re)
     alts = query_terms(
         _alt_queries(queries, alternatives), split_re=idx.conf.token_split_re
@@ -2647,8 +2625,7 @@ def span_multi_match_indexed(
     )
     if routed is not None:
         return routed
-    if isinstance(queries, (pd.DataFrame, list, tuple)):
-        queries = _materialize_local_queries(spark, queries)
+    queries = _materialize_local_queries(spark, queries)
     b1, _ = _span_pair_parts(queries, idx.conf.token_split_re)
     pq = _prefix_queries(queries, prefix)
     exp = (

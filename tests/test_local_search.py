@@ -384,3 +384,12 @@ def test_unbounded_path_tokenizes_with_the_index_regex(spark, tmp_path, monkeypa
     assert tel["engine"] == "spark-huge", tel
     assert {r[0] for r in driver} == {0, 1, 2}
     assert unbounded == driver
+    # the indexed bool (AND) and prefix scorers: same term sets on both
+    # routes, so the driver kernel and the Spark plan agree row for row
+    from igd_spark import bool_bm25_topk_indexed, prefix_bm25_topk_indexed
+
+    for fn in (bool_bm25_topk_indexed, prefix_bm25_topk_indexed):
+        on_driver = key(fn(spark, idx, rows, k=5, engine="driver"))
+        on_spark = key(fn(spark, idx, q, k=5, engine="spark"))
+        assert on_driver, fn.__name__
+        assert on_spark == on_driver, fn.__name__

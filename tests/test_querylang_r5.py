@@ -924,6 +924,28 @@ def test_field_route_engine_identity(spark, docs, tmp_path_factory):
             fidx[f][0].conf = olds[f]
 
 
+def test_field_route_merges_repeated_query_ids(spark, docs, tmp_path_factory):
+    """A query_id on several rows is ONE query whose terms union (the
+    query_terms convention) on the per-field driver route too."""
+    from igd_spark import (
+        IndexConf,
+        build_field_indexes,
+        multi_field_bm25_topk_indexed,
+    )
+
+    path = str(tmp_path_factory.mktemp("fqidx") / "mf")
+    fidx = build_field_indexes(
+        spark, docs, path, {"text": 1.0}, conf=IndexConf(block_size=32, n_shards=4)
+    )
+    rows = [(0, "error"), (0, "timeout")]
+    spk = _sorted(multi_field_bm25_topk_indexed(
+        spark, fidx, _queries(spark, rows), k=K, round_dp=6, engine="spark"))
+    drv = _sorted(multi_field_bm25_topk_indexed(
+        spark, fidx, rows, k=K, round_dp=6, engine="driver"))
+    pd.testing.assert_frame_equal(spk, drv, check_dtype=False)
+    assert len(spk) > 0
+
+
 def test_random_score_deterministic_and_uniform(spark, tiny_docs):
     from igd_spark import random_score_topk
     from igd_spark.corpus import assign_doc_ids
