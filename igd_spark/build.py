@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 
 from igd_spark import codec
 from igd_spark.config import DEFAULT_CONF, IndexConf
+from igd_spark.session import init_worker
 from igd_spark.stats import corpus_stats
 from igd_spark.tokenizer import postings_spimi
 
@@ -217,6 +218,7 @@ def _pack_stream_kernel(conf: IndexConf, avgdl: float):
     def kernel(it):
         import pyarrow as pa
 
+        init_worker()
         pending = None
         for rb in it:
             if rb.num_rows == 0:
@@ -342,6 +344,7 @@ def _repack_stream_kernel(conf: IndexConf, avgdl: float, deleted_bc=None):
             )
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        init_worker()
         cols = ["term", "term_id", "shard", "salt", "block_id", "n",
                 "first_doc", "doc_ids", "tfs", "dls"]
         pending: pd.DataFrame | None = None
@@ -461,6 +464,7 @@ def _pack_positions_kernel(conf: IndexConf):
         )
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        init_worker()
         pending: pd.DataFrame | None = None
         for pdf in it:
             if not len(pdf):
@@ -556,6 +560,7 @@ def repack_position_segments(
             )
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        init_worker()
         cols = ["term", "term_id", "shard", "salt", "block_id", "n", "doc_ids", "poss"]
         pending: pd.DataFrame | None = None
         for pdf in it:

@@ -3977,7 +3977,7 @@ def _sim_corpus_hits(
     post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
     ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
     row = corpus_stats(ds).collect()[0]
-    qt = query_terms(queries)
+    qt = query_terms(queries, split_re=conf.token_split_re)
     hits = (
         post.join(F.broadcast(qt), "term")
         .join(ds, "doc_id")

@@ -101,7 +101,7 @@ def bm25_scores(
     ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
     cs = corpus_stats(ds).collect()[0]
     n_docs, avgdl = int(cs["n_docs"]), float(cs["avgdl"])
-    qt = query_terms(queries)
+    qt = query_terms(queries, split_re=conf.token_split_re)
     ts = term_stats(post)
     qt_df = qt.join(ts, "term", "inner").withColumn(  # unknown terms → 0 hits
         "idf", idf_col(n_docs, "df")
@@ -535,9 +535,9 @@ def _maxscore_kernel(
         return uids[order], scores[order]
 
     def kernel(pdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        from igd_spark.session import tune_allocator
+        from igd_spark.session import init_worker
 
-        tune_allocator()  # idempotent per executor Python worker
+        init_worker()  # once per executor Python worker (see session.py)
         empty = pd.DataFrame(columns=["query_id", "rank", "doc_id", "score"])
         if not len(pdf) or not len(qpdf):
             return empty

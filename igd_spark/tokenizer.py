@@ -120,6 +120,9 @@ def postings_spimi(
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        from igd_spark.session import init_worker
+
+        init_worker()
         for rb in it:
             if rb.num_rows == 0:
                 continue
@@ -202,6 +205,9 @@ def occurrences_spimi(
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        from igd_spark.session import init_worker
+
+        init_worker()
         for rb in it:
             if rb.num_rows == 0:
                 continue

@@ -23,6 +23,12 @@ caches see exactly what they saw in the workers.
 checkout (for example the parent commit) in a subprocess and checks ITS
 rows and counters against the capture too, which compares the two
 kernels bit for bit.
+
+The replay times the kernel alone. It does not see the per-task set-up a
+Spark Python worker pays around it (pyspark's worker_util set-up,
+including its importlib.invalidate_caches(); see session.init_worker),
+nor the Arrow hand-off, so kernel ms here are a lower bound on the
+workers' CPU per batch.
 """
 
 from __future__ import annotations

@@ -393,3 +393,36 @@ def test_unbounded_path_tokenizes_with_the_index_regex(spark, tmp_path, monkeypa
         on_spark = key(fn(spark, idx, q, k=5, engine="spark"))
         assert on_driver, fn.__name__
         assert on_spark == on_driver, fn.__name__
+
+
+def test_corpus_oracles_tokenize_queries_with_the_conf_regex(spark, tmp_path):
+    """The corpus-scan scorers tokenize documents with conf.token_split_re,
+    so their queries must be split the same way: under a custom regex,
+    exact_bm25_topk ranks like search and tfidf_topk like
+    tfidf_topk_indexed, row for row."""
+    from igd_spark import exact_bm25_topk, tfidf_topk, tfidf_topk_indexed
+
+    conf = IndexConf(block_size=8, n_shards=2, token_split_re=r"[^a-z0-9_]+")
+    texts = [
+        "alpha_beta gamma", "alpha beta", "alpha beta gamma", "beta_gamma alpha",
+        "alpha_beta alpha_beta delta", "gamma delta", "beta", "alpha_beta beta_gamma",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    idx = build_index(spark, docs, str(tmp_path / "re_idx"), conf=conf)
+    q = spark.createDataFrame(
+        [(0, "alpha_beta"), (1, "alpha_beta gamma"), (2, "beta_gamma delta")],
+        "query_id long, query_text string",
+    )
+
+    def key(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in df.collect()
+        )
+
+    want = key(search(spark, idx, q, k=5))
+    assert {r[0] for r in want} == {0, 1, 2}
+    assert key(exact_bm25_topk(docs, q, k=5, conf=conf)) == want
+    want_tfidf = key(tfidf_topk_indexed(spark, idx, q, k=5))
+    assert want_tfidf
+    assert key(tfidf_topk(docs, q, k=5, conf=conf)) == want_tfidf
