@@ -31,8 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from igd_spark.config import DEFAULT_CONF, IndexConf
-from igd_spark.search import bm25_scores, query_terms
-from igd_spark.stats import term_stats
+from igd_spark.search import _corpus_parts, bm25_scores, query_terms
 from igd_spark.tokenizer import postings
 
 __all__ = [
@@ -544,20 +543,18 @@ def significant_terms(
     ``min_fg`` is the ES ``min_doc_count`` knob: raising it prunes the
     long tail of 1-doc terms BEFORE the background join at scale.
     """
-    from igd_spark.stats import corpus_stats, doc_stats
-
     # ONE tokenization pass: the match set is derived from the same
     # postings frame the fg/bg sides read (bm25_scores would rebuild its
     # own postings subtree — Catalyst does not dedupe the two), and n_docs
-    # comes from the dl projection instead of an extra corpus count job
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    n_docs = int(corpus_stats(ds).collect()[0]["n_docs"])
-    qt = query_terms(queries)
-    m = post.join(F.broadcast(qt), "term").select("query_id", "doc_id").distinct()
+    # comes from the corpus prologue's one stats job
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    m = (
+        cp.post.join(F.broadcast(cp.qt), "term")
+        .select("query_id", "doc_id")
+        .distinct()
+    )
     return _sig_epilogue(
-        m, post, term_stats(post), n_docs, k, min_fg, round_dp,
-        heuristic=heuristic,
+        m, cp.post, cp.ts, cp.n_docs, k, min_fg, round_dp, heuristic=heuristic
     )
 
 
@@ -2341,16 +2338,15 @@ def significant_text_agg(
     bounded by the DEDUPED match set — strictly less work than
     significant_terms on duplicate-heavy corpora (the exact corpora the
     knob exists for)."""
-    from igd_spark.stats import corpus_stats, doc_stats
-
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    n_docs = int(corpus_stats(ds).collect()[0]["n_docs"])
-    qt = query_terms(queries)
-    m = post.join(F.broadcast(qt), "term").select("query_id", "doc_id").distinct()
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    m = (
+        cp.post.join(F.broadcast(cp.qt), "term")
+        .select("query_id", "doc_id")
+        .distinct()
+    )
     if filter_duplicate_text:
         m = _dedup_text_match_set(m, docs, text_col, id_col)
-    return _sig_epilogue(m, post, term_stats(post), n_docs, k, min_fg, round_dp)
+    return _sig_epilogue(m, cp.post, cp.ts, cp.n_docs, k, min_fg, round_dp)
 
 
 def significant_text_agg_indexed(
@@ -3228,8 +3224,6 @@ def frequent_item_sets_agg(
     ``min_support`` with corpus size (it is a FRACTION of the match set
     that matters), which shrinks the frequent vocabulary and bounds the
     join fan-out."""
-    from igd_spark.search import query_terms
-
     # persisted: feeds the membership join below AND the epilogue's l1 /
     # item-array chains — one tokenize pass instead of three (the epilogue
     # unpersists it with the other staged frames)
@@ -3241,7 +3235,7 @@ def frequent_item_sets_agg(
     # is exactly postings ⋈ query-terms. The BM25 scoring pass this
     # replaces (doc_stats + corpus_stats job + idf weights + score agg)
     # computed a score the epilogue immediately threw away.
-    m = toks.join(F.broadcast(query_terms(queries)), "term").select(
+    m = toks.join(F.broadcast(query_terms(queries, conf)), "term").select(
         "query_id", "doc_id"
     )
     return _fis_epilogue(

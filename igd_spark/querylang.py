@@ -5,7 +5,10 @@ region set (src/igd_search.c:696-719 streams queries; hits accumulate at
 src/igd_search.c:491).  A fulltext user of the grafted engine immediately
 wants the classic Lucene-family query surface on top of ranked retrieval,
 so this module adds, as pure-DataFrame compositions of the exact scorer
-(`igd_spark.search.bm25_scores` building blocks):
+(the building blocks of `igd_spark.search.bm25_scores`: the one corpus
+prologue `_corpus_parts` — postings, doc_stats, ONE stats job, query terms
+split by the same conf that tokenized the docs, their idf join — and the
+`_score_terms` aggregate):
 
 * ``bool_bm25_topk``    — conjunctive (AND) matching with optional NOT
   exclusion terms, BM25-ranked.
@@ -60,12 +63,16 @@ from igd_spark.scoring import bm25_weight_col, idf_col
 from igd_spark.search import (
     _PROBE_BOUND,
     TOPK_SCHEMA,
+    _Corpus,
+    _corpus_parts,
     _df_bounded,
     _driver_route,
     _expand_run,
     _fit,
+    _idf_join,
     _materialize_local_queries,
     _pos_bounded,
+    _score_terms,
     bm25_scores,
     exact_bm25_topk,
     query_terms,
@@ -83,41 +90,6 @@ def _maybe_round(scored: DataFrame, round_dp: int | None) -> DataFrame:
     if round_dp is None:
         return scored
     return scored.withColumn("score", F.round("score", round_dp))
-
-
-def _corpus_parts(
-    docs: DataFrame, conf: IndexConf, text_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame, int, float]:
-    """(postings, doc_stats, n_docs, avgdl) for one corpus pass — the same
-    global quantities `bm25_scores` derives (search.py)."""
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    cs = corpus_stats(ds).collect()[0]
-    return post, ds, int(cs["n_docs"]), float(cs["avgdl"])
-
-
-def _score_terms(
-    post: DataFrame,
-    ds: DataFrame,
-    avgdl: float,
-    qt_idf: DataFrame,
-    conf: IndexConf,
-    extra_aggs: tuple[Column, ...] = (),
-    broadcast_terms: bool = True,
-) -> DataFrame:
-    """Score an explicit (query_id, term, idf) set: postings ⋈(broadcast)
-    terms ⋈ doc_stats → hash agg on (query_id, doc_id).  Identical plan
-    shape to `bm25_scores`; factored out so boolean / prefix variants can
-    supply their own term sets and piggyback extra aggregates.
-    ``broadcast_terms=False`` leaves the join strategy to Catalyst/AQE —
-    for term sets of unbounded size (prefix expansion)."""
-    qsel = qt_idf.select("query_id", "term", "idf")
-    scored = post.join(F.broadcast(qsel) if broadcast_terms else qsel, "term")
-    scored = scored.join(ds, "doc_id")
-    w = bm25_weight_col(F.col("idf"), "tf", "dl", avgdl, conf.k1, conf.b)
-    return scored.groupBy("query_id", "doc_id").agg(
-        F.sum(w).alias("score"), *extra_aggs
-    )
 
 
 def _analyzed_qt(qt: DataFrame, conf: IndexConf) -> DataFrame:
@@ -184,23 +156,21 @@ def bool_bm25_topk(
     fine-grained (query_id, doc_id) key, bounded by the excluded terms'
     postings × queries — no corpus-sized additional pass.
     """
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
     # ALL distinct query terms, corpus-absent included — but analyzed-away
     # terms (stopwords / too-short under conf) are DROPPED, the Lucene
     # stop-filter contract: they must not make the AND unsatisfiable
-    qt = _analyzed_qt(query_terms(queries), conf)
+    qt = _analyzed_qt(cp.qt, conf)
     nq = qt.groupBy("query_id").agg(F.countDistinct("term").alias("n_required"))
-    ts = term_stats(post)
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
     scored = _score_terms(
-        post, ds, avgdl, qt_idf, conf,
+        cp.post, cp.ds, cp.avgdl, _idf_join(qt, cp.ts, cp.n_docs), conf,
         extra_aggs=(F.countDistinct("term").alias("n_matched"),),
     )
     banned = None
     if exclude_col is not None:
-        ex = query_terms(queries, text_col=exclude_col)
+        ex = query_terms(queries, conf, exclude_col)
         banned = (
-            post.join(F.broadcast(ex), "term")
+            cp.post.join(F.broadcast(ex), "term")
             .select("query_id", "doc_id")
             .dropDuplicates(["query_id", "doc_id"])
         )
@@ -229,15 +199,11 @@ def filtered_bm25_topk(
     the same parquet scan with the predicate pushed down to the reader.
     """
     cond = F.expr(where) if isinstance(where, str) else where
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    qt = query_terms(queries)
-    ts = term_stats(post)
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
     allowed = docs.filter(cond).select(F.col(id_col).alias("doc_id"))
-    post_f = post.join(allowed, "doc_id", "left_semi")
-    return rank_topk(
-        _maybe_round(_score_terms(post_f, ds, avgdl, qt_idf, conf), round_dp), k
-    )
+    post_f = cp.post.join(allowed, "doc_id", "left_semi")
+    scored = _score_terms(post_f, cp.ds, cp.avgdl, cp.qt_idf, conf)
+    return rank_topk(_maybe_round(scored, round_dp), k)
 
 
 def prefix_bm25_topk(
@@ -265,18 +231,17 @@ def prefix_bm25_topk(
     scoring cost bound is the expanded terms' total df — the bound any
     wildcard engine accepts.
     """
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    prefixes = query_terms(queries).withColumnRenamed("term", "prefix")
-    ts = term_stats(post)
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    prefixes = F.broadcast(cp.qt.withColumnRenamed("term", "prefix"))
     expanded = (
-        ts.join(F.broadcast(prefixes), F.col("term").startswith(F.col("prefix")))
-        .select("query_id", "term", "df")
+        _idf_join(
+            prefixes, cp.ts, cp.n_docs, F.col("term").startswith(F.col("prefix"))
+        )
+        .select("query_id", "term", "idf")
         .dropDuplicates(["query_id", "term"])
-        .withColumn("idf", idf_col(n_docs, "df"))
     )
-    return rank_topk(
-        _maybe_round(_score_terms(post, ds, avgdl, expanded, conf), round_dp), k
-    )
+    scored = _score_terms(cp.post, cp.ds, cp.avgdl, expanded, conf)
+    return rank_topk(_maybe_round(scored, round_dp), k)
 
 
 def rrf_fuse(
@@ -734,16 +699,8 @@ def lm_dirichlet_topk(
     matched postings themselves (complete per matched term by
     construction), so no vocab-sized side agg.
     """
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    total = int(corpus_stats(ds).collect()[0]["sum_dl"])  # ONE stats job
-    qt = query_terms(queries)
-    hits = (
-        post.join(F.broadcast(qt), "term")
-        .join(ds, "doc_id")
-        .select("query_id", "term", "doc_id", "tf", "dl")
-    )
-    return rank_topk(_maybe_round(_lmd_scored(hits, mu, total), round_dp), k)
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
+    return rank_topk(_maybe_round(_lmd_scored(hits, mu, cp.sum_dl), round_dp), k)
 
 
 def lm_dirichlet_topk_indexed(
@@ -791,16 +748,11 @@ def explain_scores(
     Scale: exactly the scorer's plan minus the final aggregate — the
     output is the sparse match set itself, bounded by the query terms'
     postings."""
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    qt = query_terms(queries)
-    ts = term_stats(post)
-    qt_idf = (
-        qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
-    )
-    j = post.join(
-        F.broadcast(qt_idf.select("query_id", "term", "df", "idf")), "term"
-    ).join(ds, "doc_id")
-    w = bm25_weight_col(F.col("idf"), "tf", "dl", avgdl, conf.k1, conf.b)
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    j = cp.post.join(
+        F.broadcast(cp.qt_idf.select("query_id", "term", "df", "idf")), "term"
+    ).join(cp.ds, "doc_id")
+    w = bm25_weight_col(F.col("idf"), "tf", "dl", cp.avgdl, conf.k1, conf.b)
     out = j.select(
         "query_id", "doc_id", "term", "tf", "dl", "df", "idf", w.alias("weight")
     )
@@ -855,24 +807,19 @@ def wildcard_bm25_topk(
     past any broadcast budget.  Scoring cost is the expanded terms' total
     df, the bound every wildcard engine accepts.
     """
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
+    cp = _corpus_parts(docs, None, conf, text_col, id_col)
     pats = _wildcard_patterns(queries).withColumn(
         "pat", F.translate("pattern", "*?", "%_")
     )
-    ts = term_stats(post)
     expanded = (
-        ts.join(F.broadcast(pats), F.expr("term LIKE pat"))
-        .select("query_id", "term", "df")
+        _idf_join(F.broadcast(pats), cp.ts, cp.n_docs, F.expr("term LIKE pat"))
+        .select("query_id", "term", "idf")
         .dropDuplicates(["query_id", "term"])
-        .withColumn("idf", idf_col(n_docs, "df"))
     )
-    return rank_topk(
-        _maybe_round(
-            _score_terms(post, ds, avgdl, expanded, conf, broadcast_terms=False),
-            round_dp,
-        ),
-        k,
+    scored = _score_terms(
+        cp.post, cp.ds, cp.avgdl, expanded, conf, broadcast_terms=False
     )
+    return rank_topk(_maybe_round(scored, round_dp), k)
 
 
 def wildcard_bm25_topk_indexed(
@@ -969,24 +916,22 @@ def synonym_bm25_topk(
     the plain scorer does, plus one extra fine-keyed hash agg level
     ((query, gkey, doc) before (query, doc)) — no new corpus passes.
     """
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    qt = query_terms(queries)
-    _, members = _synonym_members(qt, synonyms)
-    ts = term_stats(post)
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    _, members = _synonym_members(cp.qt, synonyms)
     df_g = (
-        members.join(ts, "term")
+        members.join(cp.ts, "term")
         .groupBy("query_id", "gkey")
         .agg(F.max("df").alias("df"))
     )
     tf_g = (
-        post.join(F.broadcast(members), "term")
+        cp.post.join(F.broadcast(members), "term")
         .groupBy("query_id", "gkey", "doc_id")
         .agg(F.sum("tf").alias("tf"))
     )
-    w = bm25_weight_col(idf_col(n_docs, "df"), "tf", "dl", avgdl, conf.k1, conf.b)
+    w = bm25_weight_col(F.col("idf"), "tf", "dl", cp.avgdl, conf.k1, conf.b)
     scored = (
-        tf_g.join(F.broadcast(df_g), ["query_id", "gkey"])
-        .join(ds, "doc_id")
+        _idf_join(tf_g, F.broadcast(df_g), cp.n_docs, ["query_id", "gkey"])
+        .join(cp.ds, "doc_id")
         .groupBy("query_id", "doc_id")
         .agg(F.sum(w).alias("score"))
     )
@@ -1007,8 +952,7 @@ def synonym_bm25_topk_indexed(
     with the DataFrame path is gate- and pytest-enforced."""
     from igd_spark.search import match_enumerate
 
-    qt = query_terms(queries)
-    _, members = _synonym_members(qt, synonyms)
+    _, members = _synonym_members(query_terms(queries, idx.conf), synonyms)
     me = match_enumerate(
         spark, idx, queries, with_dl=True,
         terms=members.select("query_id", "term").distinct(),
@@ -1146,7 +1090,7 @@ def snippets(
         top = exact_bm25_topk(
             docs, queries, k=k, conf=conf, text_col=text_col, id_col=id_col
         )
-    qt = query_terms(queries)
+    qt = query_terms(queries, conf)
     texts = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
     hits = top.select("query_id", "doc_id", "rank").join(texts, "doc_id")
     cand = hits.join(F.broadcast(qt), "query_id").filter(
@@ -1226,7 +1170,7 @@ def _indexed_contrib(
     from igd_spark.search import match_enumerate
 
     if qterms is None:
-        qterms = query_terms(queries, split_re=idx.conf.token_split_re)
+        qterms = query_terms(queries, idx.conf)
     me = match_enumerate(spark, idx, queries, with_dl=True, terms=qterms)
     if allowed is not None:
         me = me.join(allowed.select("doc_id"), "doc_id", "left_semi")
@@ -1280,9 +1224,7 @@ def bool_bm25_topk_indexed(
     if routed is not None:
         return routed
     queries = _materialize_local_queries(spark, queries, exclude_col)
-    qt = _analyzed_qt(
-        query_terms(queries, split_re=idx.conf.token_split_re), idx.conf
-    )
+    qt = _analyzed_qt(query_terms(queries, idx.conf), idx.conf)
     nq = qt.groupBy("query_id").agg(F.countDistinct("term").alias("n_required"))
     scored = _indexed_scored(
         spark, idx, queries, qterms=qt,
@@ -1374,9 +1316,7 @@ def prefix_bm25_topk_indexed(
     if routed is not None:
         return routed
     queries = _materialize_local_queries(spark, queries)
-    prefixes = query_terms(
-        queries, split_re=idx.conf.token_split_re
-    ).withColumnRenamed("term", "prefix")
+    prefixes = query_terms(queries, idx.conf).withColumnRenamed("term", "prefix")
     expanded = (
         idx.dictionary.join(
             F.broadcast(prefixes), F.col("term").startswith(F.col("prefix"))
@@ -1494,7 +1434,7 @@ def near_match(
     pruned position-block scan)."""
     from igd_spark.search import positional_postings
 
-    qt = query_terms(queries)
+    qt = query_terms(queries, conf)
     nq = qt.groupBy("query_id").agg(F.countDistinct("term").alias("n_required"))
     pp = positional_postings(docs, text_col=text_col, id_col=id_col, conf=conf)
     occ = pp.join(F.broadcast(qt), "term").select("query_id", "doc_id", "term", "pos")
@@ -1516,7 +1456,7 @@ def near_match_indexed(
     — zero Spark jobs) under the positional footer bound
     (search._pos_bounded); "driver" demands it; "spark" forces the
     distributed plan."""
-    from igd_spark.search import positional_enumerate, query_terms as _qt
+    from igd_spark.search import positional_enumerate
 
     routed = _driver_route(
         spark, idx, queries, engine,
@@ -1527,7 +1467,7 @@ def near_match_indexed(
     if routed is not None:
         return routed
     queries = _materialize_local_queries(spark, queries)
-    qt = _qt(queries)
+    qt = query_terms(queries, idx.conf)
     nq = qt.groupBy("query_id").agg(F.countDistinct("term").alias("n_required"))
     occ = positional_enumerate(spark, idx, queries, terms=qt).select(
         "query_id", "doc_id", "term", "pos"
@@ -1620,15 +1560,14 @@ def more_like_this(
     """
     spark = docs.sparkSession
     seeds = _seed_frame(spark, seed_ids, "doc_id")
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    ts = term_stats(post)
-    seed_post = post.join(F.broadcast(seeds), "doc_id")
+    cp = _corpus_parts(docs, None, conf, text_col, id_col)
+    seed_post = cp.post.join(F.broadcast(seeds), "doc_id")
     kw = (
-        seed_post.join(ts, "term")
+        seed_post.join(cp.ts, "term")
         .select(
             F.col("doc_id").alias("query_id"),
             "term",
-            (F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))).alias("tfidf"),
+            (F.col("tf") * F.log(F.lit(float(cp.n_docs)) / F.col("df"))).alias("tfidf"),
         )
     )
     if round_dp is not None:
@@ -1639,8 +1578,8 @@ def more_like_this(
         .filter(F.col("_rn") <= n_terms)
         .select("query_id", "term")
     )
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
-    scored = _score_terms(post, ds, avgdl, qt_idf, conf).filter(
+    qt_idf = _idf_join(qt, cp.ts, cp.n_docs)
+    scored = _score_terms(cp.post, cp.ds, cp.avgdl, qt_idf, conf).filter(
         F.col("query_id") != F.col("doc_id")
     )
     return rank_topk(_maybe_round(scored, round_dp), k)
@@ -1778,7 +1717,9 @@ def suggest_terms(
     `InvertedIndex.dictionary`.  Candidate generation and scale notes are
     `fuzzy_expand`'s (SymSpell deletes equi-join by default).
     """
-    cand = _fuzzy_candidates(query_terms(queries), dictionary, max_edits, mode)
+    cand = _fuzzy_candidates(
+        query_terms(queries, DEFAULT_CONF), dictionary, max_edits, mode
+    )
     cand = cand.filter(
         (F.col("term") != F.col("qterm")) & (F.col("boost") > 0.0)
     )
@@ -1821,16 +1762,11 @@ def fuzzy_bm25_topk(
     query terms x their close vocab neighbours (small), so it broadcasts
     into the scoring join.
     """
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    qt = query_terms(queries)
-    ts = term_stats(post)
-    exp = fuzzy_expand(qt, ts, max_edits=max_edits, mode=mode)
-    qt_idf = exp.select(
-        "query_id", "term", (F.col("boost") * idf_col(n_docs, "df")).alias("idf")
-    )
-    return rank_topk(
-        _maybe_round(_score_terms(post, ds, avgdl, qt_idf, conf), round_dp), k
-    )
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    exp = fuzzy_expand(cp.qt, cp.ts, max_edits=max_edits, mode=mode)
+    qt_idf = exp.withColumn("idf", F.col("boost") * idf_col(cp.n_docs, "df"))
+    scored = _score_terms(cp.post, cp.ds, cp.avgdl, qt_idf, conf)
+    return rank_topk(_maybe_round(scored, round_dp), k)
 
 
 def fuzzy_bm25_topk_indexed(
@@ -1848,7 +1784,7 @@ def fuzzy_bm25_topk_indexed(
     are read (same pruned scan as `prefix_bm25_topk_indexed`, same
     ``max_expanded_terms`` driver-OOM guard on the prune-list prologue).
     Rank-identity with the DataFrame path is gate- and pytest-enforced."""
-    qt = query_terms(queries, split_re=idx.conf.token_split_re)
+    qt = query_terms(queries, idx.conf)
     exp = fuzzy_expand(qt, idx.dictionary, max_edits=max_edits, mode=mode)
     exp_local = _collect_expansion(spark, exp, max_expanded_terms, "fuzzy")
     qidf = exp_local.select(
@@ -2010,20 +1946,10 @@ def rescore_topk(
     combined score before final ranking — three float boundaries, each
     resolved on rounded values so engines can't diverge on last-ulp noise.
     """
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    cs = corpus_stats(ds).collect()[0]  # ONE stats job for both passes
-    n_docs, avgdl, total = int(cs["n_docs"]), float(cs["avgdl"]), int(cs["sum_dl"])
-    qt = query_terms(queries)
-    qt_idf = qt.join(term_stats(post), "term").withColumn("idf", idf_col(n_docs, "df"))
-    first = _score_terms(post, ds, avgdl, qt_idf, conf)
-    hits = (
-        post.join(F.broadcast(qt), "term")
-        .join(ds, "doc_id")
-        .select("query_id", "term", "doc_id", "tf", "dl")
-    )
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
+    first = _score_terms(cp.post, cp.ds, cp.avgdl, cp.qt_idf, conf)
     return _rescore_epilogue(
-        first, hits, mu, total, window_size, query_weight, rescore_weight,
+        first, hits, mu, cp.sum_dl, window_size, query_weight, rescore_weight,
         k, round_dp,
     )
 
@@ -2064,24 +1990,19 @@ def regexp_bm25_topk(
     automaton, the analog of this one narrow vocab pass), then a scoring
     join sized by the expansion's total df, left to Catalyst/AQE.
     """
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
+    cp = _corpus_parts(docs, None, conf, text_col, id_col)
     pats = _regexp_patterns(queries).withColumn(
         "pat", F.concat(F.lit("^(?:"), F.col("pattern"), F.lit(")$"))
     )
-    ts = term_stats(post)
     expanded = (
-        ts.join(F.broadcast(pats), F.expr("term RLIKE pat"))
-        .select("query_id", "term", "df")
+        _idf_join(F.broadcast(pats), cp.ts, cp.n_docs, F.expr("term RLIKE pat"))
+        .select("query_id", "term", "idf")
         .dropDuplicates(["query_id", "term"])
-        .withColumn("idf", idf_col(n_docs, "df"))
     )
-    return rank_topk(
-        _maybe_round(
-            _score_terms(post, ds, avgdl, expanded, conf, broadcast_terms=False),
-            round_dp,
-        ),
-        k,
+    scored = _score_terms(
+        cp.post, cp.ds, cp.avgdl, expanded, conf, broadcast_terms=False
     )
+    return rank_topk(_maybe_round(scored, round_dp), k)
 
 
 def regexp_bm25_topk_indexed(
@@ -2173,7 +2094,7 @@ def explain_scores_indexed(
     Rides `_indexed_contrib` (the ONE indexed scoring join), so the
     explained weights are BY CONSTRUCTION the ones every indexed scorer
     sums."""
-    qt = query_terms(queries, split_re=idx.conf.token_split_re)
+    qt = query_terms(queries, idx.conf)
     qidf = (
         idx.dictionary.join(F.broadcast(qt.select("query_id", "term")), "term")
         .select(
@@ -2484,12 +2405,9 @@ def msm_bm25_topk(
     """
     if min_should_match < 1:
         raise ValueError(f"min_should_match must be >= 1, got {min_should_match}")
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    qt = query_terms(queries)
-    ts = term_stats(post)
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
     scored = _score_terms(
-        post, ds, avgdl, qt_idf, conf,
+        cp.post, cp.ds, cp.avgdl, cp.qt_idf, conf,
         extra_aggs=(F.countDistinct("term").alias("n_matched"),),
     )
     return _msm_epilogue(scored, min_should_match, k, round_dp)
@@ -2560,12 +2478,9 @@ def terms_set_topk(
     Scale: the scorer's existing hash aggregate grows one countDistinct;
     the requirement rides a (doc_id, field) two-column pushdown projection
     joined to the SPARSE scored set — never a corpus-wide pass."""
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    qt = query_terms(queries)
-    ts = term_stats(post)
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
     scored = _score_terms(
-        post, ds, avgdl, qt_idf, conf,
+        cp.post, cp.ds, cp.avgdl, cp.qt_idf, conf,
         extra_aggs=(F.countDistinct("term").alias("n_matched"),),
     )
     return _terms_set_epilogue(scored, docs, msm_field, id_col, k, round_dp)
@@ -2785,7 +2700,7 @@ def highlight(
         top = exact_bm25_topk(
             docs, queries, k=k, conf=conf, text_col=text_col, id_col=id_col
         )
-    qt = query_terms(queries)
+    qt = query_terms(queries, conf)
     texts = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
     hits = top.select("query_id", "doc_id", "rank").join(texts, "doc_id")
     cand = hits.join(F.broadcast(qt), "query_id").filter(
@@ -3381,14 +3296,11 @@ def boosting_bm25_topk(
     terms' postings × queries, never a second corpus pass (the postings
     frame is shared).
     """
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    qt = query_terms(queries)
-    ts = term_stats(post)
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
-    scored = _score_terms(post, ds, avgdl, qt_idf, conf)
-    neg = query_terms(queries, text_col=negative_col)
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    scored = _score_terms(cp.post, cp.ds, cp.avgdl, cp.qt_idf, conf)
+    neg = query_terms(queries, conf, negative_col)
     demoted = (
-        post.join(F.broadcast(neg), "term")
+        cp.post.join(F.broadcast(neg), "term")
         .select("query_id", "doc_id")
         .dropDuplicates(["query_id", "doc_id"])
     )
@@ -3473,9 +3385,7 @@ def combined_fields_bm25_topk(
     ds = _union_all(dls).groupBy("doc_id").agg(F.sum("wdl").alias("dl"))
     cs = corpus_stats(ds).collect()[0]
     n_docs, avgdl = int(cs["n_docs"]), float(cs["avgdl"])
-    ts = term_stats(post)
-    qt = query_terms(queries)
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
+    qt_idf = _idf_join(query_terms(queries, conf), term_stats(post), n_docs)
     scored = _score_terms(post, ds, avgdl, qt_idf, conf)
     return rank_topk(_maybe_round(scored, round_dp), k)
 
@@ -3503,8 +3413,7 @@ def combined_fields_bm25_topk_indexed(
 
     if not field_indexes:
         raise ValueError("field_indexes must contain at least one field")
-    split_re = next(iter(field_indexes.values()))[0].conf.token_split_re
-    qt = query_terms(queries, split_re=split_re)
+    qt = query_terms(queries, next(iter(field_indexes.values()))[0].conf)
     parts, dls = [], []
     n_docs, avgdl, conf = None, 0.0, None
     for fcol, (idx, w) in field_indexes.items():
@@ -3528,11 +3437,7 @@ def combined_fields_bm25_topk_indexed(
     )
     ts = post.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     ds = _union_all(dls).groupBy("doc_id").agg(F.sum("wdl").alias("dl"))
-    qidf = (
-        qt.join(ts, "term")
-        .withColumn("idf", idf_col(n_docs, "df"))
-        .select("query_id", "term", "idf")
-    )
+    qidf = _idf_join(qt, ts, n_docs).select("query_id", "term", "idf")
     j = post.join(F.broadcast(qidf), ["query_id", "term"]).join(ds, "doc_id")
     w_col = bm25_weight_col(F.col("idf"), "tf", "dl", avgdl, conf.k1, conf.b)
     scored = j.groupBy("query_id", "doc_id").agg(F.sum(w_col).alias("score"))
@@ -3854,8 +3759,8 @@ def tfidf_topk(
     Scale: the BM25 scorer's exact plan plus one window exchange keyed
     (query_id, term) for df — computed over the matched postings
     themselves, no vocab-sized side agg."""
-    hits, n_docs, _, _ = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(_maybe_round(_tfidf_scored(hits, n_docs), round_dp), k)
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
+    return rank_topk(_maybe_round(_tfidf_scored(hits, cp.n_docs), round_dp), k)
 
 
 def tfidf_topk_indexed(
@@ -3919,8 +3824,8 @@ def lm_jelinek_mercer_topk(
 
     Scale: identical plan to `lm_dirichlet_topk` — one window exchange on
     (query_id, term) for cf over the matched postings."""
-    hits, _, _, total = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(_maybe_round(_lmjm_scored(hits, lam, total), round_dp), k)
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
+    return rank_topk(_maybe_round(_lmjm_scored(hits, lam, cp.sum_dl), round_dp), k)
 
 
 def lm_jelinek_mercer_topk_indexed(
@@ -3967,23 +3872,19 @@ def _sim_corpus_hits(
     conf: IndexConf,
     text_col: str,
     id_col: str,
-) -> tuple[DataFrame, int, float, int]:
-    """Shared corpus-path prologue of the alternative-similarity scorers:
-    (hits, n_docs, avgdl, total_tokens) where hits is EVERY posting of
-    every matched query term joined with document length (that
-    completeness is what makes the per-(query, term) window sums below
-    the true collection statistics), and the three scalars come from ONE
-    stats job."""
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    row = corpus_stats(ds).collect()[0]
-    qt = query_terms(queries, split_re=conf.token_split_re)
+) -> tuple[DataFrame, _Corpus]:
+    """Shared corpus-path prologue of the LM and alternative-similarity
+    scorers: (hits, corpus) where hits is EVERY posting of every matched
+    query term joined with document length (that completeness is what
+    makes the per-(query, term) window sums below the true collection
+    statistics), and corpus the `_corpus_parts` it was joined from."""
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
     hits = (
-        post.join(F.broadcast(qt), "term")
-        .join(ds, "doc_id")
+        cp.post.join(F.broadcast(cp.qt), "term")
+        .join(cp.ds, "doc_id")
         .select("query_id", "term", "doc_id", "tf", "dl")
     )
-    return hits, int(row["n_docs"]), float(row["avgdl"]), int(row["sum_dl"])
+    return hits, cp
 
 
 def _dfi_scored(hits: DataFrame, total_tokens: int) -> DataFrame:
@@ -4096,8 +3997,8 @@ def dfi_topk(
     Scale: identical plan to `lm_dirichlet_topk` — postings ⋈ broadcast
     query terms ⋈ doc_stats, one window exchange on (query_id, term) for
     cf over the matched postings, no vocab-sized side agg."""
-    hits, _, _, total = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(_maybe_round(_dfi_scored(hits, total), round_dp), k)
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
+    return rank_topk(_maybe_round(_dfi_scored(hits, cp.sum_dl), round_dp), k)
 
 
 def dfi_topk_indexed(
@@ -4148,11 +4049,9 @@ def dfr_pl2_topk(
     Scale: same plan as `lm_dirichlet_topk` — one (query_id, term) window
     exchange for cf over the matched postings."""
     _require_h2_c(c)
-    hits, n_docs, avgdl, _ = _sim_corpus_hits(
-        docs, queries, conf, text_col, id_col
-    )
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
     return rank_topk(
-        _maybe_round(_pl2_scored(hits, n_docs, avgdl, c), round_dp), k
+        _maybe_round(_pl2_scored(hits, cp.n_docs, cp.avgdl, c), round_dp), k
     )
 
 
@@ -4204,11 +4103,9 @@ def ib_ll_topk(
     Scale: same plan shape; the window statistic is a COUNT instead of a
     SUM — still one (query_id, term) exchange over matched postings."""
     _require_h2_c(c)
-    hits, n_docs, avgdl, _ = _sim_corpus_hits(
-        docs, queries, conf, text_col, id_col
-    )
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
     return rank_topk(
-        _maybe_round(_ib_ll_scored(hits, n_docs, avgdl, c), round_dp), k
+        _maybe_round(_ib_ll_scored(hits, cp.n_docs, cp.avgdl, c), round_dp), k
     )
 
 
@@ -4298,12 +4195,10 @@ def axiomatic_topk(
 
     Scale: same plan as `ib_ll_topk` — one (query_id, term) window COUNT
     exchange over the matched postings, no vocab-sized side agg."""
-    hits, n_docs, avgdl, _ = _sim_corpus_hits(
-        docs, queries, conf, text_col, id_col
-    )
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
     return rank_topk(
         _maybe_round(
-            _axiomatic_scored(hits, n_docs, avgdl, variant, k_exp), round_dp
+            _axiomatic_scored(hits, cp.n_docs, cp.avgdl, variant, k_exp), round_dp
         ),
         k,
     )
@@ -4413,12 +4308,10 @@ def bm25_variant_topk(
     exchange over the matched postings."""
     if delta is None:
         delta = _BM25_VARIANT_DELTA.get(variant, 1.0)
-    hits, n_docs, avgdl, _ = _sim_corpus_hits(
-        docs, queries, conf, text_col, id_col
-    )
+    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
     return rank_topk(
         _maybe_round(
-            _bm25v_scored(hits, n_docs, avgdl, conf, variant, delta), round_dp
+            _bm25v_scored(hits, cp.n_docs, cp.avgdl, conf, variant, delta), round_dp
         ),
         k,
     )
@@ -4546,8 +4439,7 @@ def constant_score_topk(
     DROPS the doc-stats join and the weight arithmetic — a match-only
     semi-join shape; the distinct is the usual sparse fine-keyed agg."""
     post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    qt = query_terms(queries)
-    m = post.join(F.broadcast(qt), "term")
+    m = post.join(F.broadcast(query_terms(queries, conf)), "term")
     return _constant_score_epilogue(m, boost, k)
 
 
@@ -4591,10 +4483,10 @@ def match_bool_prefix_topk(
     from igd_spark.search import _cap_expansions, _phrase_prefix_parts
     from igd_spark.tokenizer import _analyzer_pred
 
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
+    cp = _corpus_parts(docs, None, conf, text_col, id_col)
     literals, prefixes, _ = _phrase_prefix_parts(queries, conf.token_split_re)
     pred = _analyzer_pred(conf.stopwords, conf.min_token_len)
-    vocab = post.select("term").filter(pred(F.col("term"))).distinct()
+    vocab = cp.post.select("term").filter(pred(F.col("term"))).distinct()
     exp = _cap_expansions(
         vocab.join(F.broadcast(prefixes), F.col("term").startswith(F.col("prefix"))),
         max_expansions,
@@ -4604,12 +4496,9 @@ def match_bool_prefix_topk(
         .unionByName(exp.select("query_id", "term"))
         .dropDuplicates(["query_id", "term"])
     )
-    qt_idf = qterms.join(term_stats(post), "term").withColumn(
-        "idf", idf_col(n_docs, "df")
-    )
-    return rank_topk(
-        _maybe_round(_score_terms(post, ds, avgdl, qt_idf, conf), round_dp), k
-    )
+    qt_idf = _idf_join(qterms, cp.ts, cp.n_docs)
+    scored = _score_terms(cp.post, cp.ds, cp.avgdl, qt_idf, conf)
+    return rank_topk(_maybe_round(scored, round_dp), k)
 
 
 def match_bool_prefix_topk_indexed(
@@ -4717,14 +4606,10 @@ def ids_bm25_topk(
     semi-joins the postings BELOW the score agg, so scoring work is
     O(|ids| x query terms), independent of corpus size."""
     allowed = _ids_frame(docs.sparkSession, ids)
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    qt = query_terms(queries)
-    ts = term_stats(post)
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
-    post_f = post.join(F.broadcast(allowed), "doc_id", "left_semi")
-    return rank_topk(
-        _maybe_round(_score_terms(post_f, ds, avgdl, qt_idf, conf), round_dp), k
-    )
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    post_f = cp.post.join(F.broadcast(allowed), "doc_id", "left_semi")
+    scored = _score_terms(post_f, cp.ds, cp.avgdl, cp.qt_idf, conf)
+    return rank_topk(_maybe_round(scored, round_dp), k)
 
 
 def ids_bm25_topk_indexed(
@@ -4794,11 +4679,10 @@ def passage_bm25_topk(
         ).alias("ckey"),
         "chunk_text",
     )
-    post, ds, n_chunks, avgdl = _corpus_parts(ck, conf, "chunk_text", "ckey")
-    qt = query_terms(queries)
-    ts = term_stats(post)
-    qt_idf = qt.join(ts, "term").withColumn("idf", idf_col(n_chunks, "df"))
-    scored = _maybe_round(_score_terms(post, ds, avgdl, qt_idf, conf), round_dp)
+    cp = _corpus_parts(ck, queries, conf, "chunk_text", "ckey")
+    scored = _maybe_round(
+        _score_terms(cp.post, cp.ds, cp.avgdl, cp.qt_idf, conf), round_dp
+    )
     parts = F.split(F.col("doc_id"), "#")
     split_back = scored.select(
         "query_id",
@@ -5031,16 +4915,12 @@ def prf_bm25_topk(
         )
     if not 0.0 < orig_weight <= 1.0:
         raise ValueError(f"orig_weight must be in (0, 1], got {orig_weight}")
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    cs = corpus_stats(ds).collect()[0]
-    n_docs, avgdl = int(cs["n_docs"]), float(cs["avgdl"])
-    ts = term_stats(post)
-    qt = query_terms(queries)
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    post, ds, qt = cp.post, cp.ds, cp.qt
 
     def _pass(qterms: DataFrame) -> DataFrame:
         """(query_id, term, weight) → weighted per-doc BM25 sum."""
-        qd = qterms.join(ts, "term").withColumn("idf", idf_col(n_docs, "df"))
+        qd = _idf_join(qterms, cp.ts, cp.n_docs)
         sc = (
             post.join(
                 F.broadcast(qd.select("query_id", "term", "idf", "weight")),
@@ -5048,9 +4928,7 @@ def prf_bm25_topk(
             )
             .join(ds, "doc_id")
         )
-        w = bm25_weight_col(
-            F.col("idf"), "tf", "dl", avgdl, conf.k1, conf.b
-        )
+        w = bm25_weight_col(F.col("idf"), "tf", "dl", cp.avgdl, conf.k1, conf.b)
         return sc.groupBy("query_id", "doc_id").agg(
             F.sum(w * F.col("weight")).alias("score")
         )
@@ -5141,7 +5019,7 @@ def proximity_bm25_topk(
     if prox_weight < 0.0:
         raise ValueError(f"prox_weight must be >= 0, got {prox_weight}")
     base = bm25_scores(docs, queries, conf=conf, text_col=text_col, id_col=id_col)
-    qt = query_terms(queries)
+    qt = query_terms(queries, conf)
     pp = positional_postings(docs, text_col=text_col, id_col=id_col, conf=conf)
     qpos = pp.join(
         F.broadcast(qt.select("query_id", "term").distinct()), "term"
@@ -5205,12 +5083,11 @@ def proximity_bm25_topk_indexed(
     blocks are read on either side; the corpus text is never in the
     plan."""
     from igd_spark.search import positional_enumerate
-    from igd_spark.search import query_terms as _qt
 
     if prox_weight < 0.0:
         raise ValueError(f"prox_weight must be >= 0, got {prox_weight}")
     base = _indexed_scored(spark, idx, queries)
-    qt = _qt(queries)
+    qt = query_terms(queries, idx.conf)
     qpos = positional_enumerate(spark, idx, queries, terms=qt).select(
         "query_id", "doc_id", "term", "pos"
     )
@@ -5248,7 +5125,7 @@ def prf_bm25_topk_indexed(
         )
     if not 0.0 < orig_weight <= 1.0:
         raise ValueError(f"orig_weight must be in (0, 1], got {orig_weight}")
-    qt = query_terms(queries, split_re=idx.conf.token_split_re)
+    qt = query_terms(queries, idx.conf)
     s1 = _indexed_scored(spark, idx, queries).withColumn(
         "score", F.round("score", 6)
     )

@@ -50,9 +50,7 @@ from pyspark.sql import functions as F
 
 from igd_spark.config import DEFAULT_CONF, IndexConf
 from igd_spark.scoring import bm25_weight_col, idf_col
-from igd_spark.search import phrase_match, rank_topk
-from igd_spark.stats import corpus_stats, doc_stats, term_stats
-from igd_spark.tokenizer import postings
+from igd_spark.search import _corpus_parts, _idf_join, phrase_match, rank_topk
 
 _WORD_RE = re.compile(r"[a-z0-9]+")
 _TOKEN_RE = re.compile(r'([+-]?)"([^"]*)"|(\S+)')
@@ -217,29 +215,21 @@ def parsed_matches(
     if not cl_rows:
         return spark.createDataFrame([], _EMPTY_SCHEMA)
 
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    cs = corpus_stats(ds).collect()[0]
-    n_docs = int(cs["n_docs"])
-    if n_docs == 0:
-        # empty batch (e.g. an empty streaming micro-batch): avgdl is NULL
-        # and there is nothing to match — return the empty frame instead
-        # of crashing the caller's streaming query
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    avgdl = float(cs["avgdl"])
-    ts = term_stats(post)
+    # an empty batch (e.g. an empty streaming micro-batch) scores nothing:
+    # the prologue's empty postings leave every join below empty
+    cp = _corpus_parts(docs, None, conf, text_col, id_col)
 
     # one postings join scores every clause of every query
     clause_terms = (
-        comp.clause_terms(ts) if comp is not None
-        else _clause_terms(spark, cl_rows, ts)
+        comp.clause_terms(cp.ts) if comp is not None
+        else _clause_terms(spark, cl_rows, cp.ts)
     )
     w = bm25_weight_col(
-        F.col("wmul") * idf_col(n_docs, "df"), "tf", "dl", avgdl, conf.k1, conf.b
+        F.col("wmul") * F.col("idf"), "tf", "dl", cp.avgdl, conf.k1, conf.b
     )
     contrib = (
-        post.join(F.broadcast(clause_terms.join(ts, "term")), "term")
-        .join(ds, "doc_id")
+        cp.post.join(F.broadcast(_idf_join(clause_terms, cp.ts, cp.n_docs)), "term")
+        .join(cp.ds, "doc_id")
         .select("ckey", "doc_id", w.alias("w"))
     )
     ph_rows = [(ck, text) for ck, _, _, kind, text, _ in cl_rows if kind == "phrase"]
@@ -802,23 +792,19 @@ def simple_query_string_topk(
     data-sized operation is the postings join, bounded by the clause
     terms' total df (negated atoms included — their postings are the veto
     evidence), never the corpus."""
-    from igd_spark.querylang import _corpus_parts
-
     spark = docs.sparkSession
     rows = _sqs_clause_rows(queries, default_operator)
     cl = spark.createDataFrame(
         rows, "query_id long, gid int, term string, neg boolean"
     )
-    post, ds, n_docs, avgdl = _corpus_parts(docs, conf, text_col, id_col)
-    probe = cl.join(term_stats(post), "term").withColumn(
-        "idf", idf_col(n_docs, "df")
-    )
+    cp = _corpus_parts(docs, None, conf, text_col, id_col)
+    probe = _idf_join(cl, cp.ts, cp.n_docs)
     j = (
-        post.join(F.broadcast(probe), "term")
-        .join(ds, "doc_id")
+        cp.post.join(F.broadcast(probe), "term")
+        .join(cp.ds, "doc_id")
         .withColumn(
             "w",
-            bm25_weight_col(F.col("idf"), "tf", "dl", avgdl, conf.k1, conf.b),
+            bm25_weight_col(F.col("idf"), "tf", "dl", cp.avgdl, conf.k1, conf.b),
         )
         .select("query_id", "gid", "doc_id", "term", "neg", "w")
     )

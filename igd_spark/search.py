@@ -24,7 +24,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,27 +47,23 @@ TOPK_SCHEMA = T.StructType(
 
 
 def query_terms(
-    queries: DataFrame,
-    text_col: str = "query_text",
-    split_re: str | None = None,
+    queries: DataFrame, conf: IndexConf, text_col: str = "query_text"
 ) -> DataFrame:
     """(query_id, term) — distinct terms per query (duplicates score once,
     shared convention with oracle + SQL). The cross-row dropDuplicates also
     covers a query_id appearing on multiple input rows — without it, shared
     terms would double their BM25 contribution. The query side is always
     tiny relative to the corpus, so the extra shuffle is noise.
-    ``split_re`` overrides the tokenizer regex (operators under a custom
-    analyzer MUST pass their conf's, or clause terms silently miss the
-    conf-tokenized occurrence/posting stream)."""
-    toks = (
-        tokens_col(F.col(text_col))
-        if split_re is None
-        else tokens_col(F.col(text_col), split_re)
-    )
+
+    ``conf`` IS the query analyzer: pass the conf (or ``idx.conf``) whose
+    tokenizer produced the postings the terms are joined against — a query
+    split with any other regex silently misses conf-tokenized terms."""
     return (
         queries.select(
             "query_id",
-            F.explode(F.array_distinct(toks)).alias("term"),
+            F.explode(
+                F.array_distinct(tokens_col(F.col(text_col), conf.token_split_re))
+            ).alias("term"),
         )
         .filter(F.col("term") != "")
         .dropDuplicates(["query_id", "term"])
@@ -84,6 +80,81 @@ def rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _idf_join(
+    terms: DataFrame, ts: DataFrame, n_docs: int, on: str | list | Column = "term"
+) -> DataFrame:
+    """``terms`` ⋈ a (term, df) table on ``on``, plus the BM25 ``idf``
+    column — the one idf join of every DataFrame-statistics scorer.  Terms
+    without a df row drop (unknown terms → 0 hits)."""
+    return terms.join(ts, on).withColumn("idf", idf_col(n_docs, "df"))
+
+
+class _Corpus(NamedTuple):
+    """One corpus scan's scoring inputs (`_corpus_parts`)."""
+
+    post: DataFrame  # (term, doc_id, tf)
+    ds: DataFrame  # (doc_id, dl) for every doc
+    ts: DataFrame  # (term, df)
+    n_docs: int
+    avgdl: float  # 0.0 for an empty corpus
+    sum_dl: int
+    qt: DataFrame | None  # conf-tokenized (query_id, term); None without queries
+
+    @property
+    def qt_idf(self) -> DataFrame:
+        """(query_id, term, df, idf) — corpus-absent query terms drop."""
+        return _idf_join(self.qt, self.ts, self.n_docs)
+
+
+def _corpus_parts(
+    docs: DataFrame,
+    queries: DataFrame | None,
+    conf: IndexConf,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> _Corpus:
+    """The ONE prologue of every corpus-scan (index-free) scorer: postings,
+    doc_stats and term_stats off the ``conf`` tokenizer, n_docs / avgdl /
+    sum_dl from ONE stats job, and the query terms split by the same conf.
+    An empty corpus yields avgdl 0.0 (SQL's average is NULL there) and
+    empty postings, so every scorer built on it returns no rows."""
+    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
+    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
+    cs = corpus_stats(ds).collect()[0]
+    qt = None if queries is None else query_terms(queries, conf)
+    return _Corpus(
+        post, ds, term_stats(post), int(cs["n_docs"]), float(cs["avgdl"] or 0.0),
+        int(cs["sum_dl"]), qt,
+    )
+
+
+def _score_terms(
+    post: DataFrame,
+    ds: DataFrame,
+    avgdl: float,
+    qt_idf: DataFrame,
+    conf: IndexConf,
+    extra_aggs: tuple[Column, ...] = (),
+    broadcast_terms: bool = True,
+    min_tf: int = 0,
+) -> DataFrame:
+    """Score an explicit (query_id, term, idf) set: postings ⋈(broadcast)
+    terms ⋈ doc_stats → hash agg on (query_id, doc_id), with optional extra
+    aggregates riding the same agg.  min_tf is the value-threshold filter
+    (src/igd_search.c:623-694 analog) pushed below the aggregation.
+    ``broadcast_terms=False`` leaves the join strategy to Catalyst/AQE —
+    for term sets of unbounded size (prefix expansion)."""
+    qsel = qt_idf.select("query_id", "term", "idf")
+    scored = post.join(F.broadcast(qsel) if broadcast_terms else qsel, "term")
+    if min_tf > 0:
+        scored = scored.filter(F.col("tf") >= min_tf)
+    scored = scored.join(ds, "doc_id")
+    w = bm25_weight_col(F.col("idf"), "tf", "dl", avgdl, conf.k1, conf.b)
+    return scored.groupBy("query_id", "doc_id").agg(
+        F.sum(w).alias("score"), *extra_aggs
+    )
+
+
 def bm25_scores(
     docs: DataFrame,
     queries: DataFrame,
@@ -93,25 +164,11 @@ def bm25_scores(
     min_tf: int = 0,
 ) -> DataFrame:
     """Unranked exact BM25 scores (query_id, doc_id, score), pure DataFrame
-    ops. Plan shape: postings ⋈(broadcast) query-terms → ⋈ doc_stats on
-    doc_id → partial+final hash agg on (query_id, doc_id). min_tf is the
-    value-threshold filter (src/igd_search.c:623-694 analog) pushed below
-    the aggregation."""
-    post = postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    ds = doc_stats(docs, text_col=text_col, id_col=id_col, conf=conf)
-    cs = corpus_stats(ds).collect()[0]
-    n_docs, avgdl = int(cs["n_docs"]), float(cs["avgdl"])
-    qt = query_terms(queries, split_re=conf.token_split_re)
-    ts = term_stats(post)
-    qt_df = qt.join(ts, "term", "inner").withColumn(  # unknown terms → 0 hits
-        "idf", idf_col(n_docs, "df")
-    )
-    scored = post.join(F.broadcast(qt_df.select("query_id", "term", "idf")), "term")
-    if min_tf > 0:
-        scored = scored.filter(F.col("tf") >= min_tf)
-    scored = scored.join(ds, "doc_id")
-    w = bm25_weight_col(F.col("idf"), "tf", "dl", float(avgdl), conf.k1, conf.b)
-    return scored.groupBy("query_id", "doc_id").agg(F.sum(w).alias("score"))
+    ops: the corpus prologue + `_score_terms`.  Plan shape: postings
+    ⋈(broadcast) query-terms → ⋈ doc_stats on doc_id → partial+final hash
+    agg on (query_id, doc_id)."""
+    c = _corpus_parts(docs, queries, conf, text_col, id_col)
+    return _score_terms(c.post, c.ds, c.avgdl, c.qt_idf, conf, min_tf=min_tf)
 
 
 def exact_bm25_topk(
@@ -1089,7 +1146,7 @@ def search(
             )
     else:
         # unbounded path: no per-query driver state, pruning via the join
-        qt = query_terms(queries, split_re=conf.token_split_re)
+        qt = query_terms(queries, conf)
         qdict = (
             idx.dictionary.join(F.broadcast(qt), "term")
             .withColumn("idf", idf_col(idx.n_docs, "df"))
@@ -1725,7 +1782,7 @@ def search_federated(
     n_docs = sum(int(i.n_docs) for i in indexes)
     sum_dl = sum(int(i.meta["corpus"]["sum_dl"]) for i in indexes)
     avgdl = (sum_dl / n_docs) if n_docs else 0.0
-    qt = query_terms(queries)
+    qt = query_terms(queries, c0)
     qterms = qt.select("term").distinct()
     df_parts = [
         i.dictionary.join(F.broadcast(qterms), "term").select("term", "df")
@@ -1741,9 +1798,9 @@ def search_federated(
     me = enums[0]
     for e in enums[1:]:
         me = me.unionByName(e)
-    w = bm25_weight_col(idf_col(n_docs, "df"), "tf", "dl", avgdl, c0.k1, c0.b)
+    w = bm25_weight_col(F.col("idf"), "tf", "dl", avgdl, c0.k1, c0.b)
     scored = (
-        me.join(F.broadcast(df_g), "term")
+        _idf_join(me, F.broadcast(df_g), n_docs)
         .groupBy("query_id", "doc_id")
         .agg(F.sum(w).alias("score"))
     )
@@ -1770,7 +1827,7 @@ def positional_enumerate(
     qt = (
         terms.select("query_id", "term")
         if terms is not None
-        else query_terms(queries, split_re=idx.conf.token_split_re)
+        else query_terms(queries, idx.conf)
     )
     # literal resolution (see _literal_pos_qdict): analyzer-filtered query
     # terms still enumerate their raw-stream occurrences
@@ -1864,7 +1921,7 @@ def match_enumerate(
     qt = (
         terms.select("query_id", "term")
         if terms is not None
-        else query_terms(queries, split_re=idx.conf.token_split_re)
+        else query_terms(queries, idx.conf)
     )
     qdict = idx.dictionary.join(F.broadcast(qt), "term").select(
         "query_id", "term_id", "n_salts"
@@ -1989,7 +2046,7 @@ def span_first_match(
     if end <= 0:
         raise ValueError(f"end must be positive, got {end}")
     occ = positional_postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    qt = query_terms(queries)
+    qt = query_terms(queries, conf)
     j = occ.join(F.broadcast(qt), "term").filter(F.col("pos") < end)
     return j.groupBy("query_id", "doc_id").agg(
         F.count("*").cast("long").alias("n_hits")
@@ -2094,12 +2151,10 @@ def span_not_match(
     """
     occ = positional_postings(docs, text_col=text_col, id_col=id_col, conf=conf)
     inc = occ.join(
-        F.broadcast(query_terms(queries, split_re=conf.token_split_re)), "term"
+        F.broadcast(query_terms(queries, conf)), "term"
     ).select("query_id", "doc_id", "pos")
     exc = occ.join(
-        F.broadcast(query_terms(
-            _exclude_queries(queries, exclude), split_re=conf.token_split_re
-        )),
+        F.broadcast(query_terms(_exclude_queries(queries, exclude), conf)),
         "term",
     ).select("query_id", "doc_id", "pos")
     return _span_not_epilogue(inc, exc, pre, post)
@@ -2178,7 +2233,7 @@ def _span_pair_sets(
     queries: DataFrame,
     little,
     span: int,
-    split_re: str,
+    conf: IndexConf,
 ) -> tuple[DataFrame, DataFrame]:
     """(spans, little_occ) from one occurrence stream ``occ`` =
     (query_id-joinable (term, doc_id, pos) rows): spans are ordered big
@@ -2186,7 +2241,7 @@ def _span_pair_sets(
     occurrences."""
     if span < 1:
         raise ValueError(f"span must be >= 1, got {span}")
-    b1, b2 = _span_pair_parts(queries, split_re)
+    b1, b2 = _span_pair_parts(queries, conf.token_split_re)
     o1 = occ.join(F.broadcast(b1), "term").select(
         "query_id", "doc_id", F.col("pos").alias("p1")
     )
@@ -2202,7 +2257,7 @@ def _span_pair_sets(
         & (F.col("p2") > F.col("p1"))
         & (F.col("p2") <= F.col("p1") + F.lit(span)),
     ).select("query_id", "doc_id", "p1", "p2")
-    lt = query_terms(_exclude_queries(queries, little), split_re=split_re)
+    lt = query_terms(_exclude_queries(queries, little), conf)
     little_occ = occ.join(F.broadcast(lt), "term").select(
         "query_id", "doc_id", "pos"
     )
@@ -2275,7 +2330,7 @@ def span_containing_match(
     corpus-shaped); the containment test is a semi-join, so little-side
     fan-out can't duplicate spans."""
     occ = positional_postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    spans, lo = _span_pair_sets(occ, queries, little, span, conf.token_split_re)
+    spans, lo = _span_pair_sets(occ, queries, little, span, conf)
     return _span_containing_epilogue(spans, lo)
 
 
@@ -2293,7 +2348,7 @@ def span_within_match(
     occurrences that fall INSIDE at least one big span.  Same big-span
     construction, same output shape."""
     occ = positional_postings(docs, text_col=text_col, id_col=id_col, conf=conf)
-    spans, lo = _span_pair_sets(occ, queries, little, span, conf.token_split_re)
+    spans, lo = _span_pair_sets(occ, queries, little, span, conf)
     return _span_within_epilogue(spans, lo)
 
 
@@ -2311,9 +2366,8 @@ def _span_pair_sets_indexed(
     queries = _materialize_local_queries(spark, queries)
     if span < 1:
         raise ValueError(f"span must be >= 1, got {span}")
-    split_re = idx.conf.token_split_re
-    b1, b2 = _span_pair_parts(queries, split_re)
-    lt = query_terms(_exclude_queries(queries, little), split_re=split_re)
+    b1, b2 = _span_pair_parts(queries, idx.conf.token_split_re)
+    lt = query_terms(_exclude_queries(queries, little), idx.conf)
     all_terms = b1.unionByName(b2).unionByName(lt).dropDuplicates(
         ["query_id", "term"]
     )
@@ -2455,9 +2509,9 @@ def span_or_match(
         raise ValueError(f"span must be >= 1, got {span}")
     occ = positional_postings(docs, text_col=text_col, id_col=id_col, conf=conf)
     b1, _ = _span_pair_parts(queries, conf.token_split_re)
-    alts = query_terms(
-        _alt_queries(queries, alternatives), split_re=conf.token_split_re
-    ).dropDuplicates(["query_id", "term"])
+    alts = query_terms(_alt_queries(queries, alternatives), conf).dropDuplicates(
+        ["query_id", "term"]
+    )
     return _span_or_epilogue(occ, b1, alts, span)
 
 
@@ -2502,9 +2556,9 @@ def span_or_match_indexed(
         return routed
     queries = _materialize_local_queries(spark, queries)
     b1, _ = _span_pair_parts(queries, idx.conf.token_split_re)
-    alts = query_terms(
-        _alt_queries(queries, alternatives), split_re=idx.conf.token_split_re
-    ).dropDuplicates(["query_id", "term"])
+    alts = query_terms(_alt_queries(queries, alternatives), idx.conf).dropDuplicates(
+        ["query_id", "term"]
+    )
     all_terms = b1.unionByName(alts).dropDuplicates(["query_id", "term"])
     occ = positional_enumerate(spark, idx, queries, terms=all_terms)
     return _span_or_epilogue(occ, b1, alts, span)

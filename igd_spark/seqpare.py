@@ -49,7 +49,7 @@ def query_doc_jaccard(
     sharing ≥1 term. |∩| via the shared-term join, |q| and |d| via distinct
     term counts; sm = inter / (nq + nd - inter). The overlap-enumeration
     phase of seq_overlaps (src/igd_search.c:253-353)."""
-    qt = query_terms(queries)
+    qt = query_terms(queries, conf)
     qsizes = qt.groupBy("query_id").agg(F.count("*").alias("nq"))
     dterms = postings(docs, text_col=text_col, id_col=id_col, conf=conf).select(
         "doc_id", "term"

@@ -398,11 +398,30 @@ def test_unbounded_path_tokenizes_with_the_index_regex(spark, tmp_path, monkeypa
 def test_corpus_oracles_tokenize_queries_with_the_conf_regex(spark, tmp_path):
     """The corpus-scan scorers tokenize documents with conf.token_split_re,
     so their queries must be split the same way: under a custom regex,
-    exact_bm25_topk ranks like search and tfidf_topk like
-    tfidf_topk_indexed, row for row."""
-    from igd_spark import exact_bm25_topk, tfidf_topk, tfidf_topk_indexed
+    every corpus-scan scorer agrees row for row with its indexed twin
+    (exact_bm25_topk and boosting with an empty negative clause with
+    search, tfidf, msm, filtered, LM-Dirichlet and span-first with their
+    *_indexed variants), and search_federated over the one index with
+    search."""
+    from igd_spark import (
+        boosting_bm25_topk,
+        exact_bm25_topk,
+        filtered_bm25_topk,
+        filtered_bm25_topk_indexed,
+        lm_dirichlet_topk,
+        lm_dirichlet_topk_indexed,
+        msm_bm25_topk,
+        msm_bm25_topk_indexed,
+        search_federated,
+        span_first_match,
+        span_first_match_indexed,
+        tfidf_topk,
+        tfidf_topk_indexed,
+    )
 
-    conf = IndexConf(block_size=8, n_shards=2, token_split_re=r"[^a-z0-9_]+")
+    conf = IndexConf(
+        block_size=8, n_shards=2, token_split_re=r"[^a-z0-9_]+", store_positions=True
+    )
     texts = [
         "alpha_beta gamma", "alpha beta", "alpha beta gamma", "beta_gamma alpha",
         "alpha_beta alpha_beta delta", "gamma delta", "beta", "alpha_beta beta_gamma",
@@ -426,3 +445,46 @@ def test_corpus_oracles_tokenize_queries_with_the_conf_regex(spark, tmp_path):
     want_tfidf = key(tfidf_topk_indexed(spark, idx, q, k=5))
     assert want_tfidf
     assert key(tfidf_topk(docs, q, k=5, conf=conf)) == want_tfidf
+    pairs = [
+        (
+            msm_bm25_topk(docs, q, min_should_match=1, k=5, conf=conf),
+            msm_bm25_topk_indexed(spark, idx, q, min_should_match=1, k=5),
+        ),
+        (
+            filtered_bm25_topk(docs, q, "doc_id >= 0", k=5, conf=conf),
+            filtered_bm25_topk_indexed(spark, idx, q, docs, "doc_id >= 0", k=5),
+        ),
+        (
+            lm_dirichlet_topk(docs, q, k=5, conf=conf),
+            lm_dirichlet_topk_indexed(spark, idx, q, k=5),
+        ),
+        (
+            boosting_bm25_topk(
+                docs, q.withColumn("negative_text", F.lit("")), k=5, conf=conf
+            ),
+            search(spark, idx, q, k=5),
+        ),
+        (search_federated(spark, [idx], q, k=5), search(spark, idx, q, k=5)),
+    ]
+    for corpus_scan, indexed in pairs:
+        got, twin = key(corpus_scan), key(indexed)
+        assert twin and got == twin
+
+    def span_key(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    spans = span_key(span_first_match(docs, q, end=1, conf=conf))
+    assert spans
+    assert spans == span_key(span_first_match_indexed(spark, idx, q, end=1))
+
+
+def test_corpus_scorers_return_no_rows_on_an_empty_corpus(spark):
+    """An empty docs frame has n_docs 0 and a NULL average length; the
+    corpus prologue turns that into an empty result for every scorer
+    instead of a float(None) TypeError."""
+    from igd_spark import exact_bm25_topk, lm_dirichlet_topk, msm_bm25_topk, tfidf_topk
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    q = spark.createDataFrame([(0, "alpha beta")], "query_id long, query_text string")
+    for scorer in (exact_bm25_topk, msm_bm25_topk, tfidf_topk, lm_dirichlet_topk):
+        assert scorer(docs, q, k=5).collect() == [], scorer.__name__

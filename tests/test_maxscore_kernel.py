@@ -14,6 +14,7 @@ import pytest
 import math
 
 from igd_spark import IndexConf, build_index, exact_bm25_topk
+from igd_spark.config import DEFAULT_CONF
 from igd_spark.corpus import assign_doc_ids
 from igd_spark.search import _maxscore_kernel, query_terms
 
@@ -35,7 +36,7 @@ def kernel_inputs(spark, tiny_docs, tmp_path_factory):
     queries = spark.createDataFrame(
         pd.DataFrame({"query_id": [0], "query_text": ["error t00000"]})
     )
-    qt = {r["term"] for r in query_terms(queries).collect()}
+    qt = {r["term"] for r in query_terms(queries, DEFAULT_CONF).collect()}
     drows = idx.dictionary.filter(idx.dictionary.term.isin(list(qt))).collect()
     term_ids = {r["term"]: int(r["term_id"]) for r in drows}
     dfs = {r["term"]: int(r["df"]) for r in drows}

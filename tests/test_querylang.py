@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from igd_spark.config import DEFAULT_CONF
 from igd_spark.corpus import assign_doc_ids
 from igd_spark.querylang import (
     bool_bm25_topk,
@@ -468,7 +469,7 @@ def test_fuzzy_deletes_equals_scan(spark, docs):
     ts = term_stats(postings(docs))
     t1, t2 = _pick_terms(docs, 2)
     q = _queries(spark, [(0, f"{t1[:-1]}x {t2}"), (1, "zzznotavocab"), (2, "a")])
-    qt = query_terms(q)
+    qt = query_terms(q, DEFAULT_CONF)
     for d in (1, 2):
         a = fuzzy_expand(qt, ts, max_edits=d, mode="deletes")
         b = fuzzy_expand(qt, ts, max_edits=d, mode="scan")
@@ -680,7 +681,7 @@ def test_fuzzy_boost_floor(spark, docs):
     ts = term_stats(postings(docs))
     q = _queries(spark, [(0, "a")])
     for d in (1, 2):
-        exp = fuzzy_expand(query_terms(q), ts, max_edits=d).toPandas()
+        exp = fuzzy_expand(query_terms(q, DEFAULT_CONF), ts, max_edits=d).toPandas()
         assert (exp["boost"] > 0).all()
         assert (exp["boost"] <= 1.0).all()
 
