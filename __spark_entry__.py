@@ -179,8 +179,8 @@ BM25P_DELTA = 1.0             # BM25+ per-match floor (Lv & Zhai default)
 BM25L_DELTA = 0.5             # BM25L saturation shift (Lv & Zhai default)
 BM25_K1 = 1.2                 # IndexConf defaults (BASELINE-fixed)
 BM25_B = 0.75
-INV_LN2 = 1.4426950408889634  # shared log2 literal (querylang._INV_LN2)
-TWO_PI = 6.283185307179586    # shared 2π literal (querylang._TWO_PI)
+INV_LN2 = 1.4426950408889634  # shared log2 literal (scoring._INV_LN2)
+TWO_PI = 6.283185307179586    # shared 2π literal (scoring._TWO_PI)
 AUTODH_TARGET = 10            # auto_date_histogram bucket budget
 DUP_SPAN_LEN = 8              # exact-substring dedup window (tokens)
 FUNNEL_STEPS = ("signup", "click", "purchase")  # funnel step sequence

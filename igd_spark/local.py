@@ -20,19 +20,22 @@ runs ONE pipeline, like the reference's one search_1/search_n kernel:
       → lists     shards_for() probe set, pyarrow row-group-pruned reads of
                   the few matching block rows, decoded into the list LRU
       → weigh     each term's (doc_ids, contribution) ONCE per batch —
-                  BM25 (_bm25, _bm25_idf) or a sim_weigher model
+                  BM25 (_bm25, _bm25_idf) or a sim_weigher model, whose
+                  weight is scoring.SIMILARITIES' expression in numpy
       → score     per-query accumulate (thread pool past 4 queries), the
                   optional AND/NOT keep-mask, Spark HALF_UP rounding,
                   (score desc, doc_id asc) top-k → one frame (_frame)
 
 No SparkSession is touched. Results are exactly the cluster plans' top-k
-(same formula, same tie-break; tested rank-identical). At 100 TB the reads
-stay small — a term's blocks are contiguous row-group runs inside its
-shard's files — and the routes only admit a batch when its total scoring
-work Σ_q Σ_t df(t) (batch_cost, over the same term sets the kernel
-scores) fits the conf.driver_search_max_postings budget (known exactly
-from the dictionary before any block is read), so a hot-term batch over a
-trillion-turn index takes the cluster path regardless of query count.
+(same formula, same tie-break; tested rank-identical): the alternative
+similarities share the cluster plans' expression itself, not a copy. At
+100 TB the reads stay small — a term's blocks are contiguous row-group
+runs inside its shard's files — and the routes only admit a batch when its
+total scoring work Σ_q Σ_t df(t) (batch_cost, over the same term sets the
+kernel scores) fits the conf.driver_search_max_postings budget (known
+exactly from the dictionary before any block is read), so a hot-term batch
+over a trillion-turn index takes the cluster path regardless of query
+count.
 
 Decoded posting lists live in a per-handle LRU (the reference caches its
 last-read tile, src/igd_search.c:469-475; here the cache spans terms and
@@ -51,13 +54,7 @@ import pandas as pd
 
 from igd_spark import codec
 from igd_spark.build import shards_for
-
-# Same shared double literals as querylang (_INV_LN2/_TWO_PI there): every
-# engine expresses log2 as ln·(1/ln2) with this exact constant so 6-dp
-# rounding never straddles an engine-specific log2.
-_INV_LN2 = 1.4426950408889634
-_TWO_PI = 6.283185307179586
-_AX_S = 0.5  # Axiomatic F2 length-normalization constant (querylang._AX_S)
+from igd_spark.scoring import NUMPY_OPS, index_sim_stats, similarity
 
 _EMPTY_BATCH = pd.DataFrame(
     {
@@ -387,83 +384,18 @@ class LocalSearcher:
         (tombstone-filtered) lists — the same statistics the cluster twin
         derives from enumerated pruned blocks, so rank identity holds
         under deletes; N, avgdl and total tokens come from the frozen
-        corpus metadata, like the cluster path.  The numpy expressions
-        mirror querylang's Catalyst trees operation-for-operation (same
-        shared 1/ln2 and 2π literals, same grouping) so 6-dp rounding
-        never straddles engines.  These models have no block-max bound, so
-        the full match map is scored (that is exactly what the admission
-        budget priced)."""
-        n_docs, conf = self.n_docs, self.conf
-        if model in ("lm_jm", "dfi"):
-            if model == "lm_jm" and not (0.0 < lam < 1.0):
-                raise ValueError(f"lambda must be in (0, 1), got {lam}")
-            total = float(self.idx.meta["corpus"].get("sum_dl", 0))
-            if total <= 0:
-                raise ValueError("index metadata lacks exact sum_dl")
-        elif model in ("pl2", "ib_ll"):
-            if not lam > 0.0:  # the lam slot carries the H2 strength c
-                raise ValueError(f"H2 normalization c must be > 0, got {lam}")
-            avgdl = float(self.idx.meta["corpus"]["avgdl"])
-            c_avgdl = lam * avgdl  # folded exactly like querylang._h2_tfn
-        elif model in ("ax_f2exp", "ax_f2log"):
-            avgdl = float(self.idx.meta["corpus"]["avgdl"])
-        elif model in ("bm25_plus", "bm25_l"):
-            if not lam >= 0.0:  # the lam slot carries delta
-                raise ValueError(f"delta must be >= 0, got {lam}")
-            avgdl = float(self.idx.meta["corpus"]["avgdl"])
-        elif model != "tfidf":
-            raise ValueError(
-                "model must be tfidf|lm_jm|dfi|pl2|ib_ll|ax_f2exp|ax_f2log|"
-                f"bm25_plus|bm25_l, got {model!r}"
-            )
+        corpus metadata, like the cluster path.  The weight is
+        scoring.SIMILARITIES' expression — the one the cluster plans build
+        in Catalyst — evaluated in numpy.  These models have no block-max
+        bound, so the full match map is scored (that is exactly what the
+        admission budget priced)."""
+        weight = similarity(model, lam, driver=True).weight
+        st = index_sim_stats(self.idx, model)
 
         def weigh(tf, dl, _df):
-            n = tf.size  # the list-derived df
-            if model == "tfidf":
-                idf = 1.0 + np.log(n_docs / (n + 1.0))
-                return np.sqrt(tf) * (idf * idf) / np.sqrt(dl)
-            if model == "lm_jm":
-                cf = float(tf.sum())
-                return np.log1p(((1.0 - lam) * tf / dl) / (lam * cf / total))
-            if model == "dfi":
-                cf = float(tf.sum())
-                e = (cf + 1.0) * dl / float(total + 1)
-                mask = tf > e
-                w = np.zeros(n, dtype=np.float64)
-                # masked: log(1+m) is only defined where tf > e (m > 0)
-                m = (tf[mask] - e[mask]) / np.sqrt(e[mask])
-                w[mask] = _INV_LN2 * np.log(1.0 + m)
-                return w
-            if model == "pl2":
-                tfn = tf * _INV_LN2 * np.log(1.0 + c_avgdl / dl)
-                lamt = float(tf.sum()) / float(n_docs)
-                return np.maximum(
-                    0.0,
-                    _INV_LN2
-                    * (
-                        tfn * np.log(tfn / lamt)
-                        + (lamt - tfn)
-                        + 0.5 * np.log(_TWO_PI * tfn)
-                    )
-                    / (tfn + 1.0),
-                )
-            if model == "ib_ll":
-                tfn = tf * _INV_LN2 * np.log(1.0 + c_avgdl / dl)
-                lamt = (n + 1.0) / float(n_docs + 1)
-                return _INV_LN2 * np.log(1.0 + tfn / lamt)
-            if model in ("ax_f2exp", "ax_f2log"):
-                # Fang & Zhai axiomatic; s=0.5, lam slot = F2EXP's k
-                tf_part = tf / (tf + _AX_S + _AX_S * dl / avgdl)
-                ratio = float(n_docs + 1) / n
-                idf = ratio**lam if model == "ax_f2exp" else np.log(ratio)
-                return tf_part * idf
-            # bm25_plus / bm25_l (Lv & Zhai 2011; lam slot = delta)
-            k1, b = conf.k1, conf.b
-            idf = _bm25_idf(n_docs, n)
-            tfn = tf / ((1.0 - b) + b * dl / avgdl)
-            if model == "bm25_plus":
-                return idf * ((k1 + 1.0) * tfn / (k1 + tfn) + lam)
-            return idf * ((k1 + 1.0) * (tfn + lam) / (k1 + tfn + lam))
+            # DFI's where() takes the log of entries it then masks out
+            with np.errstate(divide="ignore", invalid="ignore"):
+                return weight(NUMPY_OPS, tf, dl, tf.size, float(tf.sum()), st, lam)
 
         return weigh
 

@@ -59,7 +59,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from igd_spark.config import DEFAULT_CONF, IndexConf
-from igd_spark.scoring import bm25_weight_col, idf_col
+from igd_spark.scoring import (
+    _BM25_VARIANT_DELTA,
+    SIMILARITIES,
+    SPARK_OPS,
+    SimStats,
+    bm25_weight_col,
+    idf_col,
+    index_sim_stats,
+    similarity,
+    variant_model,
+)
 from igd_spark.search import (
     _PROBE_BOUND,
     TOPK_SCHEMA,
@@ -639,41 +649,105 @@ def _facet_epilogue(
     )
 
 
-def _lmd_scored(
+# ---------------------------------------------------------------------------
+# Alternative similarities (LM-Dirichlet, TF-IDF, LM Jelinek-Mercer, DFI,
+# DFR-PL2, IB-LL, Axiomatic, BM25+/BM25L): one shared path per source. Each
+# weight is written once, in scoring.SIMILARITIES; here it runs as a Catalyst
+# expression over hits — (query_id, term, doc_id, tf, dl), EVERY posting of
+# every matched query term, which is what makes the per-(query, term) window
+# count and sum the true df and cf (deletes-consistent across paths: the
+# indexed hits are the tombstone-filtered enumerated blocks).
+
+
+def _sim_scored(
     hits: DataFrame,
-    mu: float,
-    total_tokens: int,
+    model: str,
+    p: float,
+    st: SimStats,
     restrict: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared LM-Dirichlet scoring epilogue of both paths — identical by
-    construction.  ``hits``: (query_id, term, doc_id, tf, dl) — EVERY
-    posting of every matched term (that completeness is what makes the
-    window-sum below the TRUE collection frequency).  Per-term
-    contribution: max(0, ln(1 + tf/(mu*p(t|C))) + ln(mu/(dl+mu))) with
-    p(t|C) = cf/total_tokens — the Zhai-Lafferty Dirichlet-prior smoothing
-    score with Lucene's non-negative clamp (clamping per TERM keeps the
-    sum order-independent, so both engines agree exactly).
+    """(query_id, doc_id, score): ``model``'s weight summed per doc, df and
+    cf from ONE (query_id, term) window over ``hits``.
 
     ``restrict`` ((query_id, doc_id) rows, e.g. a rescore window): applied
-    AFTER the cf window — cf stays the true collection frequency — but
+    AFTER the window — df/cf stay the true collection statistics — but
     BEFORE the per-doc aggregation, so only the restricted docs are
-    grouped/shuffled.  This is what bounds the rescore second pass by
+    grouped/shuffled. This is what bounds the rescore second pass by
     queries × window_size instead of the full match set."""
-    wcf = Window.partitionBy("query_id", "term")
-    h = hits.withColumn("cf", F.sum("tf").over(wcf))
+    w = Window.partitionBy("query_id", "term")
+    # one posting row per (term, doc) by construction, so count == df
+    h = hits.select(
+        "*", F.count("*").over(w).alias("df"), F.sum("tf").over(w).alias("cf")
+    )
     if restrict is not None:
         h = h.join(
             F.broadcast(restrict.select("query_id", "doc_id")),
             ["query_id", "doc_id"],
             "left_semi",
         )
-    pc = F.col("cf").cast("double") / F.lit(float(total_tokens))
-    contrib = F.greatest(
-        F.lit(0.0),
-        F.log(F.lit(1.0) + F.col("tf") / (F.lit(mu) * pc))
-        + F.log(F.lit(mu) / (F.col("dl") + F.lit(mu))),
+    contrib = SIMILARITIES[model].weight(
+        SPARK_OPS, F.col("tf"), F.col("dl"), F.col("df"), F.col("cf"), st, p
     )
     return h.groupBy("query_id", "doc_id").agg(F.sum(contrib).alias("score"))
+
+
+def _sim_corpus_hits(
+    docs: DataFrame,
+    queries: DataFrame,
+    conf: IndexConf,
+    text_col: str,
+    id_col: str,
+) -> tuple[DataFrame, SimStats, _Corpus]:
+    """(hits, stats, corpus) of a corpus scan: the hits joined from the
+    `_corpus_parts` corpus, whose exact statistics are the stats."""
+    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
+    hits = (
+        cp.post.join(F.broadcast(cp.qt), "term")
+        .join(cp.ds, "doc_id")
+        .select("query_id", "term", "doc_id", "tf", "dl")
+    )
+    return hits, SimStats(cp.n_docs, cp.avgdl, cp.sum_dl, conf.k1, conf.b), cp
+
+
+def _sim_index_hits(spark, idx, queries, model: str) -> tuple[DataFrame, SimStats]:
+    """(hits, stats) of a persisted index: hits from the enumerated pruned
+    blocks (zero corpus joins), stats from the frozen corpus metadata."""
+    from igd_spark.search import match_enumerate
+
+    st = index_sim_stats(idx, model)
+    hits = match_enumerate(spark, idx, queries, with_dl=True).select(
+        "query_id", "term", "doc_id", "tf", "dl"
+    )
+    return hits, st
+
+
+def _sim_topk(model, p, docs, queries, k, conf, text_col, id_col, round_dp):
+    """The corpus-scan `*_topk` of every alternative similarity."""
+    similarity(model, p)
+    hits, st, _ = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
+    return rank_topk(_maybe_round(_sim_scored(hits, model, p, st), round_dp), k)
+
+
+def _sim_run(model: str, k: int, p: float, round_dp: int | None):
+    """``run`` for the alternative-similarity driver routes: the Σdf bound,
+    then LocalSearcher.score_n under sim_weigher(model, p)."""
+    return _df_bounded(lambda ls, per_q: ls.score_n(
+        per_q, k, round_dp=round_dp, weigh=ls.sim_weigher(model, p)))
+
+
+def _sim_topk_indexed(model, p, spark, idx, queries, k, round_dp, engine):
+    """The `*_topk_indexed` of every alternative similarity: the parameter
+    check first (every engine fails alike), then the driver route, else the
+    distributed plan."""
+    similarity(model, p)
+    routed = _driver_route(
+        spark, idx, queries, engine, TOPK_SCHEMA, _sim_run(model, k, p, round_dp)
+    )
+    if routed is not None:
+        return routed
+    queries = _materialize_local_queries(spark, queries)
+    hits, st = _sim_index_hits(spark, idx, queries, model)
+    return rank_topk(_maybe_round(_sim_scored(hits, model, p, st), round_dp), k)
 
 
 def lm_dirichlet_topk(
@@ -699,8 +773,7 @@ def lm_dirichlet_topk(
     matched postings themselves (complete per matched term by
     construction), so no vocab-sized side agg.
     """
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(_maybe_round(_lmd_scored(hits, mu, cp.sum_dl), round_dp), k)
+    return _sim_topk("lm_dir", mu, docs, queries, k, conf, text_col, id_col, round_dp)
 
 
 def lm_dirichlet_topk_indexed(
@@ -717,17 +790,7 @@ def lm_dirichlet_topk_indexed(
     enumerated, so the per-(query, term) window sum is the exact cf);
     total corpus tokens from the index's persisted exact `sum_dl`.
     Zero corpus joins; rank-identity gate- and pytest-enforced."""
-    from igd_spark.search import match_enumerate
-
-    total = int(idx.meta["corpus"].get("sum_dl", 0))
-    if total <= 0:
-        raise ValueError(
-            "index metadata lacks exact sum_dl (pre-v2 layout?) — rebuild "
-            "or use lm_dirichlet_topk (corpus-scan path)"
-        )
-    me = match_enumerate(spark, idx, queries, with_dl=True)
-    hits = me.select("query_id", "term", "doc_id", "tf", "dl")
-    return rank_topk(_maybe_round(_lmd_scored(hits, mu, total), round_dp), k)
+    return _sim_topk_indexed("lm_dir", mu, spark, idx, queries, k, round_dp, engine="spark")
 
 
 def explain_scores(
@@ -1845,8 +1908,8 @@ def _search_after_epilogue(
 def _rescore_epilogue(
     first: DataFrame,
     hits: DataFrame,
+    st: SimStats,
     mu: float,
-    total: int,
     window_size: int,
     query_weight: float,
     rescore_weight: float,
@@ -1856,7 +1919,7 @@ def _rescore_epilogue(
     """Shared window-select + LMD-restricted-rescore + combine of both
     rescore paths — identical by construction.  The second pass is
     restricted to the window BEFORE its per-doc aggregation (via
-    `_lmd_scored(restrict=win)`), so pass-2 shuffle cost is bounded by
+    `_sim_scored(restrict=win)`), so pass-2 shuffle cost is bounded by
     queries × window_size, never the match set."""
     first = _maybe_round(first, round_dp)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -1866,7 +1929,7 @@ def _rescore_epilogue(
         .select("query_id", "doc_id", F.col("score").alias("_fs"))
     )
     second = _maybe_round(
-        _lmd_scored(hits, mu, total, restrict=win), round_dp
+        _sim_scored(hits, "lm_dir", mu, st, restrict=win), round_dp
     ).select("query_id", "doc_id", F.col("score").alias("_ls"))
     comb = win.join(second, ["query_id", "doc_id"], "left").select(
         "query_id",
@@ -1937,7 +2000,7 @@ def rescore_topk(
     second pass's cost is bounded by queries × window_size, independent of
     corpus size.  Here both passes share one postings scan (the LMD pass
     reuses the matched-postings frame, its collection frequencies computed
-    over the match set per `_lmd_scored`'s completeness argument); a more
+    over the match set per `_sim_scored`'s completeness argument); a more
     expensive reranker (cross-encoder UDF) would slot in at the same
     seam with the same bound.
 
@@ -1946,11 +2009,10 @@ def rescore_topk(
     combined score before final ranking — three float boundaries, each
     resolved on rounded values so engines can't diverge on last-ulp noise.
     """
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
+    hits, st, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
     first = _score_terms(cp.post, cp.ds, cp.avgdl, cp.qt_idf, conf)
     return _rescore_epilogue(
-        first, hits, mu, cp.sum_dl, window_size, query_weight, rescore_weight,
-        k, round_dp,
+        first, hits, st, mu, window_size, query_weight, rescore_weight, k, round_dp
     )
 
 
@@ -2064,21 +2126,12 @@ def rescore_topk_indexed(
     cf via the per-(query, term) window, total tokens from the persisted
     sum_dl) — zero corpus joins, rank-identity with the corpus path
     gate-enforced."""
-    from igd_spark.search import match_enumerate
-
-    total = int(idx.meta["corpus"].get("sum_dl", 0))
-    if total <= 0:
-        raise ValueError(
-            "index metadata lacks exact sum_dl (pre-v2 layout?) — rebuild "
-            "or use rescore_topk (corpus-scan path)"
-        )
-    me = match_enumerate(spark, idx, queries, with_dl=True)
+    hits, st = _sim_index_hits(spark, idx, queries, "lm_dir")
     # first pass through the ONE shared indexed scoring join
     # (_indexed_contrib) — never a private reimplementation
     first = _indexed_scored(spark, idx, queries)
     return _rescore_epilogue(
-        first, me.select("query_id", "term", "doc_id", "tf", "dl"), mu, total,
-        window_size, query_weight, rescore_weight, k, round_dp,
+        first, hits, st, mu, window_size, query_weight, rescore_weight, k, round_dp
     )
 
 
@@ -3384,7 +3437,7 @@ def combined_fields_bm25_topk(
     post = _union_all(posts).groupBy("doc_id", "term").agg(F.sum("wtf").alias("tf"))
     ds = _union_all(dls).groupBy("doc_id").agg(F.sum("wdl").alias("dl"))
     cs = corpus_stats(ds).collect()[0]
-    n_docs, avgdl = int(cs["n_docs"]), float(cs["avgdl"])
+    n_docs, avgdl = int(cs["n_docs"]), float(cs["avgdl"] or 0.0)
     qt_idf = _idf_join(query_terms(queries, conf), term_stats(post), n_docs)
     scored = _score_terms(post, ds, avgdl, qt_idf, conf)
     return rank_topk(_maybe_round(scored, round_dp), k)
@@ -3716,30 +3769,10 @@ def has_parent_topk_indexed(
 
 # ---------------------------------------------------------------------------
 # Additional similarities — Lucene's other stock scorers: ClassicSimilarity
-# (the pre-BM25 TF-IDF default) and LM Jelinek-Mercer.  Same plan shape as
-# the BM25/LM-Dirichlet scorers; only the per-term weight changes.
-
-
-def _sim_run(model: str, k: int, lam: float, round_dp: int | None):
-    """``run`` for the alternative-similarity driver routes: the Σdf bound,
-    then LocalSearcher.score_n under sim_weigher(model, lam)."""
-    return _df_bounded(lambda ls, per_q: ls.score_n(
-        per_q, k, round_dp=round_dp, weigh=ls.sim_weigher(model, lam)))
-
-
-def _tfidf_scored(hits: DataFrame, n_docs: int) -> DataFrame:
-    """Shared ClassicSimilarity epilogue — ``hits``: (query_id, term,
-    doc_id, tf, dl), EVERY posting of every matched term, so the per-term
-    window count IS the true df.  Contribution = sqrt(tf) · idf² /
-    sqrt(dl) with idf = 1 + ln(N/(df+1)) — Lucene ClassicSimilarity
-    post-7.0 (no coord, no queryNorm; both were removed and neither
-    affects ranking)."""
-    wdf = Window.partitionBy("query_id", "term")
-    # one posting row per (term, doc) by construction, so count == df
-    h = hits.withColumn("df", F.count("*").over(wdf))
-    idf = F.lit(1.0) + F.log(F.lit(float(n_docs)) / (F.col("df") + F.lit(1.0)))
-    contrib = F.sqrt(F.col("tf")) * idf * idf / F.sqrt(F.col("dl"))
-    return h.groupBy("query_id", "doc_id").agg(F.sum(contrib).alias("score"))
+# (the pre-BM25 TF-IDF default), LM Jelinek-Mercer, DFI, DFR-PL2, IB-LL,
+# Axiomatic and BM25+/BM25L.  Each public pair is one call into the shared
+# `_sim_topk` / `_sim_topk_indexed` path with its scoring.SIMILARITIES model:
+# the LM-Dirichlet plan shape, only the per-posting weight changes.
 
 
 def tfidf_topk(
@@ -3759,8 +3792,7 @@ def tfidf_topk(
     Scale: the BM25 scorer's exact plan plus one window exchange keyed
     (query_id, term) for df — computed over the matched postings
     themselves, no vocab-sized side agg."""
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(_maybe_round(_tfidf_scored(hits, cp.n_docs), round_dp), k)
+    return _sim_topk("tfidf", 0.0, docs, queries, k, conf, text_col, id_col, round_dp)
 
 
 def tfidf_topk_indexed(
@@ -3776,36 +3808,7 @@ def tfidf_topk_indexed(
     Zero corpus joins.  engine="auto" serves small batches from the
     in-process kernel (rank-identical, pytest-enforced); "spark" forces
     the distributed plan, "driver" demands the route."""
-    routed = _driver_route(
-        spark, idx, queries, engine, TOPK_SCHEMA,
-        _sim_run("tfidf", k, 0.0, round_dp),
-    )
-    if routed is not None:
-        return routed
-    from igd_spark.search import match_enumerate
-
-    n_docs = int(idx.meta["corpus"]["n_docs"])
-    me = match_enumerate(spark, idx, queries, with_dl=True)
-    hits = me.select("query_id", "term", "doc_id", "tf", "dl")
-    return rank_topk(_maybe_round(_tfidf_scored(hits, n_docs), round_dp), k)
-
-
-def _lmjm_scored(hits: DataFrame, lam: float, total_tokens: int) -> DataFrame:
-    """Shared LM Jelinek-Mercer epilogue: contribution per matched term =
-    ln(1 + ((1-λ)·tf/dl) / (λ·cf/total)) — Lucene LMJelinekMercerSimilarity
-    (always positive for tf > 0, no clamp needed); cf via the same
-    complete-postings window as LM-Dirichlet."""
-    if not (0.0 < lam < 1.0):
-        raise ValueError(f"lambda must be in (0, 1), got {lam}")
-    wcf = Window.partitionBy("query_id", "term")
-    h = hits.withColumn("cf", F.sum("tf").over(wcf))
-    p_c = F.col("cf") / F.lit(float(total_tokens))
-    x = (F.lit(1.0 - lam) * F.col("tf") / F.col("dl")) / (F.lit(lam) * p_c)
-    return (
-        h.withColumn("w", F.log(F.lit(1.0) + x))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("w").alias("score"))
-    )
+    return _sim_topk_indexed("tfidf", 0.0, spark, idx, queries, k, round_dp, engine)
 
 
 def lm_jelinek_mercer_topk(
@@ -3824,8 +3827,7 @@ def lm_jelinek_mercer_topk(
 
     Scale: identical plan to `lm_dirichlet_topk` — one window exchange on
     (query_id, term) for cf over the matched postings."""
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(_maybe_round(_lmjm_scored(hits, lam, cp.sum_dl), round_dp), k)
+    return _sim_topk("lm_jm", lam, docs, queries, k, conf, text_col, id_col, round_dp)
 
 
 def lm_jelinek_mercer_topk_indexed(
@@ -3840,143 +3842,7 @@ def lm_jelinek_mercer_topk_indexed(
     """`lm_jelinek_mercer_topk` over a persisted index — enumerated pruned
     blocks supply tf/dl/cf, metadata the exact total token count.  Same
     engine routing as `tfidf_topk_indexed`."""
-    routed = _driver_route(
-        spark, idx, queries, engine, TOPK_SCHEMA,
-        _sim_run("lm_jm", k, lam, round_dp),
-    )
-    if routed is not None:
-        return routed
-    from igd_spark.search import match_enumerate
-
-    total = int(idx.meta["corpus"].get("sum_dl", 0))
-    if total <= 0:
-        raise ValueError(
-            "index metadata lacks exact sum_dl (pre-v2 layout?) — rebuild "
-            "or use lm_jelinek_mercer_topk (corpus-scan path)"
-        )
-    me = match_enumerate(spark, idx, queries, with_dl=True)
-    hits = me.select("query_id", "term", "doc_id", "tf", "dl")
-    return rank_topk(_maybe_round(_lmjm_scored(hits, lam, total), round_dp), k)
-
-
-# 1/ln2 and 2π as SHARED double literals: every engine (Catalyst, DuckDB,
-# the numpy kernel) expresses log2 as ln·_INV_LN2 with this exact constant,
-# so the gate's 6-dp rounding never straddles an engine-specific log2.
-_INV_LN2 = 1.4426950408889634
-_TWO_PI = 6.283185307179586
-
-
-def _sim_corpus_hits(
-    docs: DataFrame,
-    queries: DataFrame,
-    conf: IndexConf,
-    text_col: str,
-    id_col: str,
-) -> tuple[DataFrame, _Corpus]:
-    """Shared corpus-path prologue of the LM and alternative-similarity
-    scorers: (hits, corpus) where hits is EVERY posting of every matched
-    query term joined with document length (that completeness is what
-    makes the per-(query, term) window sums below the true collection
-    statistics), and corpus the `_corpus_parts` it was joined from."""
-    cp = _corpus_parts(docs, queries, conf, text_col, id_col)
-    hits = (
-        cp.post.join(F.broadcast(cp.qt), "term")
-        .join(cp.ds, "doc_id")
-        .select("query_id", "term", "doc_id", "tf", "dl")
-    )
-    return hits, cp
-
-
-def _dfi_scored(hits: DataFrame, total_tokens: int) -> DataFrame:
-    """Shared DFI epilogue of both paths (Lucene DFISimilarity with the
-    standardized independence measure; Kocabaş, Dinçer & Karaoğlan 2014):
-    e = (cf+1)·dl/(total+1) is the expected tf under term-document
-    independence (Lucene's +1-smoothed expectation), and the per-term
-    contribution is log2(1 + (tf−e)/√e) when tf > e, else 0 — terms no
-    more frequent than chance contribute nothing, which doubles as the
-    non-negativity clamp that keeps the sum order-independent.  cf via
-    the same complete-postings window as LM-Dirichlet."""
-    wcf = Window.partitionBy("query_id", "term")
-    h = hits.withColumn("cf", F.sum("tf").over(wcf))
-    e = (
-        (F.col("cf") + F.lit(1.0))
-        * F.col("dl")
-        / F.lit(float(total_tokens + 1))
-    )
-    m = (F.col("tf") - e) / F.sqrt(e)
-    contrib = F.when(
-        F.col("tf") > e, F.lit(_INV_LN2) * F.log(F.lit(1.0) + m)
-    ).otherwise(F.lit(0.0))
-    return h.groupBy("query_id", "doc_id").agg(F.sum(contrib).alias("score"))
-
-
-def _h2_tfn(c_avgdl: float) -> Column:
-    """DFR/IB normalization H2: tfn = tf·log2(1 + c·avgdl/dl) — the
-    within-document frequency normalized to the expected frequency in a
-    document of average length (Amati & van Rijsbergen 2002).  c·avgdl is
-    folded to one Python double so both engines see one literal.
-    c ≤ 0 collapses tfn to 0 and the downstream logs to NaN, so the
-    callers validate it (`_require_h2_c`)."""
-    return (
-        F.col("tf")
-        * F.lit(_INV_LN2)
-        * F.log(F.lit(1.0) + F.lit(c_avgdl) / F.col("dl"))
-    )
-
-
-def _require_h2_c(c: float) -> None:
-    """PL2/IB share the H2 normalization; a non-positive strength makes
-    tfn ≤ 0 and every log NaN — fail loudly instead of ranking on NaNs
-    (NaN-scored rows would silently sort to the bottom on some engines
-    and the top on others)."""
-    if not c > 0.0:
-        raise ValueError(f"H2 normalization c must be > 0, got {c}")
-
-
-def _pl2_scored(
-    hits: DataFrame, n_docs: int, avgdl: float, c: float
-) -> DataFrame:
-    """Shared DFR-PL2 epilogue of both paths (Poisson basic model, Laplace
-    after-effect, H2 normalization — the Terrier default DFR instance):
-    tfn = tf·log2(1 + c·avgdl/dl), λ = cf/N, per-term weight
-    (tfn·log2(tfn/λ) + (λ−tfn)·log2(e) + ½·log2(2π·tfn)) / (tfn+1),
-    clamped at 0 per TERM (the clamp keeps the sum order-independent; a
-    term as dense in the collection as in the document carries no
-    information).  Written in natural logs with the shared 1/ln2 literal."""
-    wcf = Window.partitionBy("query_id", "term")
-    h = hits.withColumn("cf", F.sum("tf").over(wcf))
-    tfn = _h2_tfn(c * avgdl)
-    lam = F.col("cf") / F.lit(float(n_docs))
-    w = (
-        F.lit(_INV_LN2)
-        * (
-            tfn * F.log(tfn / lam)
-            + (lam - tfn)
-            + F.lit(0.5) * F.log(F.lit(_TWO_PI) * tfn)
-        )
-        / (tfn + F.lit(1.0))
-    )
-    contrib = F.greatest(F.lit(0.0), w)
-    return h.groupBy("query_id", "doc_id").agg(F.sum(contrib).alias("score"))
-
-
-def _ib_ll_scored(
-    hits: DataFrame, n_docs: int, avgdl: float, c: float
-) -> DataFrame:
-    """Shared IB epilogue of both paths (Lucene IBSimilarity with the
-    log-logistic distribution, λ from document frequency, H2
-    normalization — Clinchant & Gaussier 2010): tfn as in PL2,
-    λ = (df+1)/(N+1), per-term contribution −log2(λ/(λ+tfn)) =
-    log2(1 + tfn/λ), always ≥ 0 for tf ≥ 1.  df is the per-(query, term)
-    window COUNT over the complete matched postings — the same statistic
-    the indexed path derives from enumerated pruned blocks, so rank
-    identity holds under deletes."""
-    wdf = Window.partitionBy("query_id", "term")
-    h = hits.withColumn("dfm", F.count("*").over(wdf))
-    tfn = _h2_tfn(c * avgdl)
-    lam = (F.col("dfm") + F.lit(1.0)) / F.lit(float(n_docs + 1))
-    contrib = F.lit(_INV_LN2) * F.log(F.lit(1.0) + tfn / lam)
-    return h.groupBy("query_id", "doc_id").agg(F.sum(contrib).alias("score"))
+    return _sim_topk_indexed("lm_jm", lam, spark, idx, queries, k, round_dp, engine)
 
 
 def dfi_topk(
@@ -3997,8 +3863,7 @@ def dfi_topk(
     Scale: identical plan to `lm_dirichlet_topk` — postings ⋈ broadcast
     query terms ⋈ doc_stats, one window exchange on (query_id, term) for
     cf over the matched postings, no vocab-sized side agg."""
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(_maybe_round(_dfi_scored(hits, cp.sum_dl), round_dp), k)
+    return _sim_topk("dfi", 0.0, docs, queries, k, conf, text_col, id_col, round_dp)
 
 
 def dfi_topk_indexed(
@@ -4012,23 +3877,7 @@ def dfi_topk_indexed(
     """`dfi_topk` over a persisted index — enumerated pruned blocks supply
     tf/dl/cf, metadata the exact total token count.  Same engine routing
     as `tfidf_topk_indexed`."""
-    routed = _driver_route(
-        spark, idx, queries, engine, TOPK_SCHEMA,
-        _sim_run("dfi", k, 0.0, round_dp),
-    )
-    if routed is not None:
-        return routed
-    from igd_spark.search import match_enumerate
-
-    total = int(idx.meta["corpus"].get("sum_dl", 0))
-    if total <= 0:
-        raise ValueError(
-            "index metadata lacks exact sum_dl (pre-v2 layout?) — rebuild "
-            "or use dfi_topk (corpus-scan path)"
-        )
-    me = match_enumerate(spark, idx, queries, with_dl=True)
-    hits = me.select("query_id", "term", "doc_id", "tf", "dl")
-    return rank_topk(_maybe_round(_dfi_scored(hits, total), round_dp), k)
+    return _sim_topk_indexed("dfi", 0.0, spark, idx, queries, k, round_dp, engine)
 
 
 def dfr_pl2_topk(
@@ -4048,11 +3897,7 @@ def dfr_pl2_topk(
 
     Scale: same plan as `lm_dirichlet_topk` — one (query_id, term) window
     exchange for cf over the matched postings."""
-    _require_h2_c(c)
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(
-        _maybe_round(_pl2_scored(hits, cp.n_docs, cp.avgdl, c), round_dp), k
-    )
+    return _sim_topk("pl2", c, docs, queries, k, conf, text_col, id_col, round_dp)
 
 
 def dfr_pl2_topk_indexed(
@@ -4067,22 +3912,7 @@ def dfr_pl2_topk_indexed(
     """`dfr_pl2_topk` over a persisted index — enumerated pruned blocks
     supply tf/dl/cf; N and avgdl from the frozen corpus metadata.  Same
     engine routing as `tfidf_topk_indexed`."""
-    _require_h2_c(c)
-    routed = _driver_route(
-        spark, idx, queries, engine, TOPK_SCHEMA,
-        _sim_run("pl2", k, c, round_dp),
-    )
-    if routed is not None:
-        return routed
-    from igd_spark.search import match_enumerate
-
-    n_docs = int(idx.meta["corpus"]["n_docs"])
-    avgdl = float(idx.meta["corpus"]["avgdl"])
-    me = match_enumerate(spark, idx, queries, with_dl=True)
-    hits = me.select("query_id", "term", "doc_id", "tf", "dl")
-    return rank_topk(
-        _maybe_round(_pl2_scored(hits, n_docs, avgdl, c), round_dp), k
-    )
+    return _sim_topk_indexed("pl2", c, spark, idx, queries, k, round_dp, engine)
 
 
 def ib_ll_topk(
@@ -4102,11 +3932,7 @@ def ib_ll_topk(
 
     Scale: same plan shape; the window statistic is a COUNT instead of a
     SUM — still one (query_id, term) exchange over matched postings."""
-    _require_h2_c(c)
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(
-        _maybe_round(_ib_ll_scored(hits, cp.n_docs, cp.avgdl, c), round_dp), k
-    )
+    return _sim_topk("ib_ll", c, docs, queries, k, conf, text_col, id_col, round_dp)
 
 
 def ib_ll_topk_indexed(
@@ -4121,58 +3947,7 @@ def ib_ll_topk_indexed(
     """`ib_ll_topk` over a persisted index — enumerated pruned blocks
     supply tf/dl/df; N and avgdl from the frozen corpus metadata.  Same
     engine routing as `tfidf_topk_indexed`."""
-    _require_h2_c(c)
-    routed = _driver_route(
-        spark, idx, queries, engine, TOPK_SCHEMA,
-        _sim_run("ib_ll", k, c, round_dp),
-    )
-    if routed is not None:
-        return routed
-    from igd_spark.search import match_enumerate
-
-    n_docs = int(idx.meta["corpus"]["n_docs"])
-    avgdl = float(idx.meta["corpus"]["avgdl"])
-    me = match_enumerate(spark, idx, queries, with_dl=True)
-    hits = me.select("query_id", "term", "doc_id", "tf", "dl")
-    return rank_topk(
-        _maybe_round(_ib_ll_scored(hits, n_docs, avgdl, c), round_dp), k
-    )
-
-
-# Axiomatic s: the length-normalization constant shared by F2EXP and F2LOG
-# (Fang & Zhai 2005 fix s=0.5; Lucene's AxiomaticF2EXP/F2LOG default).
-# Fixed rather than a parameter so the driver-route seam (one scalar slot)
-# carries the variant-specific knob (F2EXP's k) instead.
-_AX_S = 0.5
-
-
-def _axiomatic_scored(
-    hits: DataFrame, n_docs: int, avgdl: float, variant: str, k_exp: float
-) -> DataFrame:
-    """Shared Axiomatic epilogue of both paths (Fang & Zhai, SIGIR 2005;
-    Lucene AxiomaticF2EXP / AxiomaticF2LOG): the within-document part is
-    tf/(tf + s + s·dl/avgdl) (the F2 primitive weighting — saturating in
-    tf, linear length penalty), and the growth function is
-    ((N+1)/df)^k for F2EXP (k=0.35 standard) or ln((N+1)/df) for F2LOG.
-    df via the same per-(query, term) COUNT window over the complete
-    matched postings as IB — deletes-consistent across paths."""
-    if variant not in ("f2exp", "f2log"):
-        raise ValueError(f"variant must be f2exp|f2log, got {variant!r}")
-    wdf = Window.partitionBy("query_id", "term")
-    h = hits.withColumn("dfm", F.count("*").over(wdf))
-    tf_part = F.col("tf") / (
-        F.col("tf")
-        + F.lit(_AX_S)
-        + F.lit(_AX_S) * F.col("dl") / F.lit(float(avgdl))
-    )
-    ratio = F.lit(float(n_docs + 1)) / F.col("dfm")
-    idf = (
-        F.pow(ratio, F.lit(float(k_exp)))
-        if variant == "f2exp"
-        else F.log(ratio)
-    )
-    contrib = tf_part * idf
-    return h.groupBy("query_id", "doc_id").agg(F.sum(contrib).alias("score"))
+    return _sim_topk_indexed("ib_ll", c, spark, idx, queries, k, round_dp, engine)
 
 
 def axiomatic_topk(
@@ -4195,13 +3970,8 @@ def axiomatic_topk(
 
     Scale: same plan as `ib_ll_topk` — one (query_id, term) window COUNT
     exchange over the matched postings, no vocab-sized side agg."""
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(
-        _maybe_round(
-            _axiomatic_scored(hits, cp.n_docs, cp.avgdl, variant, k_exp), round_dp
-        ),
-        k,
-    )
+    model = variant_model("ax", variant)
+    return _sim_topk(model, k_exp, docs, queries, k, conf, text_col, id_col, round_dp)
 
 
 def axiomatic_topk_indexed(
@@ -4218,73 +3988,8 @@ def axiomatic_topk_indexed(
     supply tf/dl/df; N and avgdl from the frozen corpus metadata.  Same
     engine routing as `tfidf_topk_indexed` (the scalar slot carries
     F2EXP's k; F2LOG ignores it)."""
-    if variant not in ("f2exp", "f2log"):
-        raise ValueError(f"variant must be f2exp|f2log, got {variant!r}")
-    routed = _driver_route(
-        spark, idx, queries, engine, TOPK_SCHEMA,
-        _sim_run(f"ax_{variant}", k, k_exp, round_dp),
-    )
-    if routed is not None:
-        return routed
-    from igd_spark.search import match_enumerate
-
-    n_docs = int(idx.meta["corpus"]["n_docs"])
-    avgdl = float(idx.meta["corpus"]["avgdl"])
-    me = match_enumerate(spark, idx, queries, with_dl=True)
-    hits = me.select("query_id", "term", "doc_id", "tf", "dl")
-    return rank_topk(
-        _maybe_round(
-            _axiomatic_scored(hits, n_docs, avgdl, variant, k_exp),
-            round_dp,
-        ),
-        k,
-    )
-
-
-# Paper defaults (Lv & Zhai 2011): BM25+ delta = 1.0, BM25L delta = 0.5
-_BM25_VARIANT_DELTA = {"plus": 1.0, "l": 0.5}
-
-
-def _bm25v_scored(
-    hits: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    conf: IndexConf,
-    variant: str,
-    delta: float,
-) -> DataFrame:
-    """Shared BM25+/BM25L epilogue of both paths (Lv & Zhai, CIKM/SIGIR
-    2011 — the lower-bounding fixes for BM25's over-penalization of very
-    long documents): tfn = tf/(1−b+b·dl/avgdl) (the document-length-
-    normalized tf the classic denominator factors out), then
-      BM25+ : idf · ((k1+1)·tfn/(k1+tfn) + δ)      (δ floors every match)
-      BM25L : idf · (k1+1)·(tfn+δ)/(k1+tfn+δ)      (δ shifts the saturation)
-    with the engine's own idf (scoring.idf_col — the same expression the
-    flagship scorer and the DuckDB oracle share) and the BASELINE-fixed
-    k1/b from IndexConf.  df via the per-(query, term) COUNT window over
-    the complete matched postings — deletes-consistent across paths."""
-    if variant not in _BM25_VARIANT_DELTA:
-        raise ValueError(f"variant must be plus|l, got {variant!r}")
-    if not delta >= 0.0:
-        raise ValueError(f"delta must be >= 0, got {delta}")
-    k1, b = conf.k1, conf.b
-    wdf = Window.partitionBy("query_id", "term")
-    h = hits.withColumn("dfm", F.count("*").over(wdf))
-    idf = idf_col(int(n_docs), F.col("dfm"))
-    tfn = F.col("tf") / (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(float(avgdl))
-    )
-    if variant == "plus":
-        w = idf * (
-            F.lit(k1 + 1.0) * tfn / (F.lit(k1) + tfn) + F.lit(delta)
-        )
-    else:
-        w = idf * (
-            F.lit(k1 + 1.0)
-            * (tfn + F.lit(delta))
-            / (F.lit(k1) + tfn + F.lit(delta))
-        )
-    return h.groupBy("query_id", "doc_id").agg(F.sum(w).alias("score"))
+    model = variant_model("ax", variant)
+    return _sim_topk_indexed(model, k_exp, spark, idx, queries, k, round_dp, engine)
 
 
 def bm25_variant_topk(
@@ -4306,15 +4011,9 @@ def bm25_variant_topk(
 
     Scale: same plan as `ib_ll_topk` — one (query_id, term) window COUNT
     exchange over the matched postings."""
-    if delta is None:
-        delta = _BM25_VARIANT_DELTA.get(variant, 1.0)
-    hits, cp = _sim_corpus_hits(docs, queries, conf, text_col, id_col)
-    return rank_topk(
-        _maybe_round(
-            _bm25v_scored(hits, cp.n_docs, cp.avgdl, conf, variant, delta), round_dp
-        ),
-        k,
-    )
+    model = variant_model("bm25", variant)
+    delta = _BM25_VARIANT_DELTA[variant] if delta is None else delta
+    return _sim_topk(model, delta, docs, queries, k, conf, text_col, id_col, round_dp)
 
 
 def bm25_variant_topk_indexed(
@@ -4331,29 +4030,9 @@ def bm25_variant_topk_indexed(
     blocks supply tf/dl/df; N and avgdl from the frozen corpus metadata;
     k1/b from the index's own conf.  Same engine routing as
     `tfidf_topk_indexed` (the scalar slot carries δ)."""
-    if variant not in _BM25_VARIANT_DELTA:
-        raise ValueError(f"variant must be plus|l, got {variant!r}")
-    if delta is None:
-        delta = _BM25_VARIANT_DELTA[variant]
-    routed = _driver_route(
-        spark, idx, queries, engine, TOPK_SCHEMA,
-        _sim_run(f"bm25_{variant}", k, delta, round_dp),
-    )
-    if routed is not None:
-        return routed
-    from igd_spark.search import match_enumerate
-
-    n_docs = int(idx.meta["corpus"]["n_docs"])
-    avgdl = float(idx.meta["corpus"]["avgdl"])
-    me = match_enumerate(spark, idx, queries, with_dl=True)
-    hits = me.select("query_id", "term", "doc_id", "tf", "dl")
-    return rank_topk(
-        _maybe_round(
-            _bm25v_scored(hits, n_docs, avgdl, idx.conf, variant, delta),
-            round_dp,
-        ),
-        k,
-    )
+    model = variant_model("bm25", variant)
+    delta = _BM25_VARIANT_DELTA[variant] if delta is None else delta
+    return _sim_topk_indexed(model, delta, spark, idx, queries, k, round_dp, engine)
 
 
 def _random_score_epilogue(

@@ -8,12 +8,19 @@ float rounding). Usage: python scripts/gate_check.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the repo root on the driver's path and, through PYTHONPATH, on the Python
+# workers' (their kernels import igd_spark), from any working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from igd_spark.session import get_spark  # noqa: E402

@@ -482,9 +482,24 @@ def test_corpus_scorers_return_no_rows_on_an_empty_corpus(spark):
     """An empty docs frame has n_docs 0 and a NULL average length; the
     corpus prologue turns that into an empty result for every scorer
     instead of a float(None) TypeError."""
-    from igd_spark import exact_bm25_topk, lm_dirichlet_topk, msm_bm25_topk, tfidf_topk
+    from igd_spark import (
+        axiomatic_topk,
+        bm25_variant_topk,
+        combined_fields_bm25_topk,
+        dfi_topk,
+        dfr_pl2_topk,
+        exact_bm25_topk,
+        ib_ll_topk,
+        lm_dirichlet_topk,
+        lm_jelinek_mercer_topk,
+        msm_bm25_topk,
+        tfidf_topk,
+    )
 
     docs = spark.createDataFrame([], "doc_id long, text string")
     q = spark.createDataFrame([(0, "alpha beta")], "query_id long, query_text string")
-    for scorer in (exact_bm25_topk, msm_bm25_topk, tfidf_topk, lm_dirichlet_topk):
+    for scorer in (exact_bm25_topk, msm_bm25_topk, tfidf_topk, lm_dirichlet_topk,
+                   lm_jelinek_mercer_topk, dfi_topk, dfr_pl2_topk, ib_ll_topk,
+                   axiomatic_topk, bm25_variant_topk):
         assert scorer(docs, q, k=5).collect() == [], scorer.__name__
+    assert combined_fields_bm25_topk(docs, q, {"text": 1.0}, k=5).collect() == []

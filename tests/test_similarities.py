@@ -114,11 +114,16 @@ def test_similarity_driver_route_rank_identity(spark, docs, sim_idx):
         a = fn(spark, sim_idx, q, k=8, round_dp=6, engine="spark").collect()
         b = fn(spark, sim_idx, q, k=8, round_dp=6, engine="driver").collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b)), model
+    # driver-native rows reach the distributed plan too (a demoted batch)
+    rows = [(0, "error timeout"), (1, "deploy")]
+    c = lm_jelinek_mercer_topk_indexed(
+        spark, sim_idx, rows, k=8, round_dp=6, engine="spark"
+    ).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, c))  # a: lm_jm on q
     # warm driver path is ms-scale (no Spark job): measure the kernel alone
     from igd_spark.local import local_searcher
 
     ls = local_searcher(sim_idx)
-    rows = [(0, "error timeout"), (1, "deploy")]
     ls.sim_topk_n(rows, model="tfidf", k=8, round_dp=6)  # warm the lists
     t0 = time.perf_counter()
     ls.sim_topk_n(rows, model="tfidf", k=8, round_dp=6)
@@ -356,30 +361,64 @@ def test_sim_family_randomized_engine_identity(spark, docs, sim_idx):
         a = fn("spark").collect()
         b = fn("driver").collect()
         assert a and sorted(map(tuple, a)) == sorted(map(tuple, b))
-    from igd_spark import axiomatic_topk_indexed
+    from igd_spark import axiomatic_topk_indexed, bm25_variant_topk_indexed
 
-    for variant in ("f2exp", "f2log"):
-        a = axiomatic_topk_indexed(
+    for fn, variant in (
+        (axiomatic_topk_indexed, "f2exp"),
+        (axiomatic_topk_indexed, "f2log"),
+        (bm25_variant_topk_indexed, "plus"),
+        (bm25_variant_topk_indexed, "l"),
+    ):
+        a = fn(
             spark, sim_idx, q, variant=variant, k=7, round_dp=6, engine="spark"
         ).collect()
-        b = axiomatic_topk_indexed(
+        b = fn(
             spark, sim_idx, q, variant=variant, k=7, round_dp=6, engine="driver"
         ).collect()
-        assert a and sorted(map(tuple, a)) == sorted(map(tuple, b))
+        assert a and sorted(map(tuple, a)) == sorted(map(tuple, b)), variant
 
 
 def test_h2_c_validation(spark, docs, sim_idx):
-    for bad in (0.0, -1.0):
-        with pytest.raises(ValueError):
-            dfr_pl2_topk(docs, _queries(spark, [(0, "x")]), c=bad)
-        with pytest.raises(ValueError):
-            ib_ll_topk_indexed(
-                spark, sim_idx, _queries(spark, [(0, "x")]), c=bad
-            )
+    """Every bad similarity parameter raises ValueError from all three entry
+    points: the corpus scan, the distributed indexed plan and the driver
+    kernel."""
+    from igd_spark import (
+        axiomatic_topk,
+        axiomatic_topk_indexed,
+        bm25_variant_topk,
+        bm25_variant_topk_indexed,
+    )
     from igd_spark.local import local_searcher
 
-    with pytest.raises(ValueError):
-        local_searcher(sim_idx).sim_topk_n([(0, "error")], model="pl2", lam=0.0)
+    q = _queries(spark, [(0, "x")])
+    ls = local_searcher(sim_idx)
+    # (corpus *_topk, *_topk_indexed, keyword args, sim_topk_n model, lam)
+    cases = [
+        (lm_jelinek_mercer_topk, lm_jelinek_mercer_topk_indexed, {"lam": lam},
+         "lm_jm", lam)
+        for lam in (0.0, 1.5)
+    ] + [
+        (corpus_fn, indexed_fn, {"c": c}, model, c)
+        for corpus_fn, indexed_fn, model in (
+            (dfr_pl2_topk, dfr_pl2_topk_indexed, "pl2"),
+            (ib_ll_topk, ib_ll_topk_indexed, "ib_ll"),
+        )
+        for c in (0.0, -1.0)
+    ] + [
+        (bm25_variant_topk, bm25_variant_topk_indexed, {"variant": "okapi"},
+         "bm25_okapi", 1.0),
+        (bm25_variant_topk, bm25_variant_topk_indexed, {"delta": -0.1},
+         "bm25_plus", -0.1),
+        (axiomatic_topk, axiomatic_topk_indexed, {"variant": "f2bogus"},
+         "ax_f2bogus", 0.35),
+    ]
+    for corpus_fn, indexed_fn, kw, model, lam in cases:
+        with pytest.raises(ValueError):
+            corpus_fn(docs, q, **kw)
+        with pytest.raises(ValueError):
+            indexed_fn(spark, sim_idx, q, engine="spark", **kw)
+        with pytest.raises(ValueError):
+            ls.sim_topk_n([(0, "error")], model=model, lam=lam)
 
 
 def test_bm25_variants_bruteforce(spark, docs):
