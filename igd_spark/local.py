@@ -17,8 +17,10 @@ runs ONE pipeline, like the reference's one search_1/search_n kernel:
 
     term_sets     per-query distinct terms, repeated query_id rows merged
       → lookup    cached dictionary probe (term → term_id, df, n_salts)
-      → lists     shards_for() probe set, pyarrow row-group-pruned reads of
-                  the few matching block rows, decoded into the list LRU
+      → lists     shards_for() probe set; the handle's row-group store
+                  (rowgroups.py: footers read once, row groups kept in a
+                  byte-bounded LRU) slices each missed term's block rows by
+                  binary search; one segmented decode into the list LRU
       → weigh     each term's (doc_ids, contribution) ONCE per batch —
                   BM25 (_bm25, _bm25_idf) or a sim_weigher model, whose
                   weight is scoring.SIMILARITIES' expression in numpy
@@ -54,6 +56,7 @@ import pandas as pd
 
 from igd_spark import codec
 from igd_spark.build import shards_for
+from igd_spark.rowgroups import RowGroupStore
 from igd_spark.scoring import NUMPY_OPS, index_sim_stats, similarity
 
 _EMPTY_BATCH = pd.DataFrame(
@@ -123,6 +126,26 @@ def _round_half_up_spark(arr: np.ndarray, dp: int) -> np.ndarray:
     return out
 
 
+def _term_runs(
+    tids: np.ndarray, starts: np.ndarray, ends: np.ndarray
+) -> list[tuple[int, np.ndarray]]:
+    """(term_id, posting indices) per distinct term of a block read: block
+    row i holds postings starts[i]:ends[i] of the flat decoded arrays.  One
+    stable argsort by term_id keeps each term's blocks in read order; the
+    rows' posting ranges expand in one vectorized pass and split where the
+    term_id changes."""
+    order = np.argsort(tids, kind="stable")
+    lens = (ends - starts)[order]
+    off = np.cumsum(lens)
+    pos = np.arange(int(off[-1])) + np.repeat(starts[order] - (off - lens), lens)
+    t = tids[order]
+    first = np.concatenate(([0], np.flatnonzero(t[1:] != t[:-1]) + 1))
+    cut = np.concatenate(([0], off))[np.append(first, t.size)]
+    return [
+        (int(t[f]), pos[cut[i]:cut[i + 1]]) for i, f in enumerate(first)
+    ]
+
+
 def _tokenize_ordered(text: str, split_re: str) -> list[str]:
     """IN-ORDER tokens, duplicates kept — the phrase contract (matches
     tokens_col + the non-empty filter, so offsets line up with
@@ -135,11 +158,14 @@ def _tokenize_ordered(text: str, split_re: str) -> list[str]:
 class LocalSearcher:
     """Per-index driver-side searcher. Holds the memoized dictionary slice
     (the reference keeps the whole dictionary resident, src/igd_base.c:312-321;
-    we fault terms in on demand through parquet predicate pushdown) and an
-    LRU of decoded posting lists, bounded by total decoded postings."""
+    we fault terms in on demand), an LRU of decoded posting lists, bounded
+    by total decoded postings, and the handle's row-group store: every
+    parquet footer and row group it reads, read once (rowgroups.py)."""
 
     # ~16 M postings × 3 arrays × 8 B ≈ 384 MB ceiling — driver-sized
     CACHE_MAX_POSTINGS = 16_000_000
+    # resident parquet row groups (RowGroupStore), Arrow bytes
+    CACHE_MAX_ROW_GROUP_BYTES = 128 << 20
     # scoring thread pool width (numpy sort/bincount release the GIL);
     # bounded so a shared cluster driver isn't saturated
     SCORE_THREADS = min(8, os.cpu_count() or 1)
@@ -159,6 +185,8 @@ class LocalSearcher:
         # read via pyarrow at handle-open time, so list-cache entries are
         # pre-filtered and stay valid for this snapshot
         self._deleted = idx.tombstones_array()
+        # every parquet read of this handle: footers once, row groups kept
+        self.store = RowGroupStore(self.CACHE_MAX_ROW_GROUP_BYTES)
         self._dict_cache: dict[str, tuple[int, int, int] | None] = {}
         # (like, pattern) → matching dictionary terms (expand_patterns)
         self._expand_cache: dict[tuple[bool, str], list[str]] = {}
@@ -177,32 +205,42 @@ class LocalSearcher:
 
     # --- table roots (base ∪ committed batch dirs) -------------------------
     def _table_dirs(self, sub: str) -> list[str]:
-        dirs = [os.path.join(self.path, sub)]
-        for tag in self.batches:
-            d = os.path.join(self.path, "batches", tag, sub)
-            if os.path.isdir(d):
-                dirs.append(d)
-        return dirs
+        """<sub> of the base and of every committed batch in this snapshot
+        (a batch without the table is an empty dir to the store)."""
+        return [os.path.join(self.path, sub)] + [
+            os.path.join(self.path, "batches", tag, sub) for tag in self.batches
+        ]
+
+    def _shard_dirs(self, sub: str, shards: list[int]) -> list[str]:
+        return [
+            os.path.join(root, f"shard={s}")
+            for root in self._table_dirs(sub)
+            for s in shards
+        ]
+
+    def _dictionary_rows(self, mask) -> dict[str, list[tuple[int, int, int]]]:
+        """term → its (term_id, df, n_salts) rows over base + delta
+        dictionaries, for the rows where ``mask(table)`` holds."""
+        found: dict[str, list[tuple[int, int, int]]] = {}
+        cols = ["term", "term_id", "df", "n_salts"]
+        for tab in self.store.tables(self._table_dirs("dictionary"), cols):
+            t = tab.filter(mask(tab))
+            for term, tid, df, ns in zip(*(t[c].to_pylist() for c in cols)):
+                found.setdefault(term, []).append((int(tid), int(df), int(ns)))
+        return found
 
     def _lookup_terms(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
         """term → (term_id, df, n_salts), folded over base + delta rows
         (df additive, n_salts max — same fold as InvertedIndex.dictionary)."""
+        import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
         missing = [t for t in terms if t not in self._dict_cache]
         if missing:
-            found: dict[str, list[tuple[int, int, int]]] = {}
-            for d in self._table_dirs("dictionary"):
-                t = pads.dataset(d).to_table(
-                    columns=["term", "term_id", "df", "n_salts"],
-                    filter=pc.field("term").isin(missing),
-                )
-                for term, tid, df, ns in zip(
-                    t["term"].to_pylist(), t["term_id"].to_pylist(),
-                    t["df"].to_pylist(), t["n_salts"].to_pylist(),
-                ):
-                    found.setdefault(term, []).append((int(tid), int(df), int(ns)))
+            vals = pa.array(missing, pa.string())
+            found = self._dictionary_rows(
+                lambda tab: pc.is_in(tab["term"], value_set=vals)
+            )
             for t in missing:
                 rows = found.get(t)
                 if not rows:
@@ -215,33 +253,24 @@ class LocalSearcher:
                     )
         return {t: v for t in terms if (v := self._dict_cache.get(t)) is not None}
 
-    def _read_blocks(self, term_ids: list[int], shards: list[int]) -> pd.DataFrame:
-        """Block rows for the given terms, row-group-pruned: only shard
-        dirs in the probe set are opened, and within them pyarrow skips
-        row groups whose term_id min/max excludes every queried term (the
-        files are sorted by term_id — the tile-seek analog,
-        src/igd_search.c:459-464)."""
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
+    def _term_blocks(
+        self, sub: str, term_ids: list[int], shards: list[int], cols: list[str]
+    ) -> pd.DataFrame:
+        """Block rows of the given terms in table ``sub`` (segments /
+        positions): only shard dirs in the probe set are looked at, only
+        row groups whose footer term_id min/max admits a queried term are
+        read (once per handle), and a term's rows are the binary-searched
+        run of the sorted file — the tile-seek analog,
+        src/igd_search.c:459-464."""
+        t = self.store.term_rows(self._shard_dirs(sub, shards), term_ids, cols)
+        return pd.DataFrame(columns=cols) if t is None else t.to_pandas()
 
-        cols = ["term_id", "salt", "n", "doc_ids", "tfs", "dls"]
-        dirs = [
-            d
-            for root in self._table_dirs("segments")
-            for s in shards
-            if os.path.isdir(d := os.path.join(root, f"shard={s}"))
-        ]
-        if not dirs:
-            return pd.DataFrame(columns=cols)
-        # ONE scan over a union dataset instead of a python loop of
-        # per-shard-dir scans: pyarrow fans fragments out over its IO/CPU
-        # thread pools, so the row-group-pruned reads of all probed shards
-        # (and append-batch deltas) proceed concurrently — measured ~6x on
-        # a 244-term cold fault at 32 shards
-        union = pads.dataset([pads.dataset(d) for d in dirs])
-        return union.to_table(
-            columns=cols, filter=pc.field("term_id").isin(term_ids)
-        ).to_pandas()
+    def _read_blocks(self, term_ids: list[int], shards: list[int]) -> pd.DataFrame:
+        """Segment block rows for the given terms (_term_blocks)."""
+        return self._term_blocks(
+            "segments", term_ids, shards,
+            ["term_id", "salt", "n", "doc_ids", "tfs", "dls"],
+        )
 
     # --- decoded-list LRU ---------------------------------------------------
     def _ensure_lists(
@@ -294,12 +323,8 @@ class LocalSearcher:
                 surv = np.concatenate(([0], np.cumsum(keep.astype(np.int64))))
                 d_all, tf_all, dl_all = d_all[keep], tf_all[keep], dl_all[keep]
                 starts, ends = surv[starts], surv[ends]
-            for tid in np.unique(tids_arr):
-                rows = np.flatnonzero(tids_arr == tid)
-                idxs = np.concatenate(
-                    [np.arange(starts[i], ends[i]) for i in rows]
-                )
-                grouped[int(tid)] = (d_all[idxs], tf_all[idxs], dl_all[idxs])
+            for tid, ix in _term_runs(tids_arr, starts, ends):
+                grouped[tid] = (d_all[ix], tf_all[ix], dl_all[ix])
         empty3 = (
             np.empty(0, dtype=np.int64),
             np.empty(0, dtype=np.float64),
@@ -544,20 +569,11 @@ class LocalSearcher:
     # --- dictionary-expansion driver path (prefix / wildcard) --------------
 
     def vocab_rows(self) -> int:
-        """Total dictionary rows from parquet FOOTERS only (cached) — the
+        """Total dictionary rows from parquet FOOTERS only (the store's) — the
         IO-free admission bound for the expansion probes: the pattern scan
         reads the dictionary's term column, so a vocab that outgrows the
         driver budget demotes to the distributed expansion with zero IO."""
-        if getattr(self, "_vocab_rows", None) is None:
-            import pyarrow.dataset as pads
-
-            total = 0
-            for d in self._table_dirs("dictionary"):
-                for frag in pads.dataset(d).get_fragments():
-                    frag.ensure_complete_metadata()
-                    total += frag.metadata.num_rows
-            self._vocab_rows = total
-        return self._vocab_rows
+        return self.store.num_rows(self._table_dirs("dictionary"))
 
     def probe_rows(self, pats, like: bool) -> int:
         """Dictionary rows an expand_patterns(pats, like) call may read —
@@ -573,15 +589,14 @@ class LocalSearcher:
         """pattern → matching dictionary terms.  ``like=False`` treats each
         pattern as a PREFIX (Spark `startswith` parity); ``like=True`` as a
         SQL LIKE pattern with %/_ wildcards (pyarrow match_like == Spark
-        `term LIKE pat`).  One filtered read per table dir covers ALL
-        uncached patterns (OR of the per-pattern exprs); matched terms'
-        (term_id, df, n_salts) rows fold into the dictionary cache with the
-        same base+delta fold as _lookup_terms, so the subsequent scoring
-        probe is free."""
+        `term LIKE pat`).  One filter over the resident dictionary row
+        groups covers ALL uncached patterns (OR of the per-pattern exprs);
+        matched terms' (term_id, df, n_salts) rows fold into the dictionary
+        cache with the same base+delta fold as _lookup_terms, so the
+        subsequent scoring probe is free."""
         import re as _re
 
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
         cache = self._expand_cache
         missing = [p for p in pats if (like, p) not in cache]
@@ -594,16 +609,7 @@ class LocalSearcher:
             flt = exprs[0]
             for e in exprs[1:]:
                 flt = flt | e
-            found: dict[str, list[tuple[int, int, int]]] = {}
-            for d in self._table_dirs("dictionary"):
-                t = pads.dataset(d).to_table(
-                    columns=["term", "term_id", "df", "n_salts"], filter=flt
-                )
-                for term, tid, df, ns in zip(
-                    t["term"].to_pylist(), t["term_id"].to_pylist(),
-                    t["df"].to_pylist(), t["n_salts"].to_pylist(),
-                ):
-                    found.setdefault(term, []).append((int(tid), int(df), int(ns)))
+            found = self._dictionary_rows(lambda _tab: flt)
             for term, rows in found.items():
                 self._dict_cache[term] = (
                     rows[0][0],
@@ -678,57 +684,23 @@ class LocalSearcher:
             out[t] = found[t] if t in found else (xxh64_py(t), -1, 1)
         return out
 
-    def _pos_dirs(self, shards: list[int]) -> list[str]:
-        return [
-            d
-            for root in self._table_dirs("positions")
-            for s in shards
-            if os.path.isdir(d := os.path.join(root, f"shard={s}"))
-        ]
-
     def pos_footer_rows(self, term_ids: list[int], shards: list[int]) -> int:
         """Σ num_rows over row groups whose term_id min/max admits any
         queried term — from parquet FOOTERS only, zero data IO. Each row is
         one block of ≤ conf.block_size occurrences, so rows × block_size
-        upper-bounds the occurrence volume a payload read could return."""
-        import pyarrow.dataset as pads
-
-        total = 0
-        tset = sorted(term_ids)
-        for d in self._pos_dirs(shards):
-            for frag in pads.dataset(d).get_fragments():
-                frag.ensure_complete_metadata()
-                md = frag.metadata
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    stats = None
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        if col.path_in_schema == "term_id":
-                            stats = col.statistics
-                            break
-                    if stats is None or not stats.has_min_max:
-                        total += g.num_rows  # no stats → assume it matches
-                        continue
-                    lo, hi = int(stats.min), int(stats.max)
-                    if any(lo <= t <= hi for t in tset):
-                        total += g.num_rows
-        return total
+        upper-bounds the occurrence volume a payload read could return
+        (a row group without stats always counts)."""
+        return self.store.admitted_rows(
+            self._shard_dirs("positions", shards), term_ids
+        )
 
     def _read_pos_blocks(
         self, term_ids: list[int], shards: list[int]
     ) -> pd.DataFrame:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        cols = ["term_id", "n", "doc_ids", "poss"]
-        dirs = self._pos_dirs(shards)
-        if not dirs:
-            return pd.DataFrame(columns=cols)
-        union = pads.dataset([pads.dataset(d) for d in dirs])
-        return union.to_table(
-            columns=cols, filter=pc.field("term_id").isin(term_ids)
-        ).to_pandas()
+        """Position block rows for the given terms (_term_blocks)."""
+        return self._term_blocks(
+            "positions", term_ids, shards, ["term_id", "n", "doc_ids", "poss"]
+        )
 
     def _ensure_pos_lists(self, tmap: dict[str, tuple[int, int, int]]) -> None:
         """Fault missing terms' occurrence lists into the positional LRU —
@@ -775,12 +747,8 @@ class LocalSearcher:
                 surv = np.concatenate(([0], np.cumsum(keep.astype(np.int64))))
                 d_all, p_all = d_all[keep], p_all[keep]
                 starts, ends = surv[starts], surv[ends]
-            for tid in np.unique(tids_arr):
-                rows = np.flatnonzero(tids_arr == tid)
-                idxs = np.concatenate(
-                    [np.arange(starts[i], ends[i]) for i in rows]
-                )
-                grouped[int(tid)] = (d_all[idxs], p_all[idxs])
+            for tid, ix in _term_runs(tids_arr, starts, ends):
+                grouped[tid] = (d_all[ix], p_all[ix])
         empty2 = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
         for tid in missing:
             d, p = grouped.get(tid, empty2)

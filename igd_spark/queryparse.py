@@ -24,8 +24,9 @@ standalone operator (term/prefix/wildcard → per-term BM25 with its own
 idf; fuzzy → similarity-boosted BM25, `fuzzy_expand` semantics; phrase →
 its constituent terms' BM25 restricted to phrase-containing docs).  A
 term reached by two clauses of one query contributes twice — the Lucene
-repeated-clause behaviour.  Words are lowercased and split on the
-standard token pattern, so "can't" parses as two term clauses.
+repeated-clause behaviour.  Words are lowercased and split like the
+index's tokens (the conf's token_split_re; the default splits "can't"
+into two term clauses), and the syntax characters + - " ~ * always split.
 
 Scale: parsing is a driver-side prologue over the (small) query batch —
 the established `search()` pattern; evaluation is ONE composed plan:
@@ -52,7 +53,9 @@ from igd_spark.config import DEFAULT_CONF, IndexConf
 from igd_spark.scoring import bm25_weight_col, idf_col
 from igd_spark.search import _corpus_parts, _idf_join, phrase_match, rank_topk
 
-_WORD_RE = re.compile(r"[a-z0-9]+")
+# query syntax characters: they split clause words whatever the index's
+# token_split_re keeps inside a token
+_SYNTAX_RE = re.compile(r'[+\-"~*]')
 _TOKEN_RE = re.compile(r'([+-]?)"([^"]*)"|(\S+)')
 _MAX_CLAUSES = 10_000  # composite-key stride; parse_query enforces it
 
@@ -65,6 +68,12 @@ class Clause:
     max_edits: int = 0  # fuzzy only
 
 
+def _words(s: str, split_re: str) -> list[str]:
+    """Clause words of a lowercased lexeme: the index tokenizer's tokens
+    (split on ``split_re``), further split at query syntax characters."""
+    return [w for t in re.split(split_re, s) for w in _SYNTAX_RE.split(t) if w]
+
+
 def parse_query(s: str) -> list[Clause]:
     """Parse one query string into clauses (see module docstring).
 
@@ -72,11 +81,17 @@ def parse_query(s: str) -> list[Clause]:
     bare wildcards with no literal characters) are dropped; a fuzzy
     suffix on a multi-part word applies to its last part, earlier parts
     become plain terms.  Deterministic, pure-python, driver-side."""
+    return _clauses(s, DEFAULT_CONF.token_split_re)
+
+
+def _clauses(s: str, split_re: str) -> list[Clause]:
+    """parse_query with clause words split like the index's tokens
+    (``split_re``, the conf's token_split_re)."""
     clauses: list[Clause] = []
     for m in _TOKEN_RE.finditer(s.lower()):
         if m.group(2) is not None:  # quoted phrase
             occur = {"+": "must", "-": "must_not"}.get(m.group(1), "should")
-            words = _WORD_RE.findall(m.group(2))
+            words = _words(m.group(2), split_re)
             if len(words) == 1:
                 clauses.append(Clause(occur, "term", words[0]))
             elif words:
@@ -94,15 +109,18 @@ def parse_query(s: str) -> list[Clause]:
             max_edits = int(fm.group(1)) if fm.group(1) else 2
             max_edits = min(max_edits, 2)  # ~3..~99 clamp like ~9, not two terms
         if "*" in raw or "?" in raw:
-            pat = re.sub(r"[^a-z0-9*?]+", "", raw)
-            if not _WORD_RE.search(pat):
+            pat = "".join(
+                p if p in ("*", "?") else "".join(_words(p, split_re))
+                for p in re.split(r"([*?])", raw)
+            )
+            if not pat.strip("*?"):
                 continue  # no literal chars — unbounded scan, dropped
             if pat.endswith("*") and not re.search(r"[*?]", pat[:-1]):
                 clauses.append(Clause(occur, "prefix", pat[:-1]))
             else:
                 clauses.append(Clause(occur, "wildcard", pat))
             continue
-        words = _WORD_RE.findall(raw)
+        words = _words(raw, split_re)
         if not words:
             continue
         for w in words[:-1]:
@@ -288,7 +306,9 @@ def _parse_batch(queries, conf: IndexConf = DEFAULT_CONF) -> tuple[dict, list[tu
         if qi not in parsed:
             parsed[qi] = []
             qids.append(qi)
-        parsed[qi].extend(parse_query(str(t) if t is not None else ""))
+        parsed[qi].extend(
+            _clauses(str(t) if t is not None else "", conf.token_split_re)
+        )
     if conf.stopwords or conf.min_token_len > 1:
         stop = set(conf.stopwords)
         parsed = {
@@ -336,8 +356,13 @@ def _clause_terms(spark, cl_rows: list[tuple], dct: DataFrame) -> DataFrame:
     ]
     if local_terms:
         parts.append(spark.createDataFrame(local_terms, ct_schema))
+    # literal % and _ (a token_split_re may keep them in words) are escaped
+    # before the * / ? metacharacters become LIKE's % / _
+    def _like(text: str) -> str:
+        return re.sub(r"([\\%_])", r"\\\1", text).translate(str.maketrans("*?", "%_"))
+
     pw_rows = [
-        (ck, text + "%" if kind == "prefix" else text.translate(str.maketrans("*?", "%_")))
+        (ck, _like(text) + "%" if kind == "prefix" else _like(text))
         for ck, _, _, kind, text, _ in cl_rows
         if kind in ("prefix", "wildcard")
     ]
@@ -685,6 +710,14 @@ def parse_simple_query(
     corpus scan minus the term — rejected loudly, the parse_query
     unbounded-scan discipline.
     """
+    return _simple_groups(s, default_operator, DEFAULT_CONF.token_split_re)
+
+
+def _simple_groups(
+    s: str, default_operator: str, split_re: str
+) -> list[list[tuple[str, bool]]]:
+    """parse_simple_query with atoms split like the index's tokens
+    (``split_re``, the conf's token_split_re)."""
     if default_operator not in ("or", "and"):
         raise ValueError(f"default_operator must be 'or' or 'and'")
     conn_default = default_operator
@@ -717,7 +750,7 @@ def parse_simple_query(
             neg = p.startswith("-")
             if neg:
                 p = p[1:]
-            words = _WORD_RE.findall(p)
+            words = _words(p, split_re)
             if not words:
                 continue
             for w in words:
@@ -732,12 +765,13 @@ def parse_simple_query(
     return groups
 
 
-def _sqs_clause_rows(queries, default_operator: str) -> list[tuple]:
+def _sqs_clause_rows(queries, default_operator: str, conf: IndexConf) -> list[tuple]:
     """(query_id, gid, term, neg) rows — the driver-side parse prologue
     (query-batch-sized, the search() pattern)."""
     rows: list[tuple] = []
     for qid, text in _query_rows(queries):
-        for gid, group in enumerate(parse_simple_query(text, default_operator)):
+        groups = _simple_groups(text, default_operator, conf.token_split_re)
+        for gid, group in enumerate(groups):
             for term, neg in group:
                 rows.append((int(qid), gid, term, bool(neg)))
     return rows
@@ -793,7 +827,7 @@ def simple_query_string_topk(
     terms' total df (negated atoms included — their postings are the veto
     evidence), never the corpus."""
     spark = docs.sparkSession
-    rows = _sqs_clause_rows(queries, default_operator)
+    rows = _sqs_clause_rows(queries, default_operator, conf)
     cl = spark.createDataFrame(
         rows, "query_id long, gid int, term string, neg boolean"
     )
@@ -826,7 +860,7 @@ def simple_query_string_topk_indexed(
     to the corpus path (same oracle)."""
     from igd_spark.querylang import _indexed_contrib
 
-    rows = _sqs_clause_rows(queries, default_operator)
+    rows = _sqs_clause_rows(queries, default_operator, idx.conf)
     cl = spark.createDataFrame(
         rows, "query_id long, gid int, term string, neg boolean"
     )

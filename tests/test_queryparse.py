@@ -407,3 +407,41 @@ def test_validate_query_verdicts(spark):
     a = validate_query(spark, qs[:2]).collect()
     b = validate_query(spark, pdf).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+def test_clause_words_split_like_the_index_tokens(spark, tmp_path):
+    """Clause words follow the conf's token_split_re, with the query
+    syntax characters still splitting them: on a [^a-z0-9_]+ index
+    `alpha_beta` is one term clause, so both evaluators return search()'s
+    rows; and a prefix clause's literal `_` is not a LIKE wildcard."""
+    from igd_spark import IndexConf, build_index, search
+    from igd_spark.queryparse import _clauses, parsed_bm25_topk_indexed
+
+    conf = IndexConf(block_size=8, n_shards=2, token_split_re=r"[^a-z0-9_]+")
+    assert _clauses('+alpha_beta~1 "beta_gamma x-y" al?ha_b*', conf.token_split_re) == [
+        Clause("must", "fuzzy", "alpha_beta", 1),
+        Clause("should", "phrase", "beta_gamma x y"),
+        Clause("should", "wildcard", "al?ha_b*"),
+    ]
+    texts = [
+        "alpha_beta gamma", "alpha beta", "alpha beta gamma", "beta_gamma alpha",
+        "alpha_beta alpha_beta delta", "gamma delta", "beta", "alpha_beta beta_gamma",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    idx = build_index(spark, docs, str(tmp_path / "re_idx"), conf=conf)
+    rows = [(0, "alpha_beta"), (1, "alpha_beta gamma"), (2, "beta_gamma delta")]
+
+    def key(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in df.collect()
+        )
+
+    want = key(search(spark, idx, rows, k=5))
+    assert len(want) == 12
+    assert key(parsed_bm25_topk(docs, rows, k=5, conf=conf)) == want
+    assert key(parsed_bm25_topk_indexed(spark, idx, rows, k=5)) == want
+
+    lit = spark.createDataFrame([(0, "alpha_x"), (1, "alphax")], "doc_id long, text string")
+    got = parsed_bm25_topk(lit, [(0, "alpha_*")], k=5, conf=conf).collect()
+    assert [r["doc_id"] for r in got] == [0]
