@@ -11,9 +11,17 @@ Pipeline (SURVEY §3.1 mapping), ONE shuffle total:
          B5/B6: Spark's shuffle IS igd_saveT's run spill;
          the partition sort IS the radix-sort finalize,
          src/igd_base.c:424-459]
-       → mapInPandas block packer over the sorted stream     [S7 sink]
+       → mapInArrow block packer over the sorted stream      [S7 sink]
        → block rows (delta+varint doc gaps, varint tfs/dls,
          per-block score upper bound)
+
+Build and compaction share ONE packer, as the reference finalizes every
+tile with one sort-and-write pass whether it was filled in one go or from
+spilled batches (igd_save, src/igd_base.c:424-459): every stage — the tf
+and positional builds and both compactions — is a mapInArrow kernel over
+one carry-over loop (`_groups`) feeding `_pack_blocks`. Compaction first
+decodes the blocks of its complete groups in one segmented pass, sorts
+them once, drops tombstones, then packs like a build.
 
 shard = (pmod(term_id, n_shards) + salt) % n_shards: a hot term's salted
 sub-lists land on *different* shards (true skew spreading, north_rule), yet
@@ -21,26 +29,24 @@ the probe set is computable from (term_id, n_salts) alone — no shuffle-time
 lookup. Cold terms (salt 0) keep shard = term_id % n_shards.
 
 Block-max metadata: each block stores ``ub_tf_dl`` = max over its postings of
-tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)). The query-time block max score is
-idf(term) * ub_tf_dl — computable without knowing df at pack time, so the
-build needs NO term-stats join in the hot path. This is the block-max WAND
-seed the reference's running-max-end ``maxE`` early-exit prefigures
-(src/igd_search.c:790-812).
+the BM25 saturation (scoring.bm25_saturation). The query-time block max
+score is idf(term) * ub_tf_dl — computable without knowing df at pack time,
+so the build needs NO term-stats join in the hot path. This is the
+block-max WAND seed the reference's running-max-end ``maxE`` early-exit
+prefigures (src/igd_search.c:790-812).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from igd_spark import codec
 from igd_spark.config import DEFAULT_CONF, IndexConf
-from igd_spark.session import init_worker
+from igd_spark.scoring import bm25_saturation
+from igd_spark.session import init_worker, kernel_parallelism, local_cores
 from igd_spark.stats import corpus_stats
 from igd_spark.tokenizer import postings_spimi
 
@@ -71,6 +77,28 @@ BLOCK_SCHEMA = T.StructType(
 )
 
 
+POS_BLOCK_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType(), False),
+        T.StructField("term_id", T.LongType(), False),
+        T.StructField("shard", T.IntegerType(), False),
+        T.StructField("salt", T.IntegerType(), False),
+        T.StructField("block_id", T.IntegerType(), False),
+        T.StructField("n", T.IntegerType(), False),
+        T.StructField("first_doc", T.LongType(), False),
+        T.StructField("last_doc", T.LongType(), False),
+        # per-OCCURRENCE doc ids (non-decreasing, repeats allowed) + the
+        # token position of each occurrence — the stored coordinate axis
+        # (gdata_t.start, src/igd_base.h:41-46) in token space
+        T.StructField("doc_ids", T.BinaryType(), False),
+        T.StructField("poss", T.BinaryType(), False),
+    ]
+)
+
+# the group key every block row of a (term, salt) list repeats
+_KEYS = ["term", "term_id", "shard", "salt"]
+
+
 def shard_col(term_id, salt, n_shards: int):
     """shard = (pmod(term_id, n) + salt) % n — salted sub-lists of a hot term
     spread to consecutive shards; probe set computable driver-side."""
@@ -96,9 +124,10 @@ def hot_terms(tstats: DataFrame, conf: IndexConf) -> DataFrame:
 
 
 def salted_postings(post: DataFrame, hot: DataFrame, conf: IndexConf) -> DataFrame:
-    """Add ``salt``: hot terms split into n_salts sub-lists by doc_id mod;
-    cold terms salt 0. Bounds every (term, salt) group — the memory-bound
-    SPIMI batch, maxCount analog (src/igd_base.h:37)."""
+    """Add ``salt`` to postings or positional occurrences: hot terms split
+    into n_salts sub-lists by doc_id mod; cold terms salt 0. Bounds every
+    (term, salt) group — the memory-bound SPIMI batch, maxCount analog
+    (src/igd_base.h:37)."""
     out = post.join(F.broadcast(hot), "term", "left")
     return out.withColumn(
         "salt",
@@ -125,37 +154,70 @@ def _int32_offsets(off: np.ndarray) -> bytes:
     return off.astype(np.int32).tobytes()
 
 
-def _pack_blocks(
-    complete,
-    gstarts: np.ndarray,
-    k1: float,
-    b: float,
-    bs: int,
-    avgdl: float,
-):
-    """Vectorized block packer: given a (term_id, salt, doc_id)-sorted Arrow
-    table slice and the start index of every (term_id, salt) group, emits
-    ALL block rows as ONE Arrow record batch — block boundaries via a
-    run-relative arange, block aggregates via np.{maximum,minimum}.reduceat,
-    and ONE whole-slice varint stream per column exposed as per-block
-    binary cells by building the Arrow binary column DIRECTLY over the
-    stream buffer with block-boundary offsets (zero per-block byte copies;
-    consecutive blocks are adjacent in the stream by construction).
-    Arrow-native end to end: the pandas round-trip this replaces
-    materialized every posting row — including 12M python string objects
-    for the term column per bench build — to hand numpy the same buffers
-    Arrow already held."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _group_starts(tb) -> np.ndarray:
+    """First row of every (term_id, salt) run of a sorted Arrow table."""
+    tid = tb.column("term_id").to_numpy()
+    salt = tb.column("salt").to_numpy()
+    cut = np.ones(tid.size, dtype=bool)
+    cut[1:] = (tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])
+    return np.flatnonzero(cut)
 
-    n = complete.num_rows
-    d = complete.column("doc_id").to_numpy()
-    t = complete.column("tf").to_numpy().astype(np.int64)
-    dl = complete.column("dl").to_numpy().astype(np.int64)
-    gsizes = np.diff(np.concatenate((gstarts, [n])))
+
+def _groups(batches, cols: list[str]):
+    """The carry-over loop of every pack kernel: consumes a partition's
+    (term_id, salt, …)-sorted Arrow batches and yields (table, group
+    starts) over COMPLETE (term_id, salt) groups only. Each batch's
+    trailing group is held back, as the next batch may continue it, and
+    flushed at the end — a kernel never holds more than one Arrow batch +
+    one term's sub-list in memory (the reference's bounded-batch ingest,
+    src/igd_create.c:50-88)."""
+    import pyarrow as pa
+
+    init_worker()
+    pending = None
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        tb = pa.Table.from_batches([rb]).select(cols)
+        cur = tb if pending is None else pa.concat_tables([pending, tb])
+        cur = cur.combine_chunks()
+        starts = _group_starts(cur)
+        last = int(starts[-1])
+        pending = cur.slice(last)
+        if last:
+            yield cur.slice(0, last), starts[:-1]
+    if pending is not None:
+        yield pending, _group_starts(pending)
+
+
+def _pack_blocks(
+    keys, gstarts: np.ndarray, d: np.ndarray, payload: dict, bs: int, bounds=None
+):
+    """THE block packer of build and compaction: postings sorted by
+    (group, doc_id) in, ALL their block rows out as ONE Arrow record batch.
+
+    ``keys``: an Arrow table of one (term, term_id, shard, salt) row per
+    group; ``gstarts``: each group's first posting; ``d``: int64 doc ids;
+    ``payload``: binary column name → integer array, stored as plain
+    varints (tfs + dls, or poss). ``bounds`` = (k1, b, avgdl) packs tf
+    postings — doc ids strictly increasing, plus the block-max columns
+    max_tf, min_dl, ub_tf_dl and b_avgdl (BLOCK_SCHEMA); None packs
+    occurrences, whose doc ids repeat per position (non-decreasing,
+    POS_BLOCK_SCHEMA).
+
+    Block boundaries come from a group-relative arange, block aggregates
+    from np.{maximum,minimum}.reduceat, and each binary column is built
+    DIRECTLY over one whole-batch varint stream with block-boundary offsets
+    (zero per-block byte copies; consecutive blocks are adjacent in the
+    stream by construction)."""
+    import pyarrow as pa
+
+    n = d.size
+    gsizes = np.diff(np.append(gstarts, n))
     rel = np.arange(n, dtype=np.int64) - np.repeat(gstarts, gsizes)
     bstarts = np.flatnonzero(rel % bs == 0)
-    bends = np.concatenate((bstarts[1:], [n]))
+    bends = np.append(bstarts[1:], n)
+    bnd = np.append(bstarts, n)
     # per-block delta encoding: raw doc id at each block start, gaps inside
     # (mod-2^64 uint64 gaps + a DIRECT id comparison, so full-range hashed
     # int64 doc ids with >2^63 gaps encode correctly — see codec)
@@ -163,126 +225,78 @@ def _pack_blocks(
     diffs = du.copy()
     diffs[1:] -= du[:-1]
     diffs[bstarts] = du[bstarts]
-    inblock = np.ones(n, dtype=bool)
-    inblock[bstarts] = False
-    mono = np.ones(n, dtype=bool)
-    mono[1:] = d[1:] > d[:-1]
-    if not mono[inblock].all():
-        raise ValueError("doc_ids must be strictly increasing within a block")
-    dstream, doff = codec.varint_encode_offsets(diffs)
-    tstream, toff = codec.varint_encode_offsets(t.astype(np.uint64))
-    lstream, loff = codec.varint_encode_offsets(dl.astype(np.uint64))
-    w = t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
-    bnd = np.append(bstarts, n)
+    ok = np.ones(n, dtype=bool)
+    ok[1:] = (d[1:] > d[:-1]) if bounds else (d[1:] >= d[:-1])
+    ok[bstarts] = True
+    if not ok.all():
+        raise ValueError(
+            "doc_ids must be strictly increasing within a block"
+            if bounds
+            else "occurrence doc_ids must be non-decreasing within a block"
+        )
 
-    def _bin(stream: bytes, off: np.ndarray) -> pa.Array:
+    def binary(values: np.ndarray) -> pa.Array:
         # binary column = (offsets at block boundaries, the shared stream):
         # blocks' byte ranges are adjacent, so the whole column is two
         # buffers and zero copies
+        stream, off = codec.varint_encode_offsets(values.astype(np.uint64))
         return pa.Array.from_buffers(
             pa.binary(),
             bstarts.size,
             [None, pa.py_buffer(_int32_offsets(off[bnd])), pa.py_buffer(stream)],
         )
 
-    arrs = [
-        pc.take(complete.column("term"), pa.array(bstarts)).combine_chunks(),
-        pa.array(complete.column("term_id").to_numpy()[bstarts], pa.int64()),
-        pa.array(complete.column("shard").to_numpy()[bstarts], pa.int32()),
-        pa.array(complete.column("salt").to_numpy()[bstarts], pa.int32()),
-        pa.array((rel[bstarts] // bs).astype(np.int32), pa.int32()),
-        pa.array((bends - bstarts).astype(np.int32), pa.int32()),
-        pa.array(d[bstarts], pa.int64()),
-        pa.array(d[bends - 1], pa.int64()),
-        _bin(dstream, doff),
-        _bin(tstream, toff),
-        _bin(lstream, loff),
-        pa.array(np.maximum.reduceat(t, bstarts).astype(np.int32), pa.int32()),
-        pa.array(np.minimum.reduceat(dl, bstarts).astype(np.int32), pa.int32()),
-        pa.array(np.maximum.reduceat(w, bstarts), pa.float64()),
-        pa.array(np.full(bstarts.size, float(avgdl)), pa.float64()),
-    ]
-    names = [f.name for f in BLOCK_SCHEMA.fields]
-    return pa.record_batch(arrs, names=names)
+    def i32(a: np.ndarray) -> pa.Array:
+        return pa.array(a.astype(np.int32), pa.int32())
+
+    # one key row per block: blocks per group = ceil(group size / bs)
+    k = keys.take(np.repeat(np.arange(gstarts.size), -(-gsizes // bs)))
+    cols = {
+        "term": k.column("term").combine_chunks(),
+        "term_id": pa.array(k.column("term_id").to_numpy(), pa.int64()),
+        "shard": i32(k.column("shard").to_numpy()),
+        "salt": i32(k.column("salt").to_numpy()),
+        "block_id": i32(rel[bstarts] // bs),
+        "n": i32(bends - bstarts),
+        "first_doc": pa.array(d[bstarts], pa.int64()),
+        "last_doc": pa.array(d[bends - 1], pa.int64()),
+        "doc_ids": binary(diffs),
+    }
+    cols.update((name, binary(v)) for name, v in payload.items())
+    schema = POS_BLOCK_SCHEMA
+    if bounds:
+        k1, b, avgdl = bounds
+        t, dl = payload["tfs"], payload["dls"]
+        cols["max_tf"] = i32(np.maximum.reduceat(t, bstarts))
+        cols["min_dl"] = i32(np.minimum.reduceat(dl, bstarts))
+        w = bm25_saturation(t, dl, avgdl, k1, b)
+        cols["ub_tf_dl"] = pa.array(np.maximum.reduceat(w, bstarts), pa.float64())
+        cols["b_avgdl"] = pa.array(np.full(bstarts.size, float(avgdl)), pa.float64())
+        schema = BLOCK_SCHEMA
+    names = [f.name for f in schema.fields]
+    return pa.record_batch([cols[c] for c in names], names=names)
 
 
-def _pack_stream_kernel(conf: IndexConf, avgdl: float):
-    """Partition-wide packer: consumes the (term_id, salt, doc_id)-sorted
-    posting stream in Arrow batches, emits block rows. Carries the trailing
-    (possibly incomplete) group across batch boundaries — the builder never
-    holds more than one Arrow batch + one term's sub-list in memory (the
-    reference's bounded-batch ingest, src/igd_create.c:50-88)."""
-    k1, b, bs = conf.k1, conf.b, conf.block_size
-    cols = ["term", "term_id", "shard", "salt", "doc_id", "tf", "dl"]
+def _build_kernel(conf: IndexConf, avgdl: float | None = None):
+    """Build pack kernel: the sorted posting stream (``avgdl`` given: tf,
+    dl → BLOCK_SCHEMA) or occurrence stream (None: pos →
+    POS_BLOCK_SCHEMA) → block rows."""
+    src = {"poss": "pos"} if avgdl is None else {"tfs": "tf", "dls": "dl"}
+    bounds = None if avgdl is None else (conf.k1, conf.b, avgdl)
 
-    def kernel(it):
-        import pyarrow as pa
-
-        init_worker()
-        pending = None
-        for rb in it:
-            if rb.num_rows == 0:
-                continue
-            tb = pa.Table.from_batches([rb]).select(cols)
-            cur = tb if pending is None else pa.concat_tables([pending, tb])
-            cur = cur.combine_chunks()
-            tid = cur.column("term_id").to_numpy()
-            salt = cur.column("salt").to_numpy()
-            # start index of the last (term_id, salt) group — held back as
-            # the next batch may continue it
-            change = np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            if change.size == 0:
-                pending = cur
-                continue
-            last_start = int(change[-1])
-            complete, pending = cur.slice(0, last_start), cur.slice(last_start)
-            gstarts = np.concatenate(([0], change[:-1])).astype(np.int64)
-            yield _pack_blocks(complete, gstarts, k1, b, bs, avgdl)
-        if pending is not None and pending.num_rows:
-            tid = pending.column("term_id").to_numpy()
-            salt = pending.column("salt").to_numpy()
-            change = np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            gstarts = np.concatenate(([0], change)).astype(np.int64)
-            yield _pack_blocks(pending.combine_chunks(), gstarts, k1, b, bs, avgdl)
+    def kernel(batches):
+        for tb, gstarts in _groups(batches, [*_KEYS, "doc_id", *src.values()]):
+            payload = {name: tb.column(c).to_numpy() for name, c in src.items()}
+            yield _pack_blocks(
+                tb.select(_KEYS).take(gstarts),
+                gstarts,
+                tb.column("doc_id").to_numpy(),
+                payload,
+                conf.block_size,
+                bounds,
+            )
 
     return kernel
-
-
-def build_segments(salted: DataFrame, conf: IndexConf, avgdl: float) -> DataFrame:
-    """Salted postings → block rows. THE one shuffle of the build: postings
-    repartition on shard, partition sort on (term_id, salt, doc_id) — Spark's
-    external sort plays the reference's per-tile radix sort
-    (src/igd_base.h:199-249) with spill handled by Tungsten."""
-    with_keys = salted.withColumn("term_id", F.xxhash64("term")).withColumn(
-        "shard", shard_col(F.col("term_id"), F.col("salt"), conf.n_shards)
-    )
-    # partition count for the pack stage: n_shards on a cluster; on a local
-    # master, min(n_shards, cores). The sort+pack stage is Tungsten-sort +
-    # varint-pack bound, not DRAM-copy bound like the decode/score kernels,
-    # so the kernel_parallelism DRAM-knee cap (10) that previously applied
-    # here UNDER-parallelized it: measured at 349k turns on local[32], the
-    # shuffle+sort alone runs 8.4 s at 10 partitions vs 4.6 s at 32, and
-    # the full segment stage 14.9 s vs 10.9 s. A (term_id, salt) group maps
-    # to exactly one shard, so hashing several shards into one partition
-    # keeps every group contiguous under the partition sort, and the
-    # partitionBy("shard") write still emits shard-pure files with intact
-    # term_id runs for row-group pruning. $IGD_PACK_PARTS overrides.
-    import os as _os
-
-    from igd_spark.session import local_cores
-
-    _cores = local_cores(salted.sparkSession)
-    n_parts = conf.n_shards if _cores is None else max(1, min(conf.n_shards, _cores))
-    n_parts = int(_os.environ.get("IGD_PACK_PARTS", n_parts))
-    stream = with_keys.repartition(n_parts, "shard").sortWithinPartitions(
-        "term_id", "salt", "doc_id"
-    )
-    packed = stream.mapInArrow(_pack_stream_kernel(conf, avgdl), schema=BLOCK_SCHEMA)
-    # block rows are tiny (~|postings|/block_size); order them so the
-    # partitioned write's required ordering on `shard` is satisfied by a
-    # sort that keeps (term_id, salt, block_id) runs intact for row-group
-    # min/max pruning at query time
-    return packed.sortWithinPartitions("shard", "term_id", "salt", "block_id")
 
 
 def _live_mask(d: np.ndarray, deleted: np.ndarray) -> np.ndarray:
@@ -294,89 +308,103 @@ def _live_mask(d: np.ndarray, deleted: np.ndarray) -> np.ndarray:
     return deleted[pos] != d
 
 
-def _repack_stream_kernel(conf: IndexConf, avgdl: float, deleted_bc=None):
-    """Compaction kernel: consumes EXISTING block rows sorted by
-    (term_id, salt, block_id), merges each (term, salt) list (base + append
-    deltas), re-sorts by doc_id, and re-packs fixed-size blocks with score
-    bounds under the CURRENT avgdl — the igd_save finalize pass
-    (src/igd_base.c:424-459) run as maintenance instead of initial build.
-    ``deleted_bc`` (broadcast sorted int64 doc ids) is the EXPUNGE path:
+def _repack_kernel(conf: IndexConf, avgdl: float | None = None, deleted=None):
+    """Compaction kernel: EXISTING block rows sorted by (term_id, salt,
+    block_id) → each (term, salt) list (base + append deltas) merged,
+    re-sorted and re-packed into fixed-size blocks (bounds under the
+    CURRENT ``avgdl``; None repacks positional blocks) — the igd_save
+    finalize pass (src/igd_base.c:424-459) run as maintenance instead of
+    initial build. All blocks of a batch's complete groups decode in one
+    segmented pass and sort in ONE lexsort by (group, doc_id[, pos]).
+    ``deleted`` (broadcast sorted int64 doc ids) is the EXPUNGE path:
     tombstoned postings are dropped between decode and re-pack (the Lucene
-    force-merge deleted-docs drop)."""
-    k1, b, bs = conf.k1, conf.b, conf.block_size
-    names = [f.name for f in BLOCK_SCHEMA.fields]
+    force-merge deleted-docs drop), and fully deleted lists emit nothing."""
+    payload = ("poss",) if avgdl is None else ("tfs", "dls")
+    bounds = None if avgdl is None else (conf.k1, conf.b, avgdl)
 
-    def repack_group(g: pd.DataFrame, rows: list) -> None:
-        n_arr = g["n"].to_numpy(dtype=np.int64)
-        vals = codec.varint_decode(b"".join(bytes(x) for x in g["doc_ids"])).astype(np.int64)
-        ends = np.cumsum(n_arr)
-        c = np.cumsum(vals)
-        seg_off = np.concatenate(([0], c[ends[:-1] - 1]))
-        d = c - np.repeat(seg_off, n_arr)
-        t = codec.varint_decode(b"".join(bytes(x) for x in g["tfs"])).astype(np.int64)
-        dl = codec.varint_decode(b"".join(bytes(x) for x in g["dls"])).astype(np.int64)
-        order = np.argsort(d, kind="stable")
-        d, t, dl = d[order], t[order], dl[order]
-        if deleted_bc is not None:
-            keep = _live_mask(d, deleted_bc.value)
-            d, t, dl = d[keep], t[keep], dl[keep]
-            if d.size == 0:  # fully-deleted list: emit nothing
-                return
-        w = t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
-        term = g["term"].iat[0]
-        tid = int(g["term_id"].iat[0])
-        shard = int(g["shard"].iat[0])
-        salt = int(g["salt"].iat[0])
-        for bi, lo in enumerate(range(0, d.size, bs)):
-            hi = min(lo + bs, d.size)
-            rows.append(
-                (
-                    term, tid, shard, salt, bi, int(hi - lo),
-                    int(d[lo]), int(d[hi - 1]),
-                    codec.encode_doc_ids(d[lo:hi]),
-                    codec.encode_tfs(t[lo:hi]),
-                    codec.encode_tfs(dl[lo:hi]),
-                    int(t[lo:hi].max()),
-                    int(dl[lo:hi].min()),
-                    float(w[lo:hi].max()),
-                    float(avgdl),
-                )
+    def kernel(batches):
+        for tb, gstarts in _groups(batches, [*_KEYS, "n", "doc_ids", *payload]):
+            n = tb.column("n").to_numpy().astype(np.int64)
+            d, *vals = codec.decode_blocks(
+                n, *(tb.column(c).to_pylist() for c in ("doc_ids", *payload))
+            )
+            vals = [v.astype(np.int64) for v in vals]
+            rows = np.diff(np.append(gstarts, tb.num_rows))
+            g = np.repeat(np.repeat(np.arange(gstarts.size), rows), n)
+            order = np.lexsort((d, g) if bounds else (vals[0], d, g))
+            if deleted is not None:
+                order = order[_live_mask(d[order], deleted.value)]
+                if order.size == 0:
+                    continue
+            d, g, vals = d[order], g[order], [v[order] for v in vals]
+            starts = np.flatnonzero(np.append(True, g[1:] != g[:-1]))
+            yield _pack_blocks(
+                tb.select(_KEYS).take(gstarts[g[starts]]),
+                starts,
+                d,
+                dict(zip(payload, vals)),
+                conf.block_size,
+                bounds,
             )
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        init_worker()
-        cols = ["term", "term_id", "shard", "salt", "block_id", "n",
-                "first_doc", "doc_ids", "tfs", "dls"]
-        pending: pd.DataFrame | None = None
-        for pdf in it:
-            if not len(pdf):
-                continue
-            cur = pdf[cols] if pending is None else pd.concat([pending, pdf[cols]])
-            tid = cur["term_id"].to_numpy()
-            salt = cur["salt"].to_numpy()
-            change = np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            if change.size == 0:
-                pending = cur
-                continue
-            last_start = int(change[-1])
-            complete, pending = cur.iloc[:last_start], cur.iloc[last_start:]
-            rows: list = []
-            bounds = [0, *change[:-1].tolist(), last_start]
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                repack_group(complete.iloc[lo:hi], rows)
-            if rows:
-                yield pd.DataFrame(rows, columns=names)
-        if pending is not None and len(pending):
-            rows = []
-            tid = pending["term_id"].to_numpy()
-            salt = pending["salt"].to_numpy()
-            change = np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            bounds = [0, *change.tolist(), len(pending)]
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                repack_group(pending.iloc[lo:hi], rows)
-            yield pd.DataFrame(rows, columns=names)
-
     return kernel
+
+
+def _keyed(salted: DataFrame, conf: IndexConf) -> DataFrame:
+    """Salted postings or occurrences + their term_id and shard."""
+    return salted.withColumn("term_id", F.xxhash64("term")).withColumn(
+        "shard", shard_col(F.col("term_id"), F.col("salt"), conf.n_shards)
+    )
+
+
+def _pack_stage(rows: DataFrame, n_parts: int, order: list[str], kernel, schema) -> DataFrame:
+    """THE one shuffle of every pack stage: rows repartition on shard and
+    sort on (term_id, salt, *order) — Spark's external sort plays the
+    reference's per-tile radix sort (src/igd_base.h:199-249) with spill
+    handled by Tungsten; a (term_id, salt) group maps to exactly one shard,
+    so several shards hashed into one partition keep every group
+    contiguous. Block rows are tiny (~|postings|/block_size); they are
+    ordered so the partitioned write's required ordering on `shard` is
+    satisfied by a sort that keeps (term_id, salt, block_id) runs intact
+    for row-group min/max pruning at query time."""
+    stream = rows.repartition(n_parts, "shard").sortWithinPartitions(
+        "term_id", "salt", *order
+    )
+    packed = stream.mapInArrow(kernel, schema=schema)
+    return packed.sortWithinPartitions("shard", "term_id", "salt", "block_id")
+
+
+def build_segments(salted: DataFrame, conf: IndexConf, avgdl: float) -> DataFrame:
+    """Salted postings → block rows, sorted by (term_id, salt, doc_id)."""
+    # partition count for the pack stage: n_shards on a cluster; on a local
+    # master, min(n_shards, cores). The sort+pack stage is Tungsten-sort +
+    # varint-pack bound, not DRAM-copy bound like the decode/score kernels,
+    # so the kernel_parallelism DRAM-knee cap (10) that previously applied
+    # here UNDER-parallelized it: measured at 349k turns on local[32], the
+    # shuffle+sort alone runs 8.4 s at 10 partitions vs 4.6 s at 32, and
+    # the full segment stage 14.9 s vs 10.9 s. The partitionBy("shard")
+    # write still emits shard-pure files with intact term_id runs.
+    cores = local_cores(salted.sparkSession)
+    n_parts = conf.n_shards if cores is None else max(1, min(conf.n_shards, cores))
+    return _pack_stage(
+        _keyed(salted, conf), n_parts, ["doc_id"], _build_kernel(conf, avgdl), BLOCK_SCHEMA
+    )
+
+
+def build_position_segments(
+    occ: DataFrame, hot: DataFrame, conf: IndexConf
+) -> DataFrame:
+    """Occurrence rows → positional block rows, same one-shuffle shape and
+    the SAME (term, salt, shard) geometry as the tf segments (salted by
+    salted_postings against the shared hot-term table), so shards_for()
+    pruning works identically for phrase queries."""
+    return _pack_stage(
+        _keyed(salted_postings(occ, hot, conf), conf),
+        kernel_parallelism(occ.sparkSession, conf.n_shards),
+        ["doc_id", "pos"],
+        _build_kernel(conf),
+        POS_BLOCK_SCHEMA,
+    )
 
 
 def repack_segments(
@@ -386,135 +414,13 @@ def repack_segments(
     (same one-shuffle shape as build_segments).  ``deleted``: optional
     broadcast of sorted deleted doc ids — expunges tombstoned postings
     during the repack (compact_index's force-merge path)."""
-    from igd_spark.session import kernel_parallelism
-
-    n_parts = kernel_parallelism(segments.sparkSession, conf.n_shards)
-    stream = segments.repartition(n_parts, "shard").sortWithinPartitions(
-        "term_id", "salt", "block_id"
+    return _pack_stage(
+        segments,
+        kernel_parallelism(segments.sparkSession, conf.n_shards),
+        ["block_id"],
+        _repack_kernel(conf, avgdl, deleted),
+        BLOCK_SCHEMA,
     )
-    packed = stream.mapInPandas(
-        _repack_stream_kernel(conf, avgdl, deleted_bc=deleted), schema=BLOCK_SCHEMA
-    )
-    return packed.sortWithinPartitions("shard", "term_id", "salt", "block_id")
-
-
-POS_BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("term_id", T.LongType(), False),
-        T.StructField("shard", T.IntegerType(), False),
-        T.StructField("salt", T.IntegerType(), False),
-        T.StructField("block_id", T.IntegerType(), False),
-        T.StructField("n", T.IntegerType(), False),
-        T.StructField("first_doc", T.LongType(), False),
-        T.StructField("last_doc", T.LongType(), False),
-        # per-OCCURRENCE doc ids (non-decreasing, repeats allowed) + the
-        # token position of each occurrence — the stored coordinate axis
-        # (gdata_t.start, src/igd_base.h:41-46) in token space
-        T.StructField("doc_ids", T.BinaryType(), False),
-        T.StructField("poss", T.BinaryType(), False),
-    ]
-)
-
-
-def _pack_positions_kernel(conf: IndexConf):
-    """Positional sibling of _pack_stream_kernel: consumes the
-    (term_id, salt, doc_id, pos)-sorted occurrence stream, emits
-    POS_BLOCK_SCHEMA rows of conf.block_size occurrences each. Shares the
-    carry-over discipline (one trailing group held across Arrow batches)."""
-    bs = conf.block_size
-    cols = ["term", "term_id", "shard", "salt", "doc_id", "pos"]
-
-    def pack_pos_blocks(complete: pd.DataFrame, gstarts: np.ndarray) -> pd.DataFrame:
-        # same vectorized shape as _pack_blocks, with the positional
-        # differences: occurrence doc ids are NON-decreasing (zero gaps
-        # legal — encode_occ_doc_ids semantics) and the payload is (pos)
-        n = len(complete)
-        d = complete["doc_id"].to_numpy(dtype=np.int64)
-        p = complete["pos"].to_numpy(dtype=np.int64)
-        gsizes = np.diff(np.concatenate((gstarts, [n])))
-        rel = np.arange(n, dtype=np.int64) - np.repeat(gstarts, gsizes)
-        bstarts = np.flatnonzero(rel % bs == 0)
-        bends = np.concatenate((bstarts[1:], [n]))
-        du = d.astype(np.uint64)
-        diffs = du.copy()
-        diffs[1:] -= du[:-1]
-        diffs[bstarts] = du[bstarts]
-        inblock = np.ones(n, dtype=bool)
-        inblock[bstarts] = False
-        mono = np.ones(n, dtype=bool)
-        mono[1:] = d[1:] >= d[:-1]
-        if not mono[inblock].all():
-            raise ValueError("occurrence doc_ids must be non-decreasing within a block")
-        dstream, doff = codec.varint_encode_offsets(diffs)
-        pstream, poff = codec.varint_encode_offsets(p.astype(np.uint64))
-        return pd.DataFrame(
-            {
-                "term": complete["term"].to_numpy()[bstarts],
-                "term_id": complete["term_id"].to_numpy(dtype=np.int64)[bstarts],
-                "shard": complete["shard"].to_numpy(dtype=np.int32)[bstarts],
-                "salt": complete["salt"].to_numpy(dtype=np.int32)[bstarts],
-                "block_id": (rel[bstarts] // bs).astype(np.int32),
-                "n": (bends - bstarts).astype(np.int32),
-                "first_doc": d[bstarts],
-                "last_doc": d[bends - 1],
-                "doc_ids": [dstream[s:e] for s, e in zip(doff[bstarts], doff[bends])],
-                "poss": [pstream[s:e] for s, e in zip(poff[bstarts], poff[bends])],
-            }
-        )
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        init_worker()
-        pending: pd.DataFrame | None = None
-        for pdf in it:
-            if not len(pdf):
-                continue
-            cur = pdf[cols] if pending is None else pd.concat([pending, pdf[cols]])
-            tid = cur["term_id"].to_numpy()
-            salt = cur["salt"].to_numpy()
-            change = np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            if change.size == 0:
-                pending = cur
-                continue
-            last_start = int(change[-1])
-            complete, pending = cur.iloc[:last_start], cur.iloc[last_start:]
-            gstarts = np.concatenate(([0], change[:-1])).astype(np.int64)
-            yield pack_pos_blocks(complete, gstarts)
-        if pending is not None and len(pending):
-            tid = pending["term_id"].to_numpy()
-            salt = pending["salt"].to_numpy()
-            change = np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            gstarts = np.concatenate(([0], change)).astype(np.int64)
-            yield pack_pos_blocks(pending, gstarts)
-
-    return kernel
-
-
-def build_position_segments(
-    occ: DataFrame, hot: DataFrame, conf: IndexConf
-) -> DataFrame:
-    """Occurrence rows → positional block rows, same one-shuffle shape and
-    the SAME (term, salt, shard) geometry as the tf segments: salt =
-    doc_id % n_salts against the shared hot-term table, so shards_for()
-    pruning works identically for phrase queries."""
-    from igd_spark.session import kernel_parallelism
-
-    salted = occ.join(F.broadcast(hot), "term", "left").withColumn(
-        "salt",
-        F.when(
-            F.col("n_salts").isNotNull(),
-            F.pmod(F.col("doc_id"), F.col("n_salts").cast("long")).cast("int"),
-        ).otherwise(F.lit(0)),
-    ).drop("n_salts")
-    with_keys = salted.withColumn("term_id", F.xxhash64("term")).withColumn(
-        "shard", shard_col(F.col("term_id"), F.col("salt"), conf.n_shards)
-    )
-    n_parts = kernel_parallelism(occ.sparkSession, conf.n_shards)
-    stream = with_keys.repartition(n_parts, "shard").sortWithinPartitions(
-        "term_id", "salt", "doc_id", "pos"
-    )
-    packed = stream.mapInPandas(_pack_positions_kernel(conf), schema=POS_BLOCK_SCHEMA)
-    return packed.sortWithinPartitions("shard", "term_id", "salt", "block_id")
 
 
 def repack_position_segments(
@@ -524,79 +430,13 @@ def repack_position_segments(
     (base + append deltas), re-sort occurrences by (doc_id, pos), re-pack
     fixed-size blocks.  ``deleted`` expunges tombstoned occurrences like
     `repack_segments`."""
-    from igd_spark.session import kernel_parallelism
-
-    bs = conf.block_size
-    names = [f.name for f in POS_BLOCK_SCHEMA.fields]
-
-    def repack_group(g: pd.DataFrame, rows: list) -> None:
-        n_arr = g["n"].to_numpy(dtype=np.int64)
-        vals = codec.varint_decode(b"".join(bytes(x) for x in g["doc_ids"])).astype(np.int64)
-        ends = np.cumsum(n_arr)
-        c = np.cumsum(vals)
-        seg_off = np.concatenate(([0], c[ends[:-1] - 1]))
-        d = c - np.repeat(seg_off, n_arr)
-        p = codec.varint_decode(b"".join(bytes(x) for x in g["poss"])).astype(np.int64)
-        order = np.lexsort((p, d))
-        d, p = d[order], p[order]
-        if deleted is not None:
-            keep = _live_mask(d, deleted.value)
-            d, p = d[keep], p[keep]
-            if d.size == 0:
-                return
-        term = g["term"].iat[0]
-        tid = int(g["term_id"].iat[0])
-        shard = int(g["shard"].iat[0])
-        salt = int(g["salt"].iat[0])
-        for bi, lo in enumerate(range(0, d.size, bs)):
-            hi = min(lo + bs, d.size)
-            rows.append(
-                (
-                    term, tid, shard, salt, bi, int(hi - lo),
-                    int(d[lo]), int(d[hi - 1]),
-                    codec.encode_occ_doc_ids(d[lo:hi]),
-                    codec.encode_tfs(p[lo:hi]),
-                )
-            )
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        init_worker()
-        cols = ["term", "term_id", "shard", "salt", "block_id", "n", "doc_ids", "poss"]
-        pending: pd.DataFrame | None = None
-        for pdf in it:
-            if not len(pdf):
-                continue
-            cur = pdf[cols] if pending is None else pd.concat([pending, pdf[cols]])
-            tid = cur["term_id"].to_numpy()
-            salt = cur["salt"].to_numpy()
-            change = np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            if change.size == 0:
-                pending = cur
-                continue
-            last_start = int(change[-1])
-            complete, pending = cur.iloc[:last_start], cur.iloc[last_start:]
-            rows: list = []
-            bounds = [0, *change[:-1].tolist(), last_start]
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                repack_group(complete.iloc[lo:hi], rows)
-            if rows:
-                yield pd.DataFrame(rows, columns=names)
-        if pending is not None and len(pending):
-            rows = []
-            tid = pending["term_id"].to_numpy()
-            salt = pending["salt"].to_numpy()
-            change = np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            bounds = [0, *change.tolist(), len(pending)]
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                repack_group(pending.iloc[lo:hi], rows)
-            yield pd.DataFrame(rows, columns=names)
-
-    n_parts = kernel_parallelism(positions.sparkSession, conf.n_shards)
-    stream = positions.repartition(n_parts, "shard").sortWithinPartitions(
-        "term_id", "salt", "block_id"
+    return _pack_stage(
+        positions,
+        kernel_parallelism(positions.sparkSession, conf.n_shards),
+        ["block_id"],
+        _repack_kernel(conf, deleted=deleted),
+        POS_BLOCK_SCHEMA,
     )
-    packed = stream.mapInPandas(kernel, schema=POS_BLOCK_SCHEMA)
-    return packed.sortWithinPartitions("shard", "term_id", "salt", "block_id")
 
 
 def build_all(

@@ -8,7 +8,9 @@ one Parquet row holding delta+varint-compressed doc_id gaps and varint tfs
 no per-value Python.
 
 Encoding: doc_ids must be strictly increasing within a block; stored as
-[first, gap1, gap2, ...] varints. tfs stored as plain varints.
+[first, gap1, gap2, ...] varints. tfs stored as plain varints. Positional
+blocks store one doc id per occurrence the same way (non-decreasing, so a
+gap may be zero) beside plain-varint positions.
 """
 
 from __future__ import annotations
@@ -98,13 +100,12 @@ def varint_decode(buf: bytes) -> np.ndarray:
     return out
 
 
-def decode_blocks(
-    n: np.ndarray, doc_ids, tfs, dls
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Segmented decode of posting-block rows: per-block posting counts
-    ``n`` and per-block varint buffers (sequences of bytes-likes) in, the
-    blocks' flat (doc_id int64, tf float64, dl float64) arrays out, in row
-    order. tf and dl come back as float64, the dtype BM25 scores them in.
+def decode_blocks(n: np.ndarray, doc_ids, *payload) -> tuple:
+    """Segmented decode of block rows: per-block counts ``n`` and per-block
+    varint buffers (sequences of bytes-likes) in, the blocks' flat doc_id
+    int64 array and one flat float64 array per ``payload`` column (tfs, dls
+    or poss) out, in row order — float64 is the dtype BM25 scores tf and dl
+    in, and exact for every int32 column value.
 
     ONE varint pass per column over the concatenated buffers: every
     block's first doc varint is absolute and the rest are gaps, so a
@@ -117,9 +118,7 @@ def decode_blocks(
     c = np.cumsum(varint_decode(b"".join(doc_ids)).astype(np.int64))
     cpad = np.concatenate(([0], c))
     d = c - np.repeat(cpad[np.cumsum(n) - n], n)
-    tf = varint_decode(b"".join(tfs)).astype(np.float64)
-    dl = varint_decode(b"".join(dls)).astype(np.float64)
-    return d, tf, dl
+    return (d, *(varint_decode(b"".join(p)).astype(np.float64) for p in payload))
 
 
 def encode_doc_ids(doc_ids: np.ndarray) -> bytes:
@@ -143,21 +142,6 @@ def decode_doc_ids(buf: bytes) -> np.ndarray:
     if deltas.size == 0:
         return np.empty(0, dtype=np.int64)
     return np.cumsum(deltas.astype(np.int64))
-
-
-def encode_occ_doc_ids(doc_ids: np.ndarray) -> bytes:
-    """NON-DECREASING int64 doc ids (one per occurrence — repeats mark a
-    doc's multiple occurrences) → delta varints [first, gaps...]. The
-    positional-block sibling of encode_doc_ids; zero gaps are legal."""
-    d = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    if d.size == 0:
-        return b""
-    if d.size > 1 and not (d[1:] >= d[:-1]).all():  # direct, overflow-safe
-        raise ValueError("occurrence doc_ids must be non-decreasing within a block")
-    du = d.astype(np.uint64)
-    deltas = du.copy()
-    deltas[1:] -= du[:-1]  # mod-2^64 gaps; decode's wrapping cumsum inverts
-    return varint_encode(deltas)
 
 
 def encode_tfs(tfs: np.ndarray) -> bytes:

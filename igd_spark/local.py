@@ -57,7 +57,7 @@ import pandas as pd
 from igd_spark import codec
 from igd_spark.build import shards_for
 from igd_spark.rowgroups import RowGroupStore
-from igd_spark.scoring import NUMPY_OPS, index_sim_stats, similarity
+from igd_spark.scoring import NUMPY_OPS, bm25_saturation, index_sim_stats, similarity
 
 _EMPTY_BATCH = pd.DataFrame(
     {
@@ -174,8 +174,12 @@ class LocalSearcher:
         from igd_spark.session import tune_allocator
 
         tune_allocator()  # decode temporaries stay heap-resident (see session.py)
-        self.idx = idx
+        # what the searcher reads of the handle, never the handle itself:
+        # the handle holds this searcher (local_searcher), so a back
+        # reference would keep a dropped handle's caches alive until the
+        # cyclic GC runs
         self.path = idx.path
+        self.meta = idx.meta
         self.conf = idx.conf
         self.n_docs = idx.n_docs
         self.avgdl = idx.avgdl
@@ -391,9 +395,8 @@ class LocalSearcher:
     def _bm25(self, tf, dl, df):
         """BM25 contribution of one term's postings (the ONE driver copy of
         scoring.bm25_weight_col × idf_col)."""
-        k1, b = self.conf.k1, self.conf.b
-        return _bm25_idf(self.n_docs, df) * (
-            tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / self.avgdl))
+        return _bm25_idf(self.n_docs, df) * bm25_saturation(
+            tf, dl, self.avgdl, self.conf.k1, self.conf.b
         )
 
     def sim_weigher(self, model: str, lam: float):
@@ -415,7 +418,7 @@ class LocalSearcher:
         bound, so the full match map is scored (that is exactly what the
         admission budget priced)."""
         weight = similarity(model, lam, driver=True).weight
-        st = index_sim_stats(self.idx, model)
+        st = index_sim_stats(self.meta, self.conf, model)
 
         def weigh(tf, dl, _df):
             # DFI's where() takes the log of entries it then masks out

@@ -714,7 +714,7 @@ def _sim_index_hits(spark, idx, queries, model: str) -> tuple[DataFrame, SimStat
     blocks (zero corpus joins), stats from the frozen corpus metadata."""
     from igd_spark.search import match_enumerate
 
-    st = index_sim_stats(idx, model)
+    st = index_sim_stats(idx.meta, idx.conf, model)
     hits = match_enumerate(spark, idx, queries, with_dl=True).select(
         "query_id", "term", "doc_id", "tf", "dl"
     )

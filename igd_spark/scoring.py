@@ -180,6 +180,14 @@ def _ax_f2log(o, tf, dl, df, cf, st, p):
     return _ax_tf(tf, dl, st) * o.log(float(st.n_docs + 1) / df)
 
 
+def bm25_saturation(tf, dl, avgdl, k1, b):
+    """BM25's per-posting weight before idf, tf·(k1+1)/(tf + k1·(1−b+b·dl/
+    avgdl)), in numpy: the one copy behind the packer's stored block bounds,
+    the MaxScore kernel's loose bounds and weights and the driver kernel's
+    weights, so a stored bound and a scored weight round identically."""
+    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
 def _bm25_tfn(tf, dl, st):
     """tf/(1−b+b·dl/avgdl): the length-normalized tf that the classic BM25
     denominator factors out."""
@@ -261,13 +269,13 @@ def variant_model(family: str, variant: str) -> str:
     return f"{family}_{variant}"
 
 
-def index_sim_stats(idx, model: str) -> SimStats:
-    """A persisted index's `SimStats` (its frozen corpus metadata and
-    conf) — the one source of both engines' index-side statistics."""
-    c = idx.meta["corpus"]
+def index_sim_stats(meta: dict, conf, model: str) -> SimStats:
+    """A persisted index's `SimStats` from its frozen metadata and its
+    conf — the one source of both engines' index-side statistics."""
+    c = meta["corpus"]
     st = SimStats(
         int(c["n_docs"]), float(c["avgdl"]), int(c.get("sum_dl", 0)),
-        idx.conf.k1, idx.conf.b,
+        conf.k1, conf.b,
     )
     if SIMILARITIES[model].sum_dl and st.sum_dl <= 0:
         raise ValueError(

@@ -32,7 +32,7 @@ from igd_spark import codec
 from igd_spark.config import DEFAULT_CONF, IndexConf
 from igd_spark.index import InvertedIndex
 from igd_spark.local import _bm25_idf, _tokenize_ordered, local_searcher
-from igd_spark.scoring import bm25_weight_col, idf_col
+from igd_spark.scoring import bm25_saturation, bm25_weight_col, idf_col
 from igd_spark.stats import corpus_stats, doc_stats, term_stats
 from igd_spark.tokenizer import postings, tokens_col
 
@@ -253,7 +253,7 @@ def _bucket(pdf: pd.DataFrame, k1: float, b: float, avgdl: float) -> _Bucket:
     if not stored_ok.all():
         mt = col("max_tf", np.float64)
         md = col("min_dl", np.float64)
-        loose = mt * (k1 + 1.0) / (mt + k1 * (1.0 - b + b * md / avgdl))
+        loose = bm25_saturation(mt, md, avgdl, k1, b)
         ub = np.where(stored_ok, ub, loose)
     npost = np.add.reduceat(n, lo).tolist()
     lo_l, hi_l = lo.tolist(), hi.tolist()
@@ -362,7 +362,7 @@ def _maxscore_kernel(
             d, tf, dl = d[m], tf[m], dl[m]
         else:
             lens = n_arr
-        w = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        w = bm25_saturation(tf, dl, avgdl, k1, b)
         _stats["blocks_decoded"] += n_arr.size
         return d, w, lens
 

@@ -189,3 +189,22 @@ def test_handle_snapshot_across_append_compact_and_delete(spark, docs, tmp_path)
     got = _key(search(spark, h2, BATCH, k=10))
     assert got == _key(search(spark, h2, BATCH, k=10, engine="spark"))
     assert got and not {r[2] for r in got} & set(dead)
+
+
+def test_dropped_handle_frees_its_searcher_without_cyclic_gc(spark, idx):
+    """The handle holds its LocalSearcher, and the searcher keeps only the
+    handle's metadata and conf, not the handle: dropping the handle frees
+    the searcher's list LRU and resident row groups by reference counting
+    alone, without waiting for the cyclic GC."""
+    import gc
+    import weakref
+
+    h = open_index(spark, idx.path)
+    assert _key(search(spark, h, BATCH, k=10, engine="driver"))
+    ref = weakref.ref(local_searcher(h))
+    gc.disable()
+    try:
+        del h
+        assert ref() is None
+    finally:
+        gc.enable()
